@@ -738,7 +738,7 @@ object ProbeSoak {
       // extended to ≥32× with per-batch cost-flatness gates. Method:
       // bootstrap the standing state from the x{s} soak corpus (one
       // advance), then TIME one fixed-size arrival batch (500 rows)
-      // absorbed under the production "upsertlog" spelling. The
+      // absorbed as a delta segment (snapshot cadence 1000). The
       // declared per-batch cost model is a fixed scheduler floor plus
       // terms LINEAR in the standing size (the |old|·|new| serve pass;
       // the batch-band × standing-band candidate join) — so the gate
@@ -749,15 +749,8 @@ object ProbeSoak {
       // straight through it. The graph-completeness invariant
       // (|edges| == n·min(k,n−1)) is re-checked AFTER the advance —
       // the r15 preverifiedEdges fast path must stay sound at scale.
-      import graft.streaming.{CorpusPipeline, GraphStream}
+      import graft.streaming.{CorpusPipeline, GraphStream, VersionedState}
       import org.apache.spark.sql.expressions.Window
-      def rmAll(path: String): Unit = {
-        def rec(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rec)
-          f.delete(): Unit
-        }
-        rec(new java.io.File(path))
-      }
       val batchRows = 500
       var graphT = Map.empty[Int, Double]
       var corpusT = Map.empty[Int, Double]
@@ -782,8 +775,7 @@ object ProbeSoak {
         // ---- maintained kNN-graph drain --------------------------------
         val groot = java.nio.file.Files.createTempDirectory("graft_soak_g").toString
         val g = new GraphStream.MaintainedGraph(spark, groot, 5,
-          idCol = "vec_id", vecCol = "embedding",
-          stateFormat = "upsertlog", compactEvery = 1000)
+          idCol = "vec_id", vecCol = "embedding", compactEvery = 1000)
         g.advance(0L, standing): Unit
         val g0 = System.nanoTime()
         g.advance(1L, arriving): Unit
@@ -793,7 +785,7 @@ object ProbeSoak {
         require(gEdges == nAll * math.min(5L, nAll - 1),
           s"maintained graph incomplete after the soak advance at x$s: " +
             s"$gEdges edges for $nAll vectors")
-        rmAll(groot)
+        VersionedState.deleteRecursively(groot)
         graphT += s -> (g1 - g0) / 1e9
 
         // ---- continuous-corpus drain -----------------------------------
@@ -813,7 +805,7 @@ object ProbeSoak {
         val nOldC = standingC.count()
         val croot = java.nio.file.Files.createTempDirectory("graft_soak_c").toString
         val mc = new CorpusPipeline.MaintainedCorpus(spark, croot, 5,
-          stateFormat = "upsertlog", compactEvery = 1000)
+          compactEvery = 1000)
         mc.advance(0L, standingC): Unit
         val c0 = System.nanoTime()
         mc.advance(1L, arrivingC): Unit
@@ -823,7 +815,7 @@ object ProbeSoak {
         require(cEdges == keptN * math.min(5L, keptN - 1),
           s"corpus-pipeline graph incomplete after the soak advance at " +
             s"x$s: $cEdges edges for $keptN kept docs")
-        rmAll(croot)
+        VersionedState.deleteRecursively(croot)
         corpusT += s -> (c1 - c0) / 1e9
         println(f"[soak-maintained] x$s%-3d standing=$nOld%8d " +
           f"graphAdvance=${graphT(s)}%6.2fs corpusAdvance=${corpusT(s)}%6.2fs " +
@@ -850,16 +842,17 @@ object ProbeSoak {
       spark.stop(); return
     }
     if (mode == "logio") {
-      // WRITE-VOLUME soak for the upsert-log state spelling (r11,
-      // VERDICT r10 #4): the production claim is "O(|changed|) write
-      // I/O per batch" (GraphStream.scala header) vs the snapshot
-      // spelling's O(n) full write. MEASURE it: same FIXED-size arrival
-      // batches absorbed into a standing graph under both spellings,
+      // WRITE-VOLUME soak for the delta segments (r11, VERDICT r10 #4):
+      // the production claim is "O(|changed|) write I/O per batch"
+      // (GraphStream.scala header) vs a snapshot's O(n) full write.
+      // MEASURE it: same FIXED-size arrival batches absorbed into a
+      // standing graph at snapshot cadence 1 (every version a snapshot)
+      // and at cadence nBatches (deltas between two snapshots),
       // bytes written per batch = new files under the state dir after
       // each advance (files, not net dir size — retention deletes must
       // not offset writes). Gates:
       //  (a) within a scale, every non-compaction log batch writes
-      //      ≤ 25% of the snapshot spelling's same-batch bytes;
+      //      ≤ 25% of the cadence-1 same-batch bytes;
       //  (b) across scales (run with 2+ scales, e.g. 48 96), the
       //      snapshot per-batch bytes grow with the corpus (≥ 1.5× at
       //      2× n) while the log per-batch bytes stay flat (≤ 1.5×) —
@@ -868,7 +861,7 @@ object ProbeSoak {
       // The compaction batch (every compactEvery-th) deliberately pays
       // a full snapshot — printed, excluded from (a)/(b), its bound is
       // replay length not write volume.
-      import graft.streaming.GraphStream
+      import graft.streaming.{GraphStream, VersionedState}
       val batchRows = 500
       val nBatches = 4
       def filesUnder(root: java.io.File): Map[String, Long] = {
@@ -892,11 +885,11 @@ object ProbeSoak {
         val n = boot.count()
         val batches = holdout.sorted.grouped(batchRows).toSeq.map(ids =>
           e.filter(col("vec_id").isInCollection(ids)).localCheckpoint(true))
-        val written = Seq("snapshot", "upsertlog").map { fmt =>
+        val written = Seq(1, nBatches).map { every =>
           val state = java.nio.file.Files
-            .createTempDirectory(s"graft_logio_$fmt").toString
+            .createTempDirectory(s"graft_logio_c$every").toString
           val g = new GraphStream.MaintainedGraph(spark, state, k = 5,
-            stateFormat = fmt, compactEvery = nBatches)
+            compactEvery = every)
           g.advance(1L, boot)
           var seen = filesUnder(new java.io.File(state))
           val perBatch = batches.zipWithIndex.map { case (b, i) =>
@@ -906,15 +899,10 @@ object ProbeSoak {
             seen = now
             w
           }
-          def rmRec(f: java.io.File): Unit = {
-            if (f.isDirectory)
-              Option(f.listFiles()).getOrElse(Array.empty).foreach(rmRec)
-            f.delete(): Unit
-          }
-          rmRec(new java.io.File(state))
-          fmt -> perBatch
+          VersionedState.deleteRecursively(state)
+          every -> perBatch
         }.toMap
-        val snap = written("snapshot"); val log = written("upsertlog")
+        val snap = written(1); val log = written(nBatches)
         // compaction lands on the LAST batch (bootstrap snapshot at v=1,
         // deltas at v=2..compactEvery, snapshot again at v=1+compactEvery)
         val logDelta = log.dropRight(1); val snapDelta = snap.dropRight(1)

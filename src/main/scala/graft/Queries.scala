@@ -1686,25 +1686,24 @@ object Queries {
     (s, d) => streaming.GraphStream.knnGraphOverFile(s, d, k = 5),
     Some(knnGraphSql))
 
-  /** The PRODUCTION state spelling of the maintained graph under the
-    * SAME full oracle (VERDICT r9 #7): every non-compaction commit
-    * persists a per-version DELTA segment (corpus inserts/deletes +
-    * full new neighbor lists of CHANGED queries + eviction
-    * tombstones) instead of the O(n) snapshot, with a full snapshot
-    * landing every `compactEvery` versions to bound replay length —
-    * write I/O per batch drops from O(corpus) to O(|changed|), the
-    * term that dominates a long-running maintained index. Recovery
-    * replays segments forward from the newest committed snapshot
-    * behind the same atomic POINTER contract, and the drained end
-    * state is BIT-IDENTICAL to the snapshot spelling (StreamingSpec
+  /** The maintained graph at snapshot cadence 3 under the SAME full
+    * oracle (VERDICT r9 #7): between snapshots every commit persists a
+    * per-version DELTA segment (corpus inserts/deletes + full new
+    * neighbor lists of CHANGED queries + eviction tombstones) instead
+    * of the O(n) snapshot, with a full snapshot every 3 versions to
+    * bound replay length — write I/O per batch drops from O(corpus) to
+    * O(|changed|), the term that dominates a long-running maintained
+    * index. Recovery replays segments forward from the newest
+    * committed snapshot behind the same atomic POINTER contract, and
+    * the drained end state is BIT-IDENTICAL to cadence 1 (StreamingSpec
     * gates parity, kill/restart, and the post-compaction window), so
     * the batch `q_knn_graph` oracle applies verbatim. With 4 slices
-    * and compactEvery=3 this run exercises boot-snapshot, two log
-    * segments and one compaction. */
+    * this run exercises boot-snapshot, two delta segments and one
+    * compaction. */
   private val qKnnGraphStreamLog = Q(
     "q_knn_graph_stream_log",
     (s, d) => streaming.GraphStream.knnGraphOverFile(s, d, k = 5,
-      stateFormat = "upsertlog", compactEvery = 3),
+      compactEvery = 3),
     Some(knnGraphSql))
 
   /** The CONTINUOUS-CORPUS flagship — the streaming twin of the
@@ -1748,27 +1747,27 @@ object Queries {
            | FROM c) WHERE rn <= $k ORDER BY query_id, neighbor_id""".stripMargin))
   }
 
-  /** The continuous-corpus flagship under the PRODUCTION state
-    * spelling (the r9 VERDICT's last lifecycle task closed on both
-    * maintained operators): corpus AND embedded graph persist
+  /** The continuous-corpus flagship at snapshot cadence 3 (the r9
+    * VERDICT's last lifecycle task closed on both maintained
+    * operators): between snapshots, corpus AND embedded graph persist
     * per-batch DELTA segments — the batch's docs, its new pairs and
     * the kept-set diff, all frames the advance algebra already
     * computes, so the segment costs zero extra compute and O(|batch|)
-    * write VOLUME replaces the per-batch O(corpus) snapshot —
-    * compacting to a full snapshot every 3 versions behind the same
-    * atomic POINTER contract. (At bench scale wall time is a wash:
-    * tiny-state jobs are scheduler-bound, and a segment is more
-    * writes than a snapshot; the byte claim is what matters at
-    * production batch sizes, and StreamingSpec pins it structurally —
-    * unchanged state is never rewritten.) Recovery replays segments forward from the newest
-    * snapshot (StreamingSpec crosses kill/restart, the retention
-    * window and compaction); the drained end state is bit-identical
-    * to the snapshot spelling, so the same chained three-stage DuckDB
-    * oracle applies verbatim. */
+    * write VOLUME replaces the per-batch O(corpus) snapshot — with a
+    * full snapshot every 3 versions behind the same atomic POINTER
+    * contract. (At bench scale wall time is a wash: tiny-state jobs
+    * are scheduler-bound, and a segment is more writes than a
+    * snapshot; the byte claim is what matters at production batch
+    * sizes, and StreamingSpec pins it structurally — unchanged state
+    * is never rewritten.) Recovery replays segments forward from the
+    * newest snapshot (StreamingSpec crosses kill/restart, the
+    * retention window and compaction); the drained end state is
+    * bit-identical to cadence 1, so the same chained three-stage
+    * DuckDB oracle applies verbatim. */
   private val qContinuousCorpusLog = Q(
     "q_continuous_corpus_log",
     (s, d) => streaming.CorpusPipeline.continuousOverFile(s, d, k = 5,
-      stateFormat = "upsertlog", compactEvery = 3),
+      compactEvery = 3),
     qContinuousCorpus.oracle)
 
   /** The SCALE path for `q_knn_graph` (rows-only): IVF multi-probe

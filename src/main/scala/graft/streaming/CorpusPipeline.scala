@@ -35,9 +35,11 @@ import graft.operators.Dedup
   * and the graph never re-pays old×old (the `knnGraphIncremental`
   * contract). The per-batch O(n) terms — re-shingling the corpus for
   * verification sets and the state snapshots — are scan-side and
-  * write-side respectively, the same simplest-correct snapshot
-  * posture as `GraphStream` (production persists banded keys and
-  * shingle sets bucketed; the pair/graph algebra is unchanged).
+  * write-side respectively; a snapshot cadence `compactEvery` above 1
+  * (the same for the embedded graph) turns the writes between
+  * snapshots into per-batch delta segments (production persists
+  * banded keys and shingle sets bucketed; the pair/graph algebra is
+  * unchanged).
   * No bucket cap and no stop-shingle df filter in this twin: both are
   * corpus-frequency-dependent and therefore arrival-order-dependent —
   * the capped/filtered forms stay the batch production path with
@@ -56,18 +58,15 @@ object CorpusPipeline {
                                numHashes: Int = 16, bands: Int = 8,
                                threshold: Double = 0.1,
                                shingleK: Int = 3,
-                               stateFormat: String = "snapshot",
-                               compactEvery: Int = 4) {
-    require(stateFormat == "snapshot" || stateFormat == "upsertlog",
-      s"MaintainedCorpus: unknown stateFormat '$stateFormat'")
-    require(compactEvery >= 2, s"compactEvery=$compactEvery must be >= 2")
-    new java.io.File(stateDir).mkdirs()
-    // the embedded graph adopts the same state spelling — one format
+                               compactEvery: Int = 1) {
+    private val state = new VersionedState(stateDir, "MaintainedCorpus",
+      Seq("docs", "pairs", "kept"), compactEvery)
+    // the embedded graph keeps the same snapshot cadence — one
     // decision for the whole pipeline's persistence
     val graph = new GraphStream.MaintainedGraph(
       spark, s"$stateDir/graph", k, idCol = "doc_id", vecCol = "embedding",
-      stateFormat = stateFormat, compactEvery = compactEvery)
-    @volatile private var cur: (Int, Long) = readPointer().getOrElse((0, -1L))
+      compactEvery = compactEvery)
+    @volatile private var cur: (Int, Long) = state.readPointer().getOrElse((0, -1L))
     // committed state stays HOT (localCheckpoint blocks); parquet
     // snapshots are the recovery path only — same posture and same
     // rationale as `MaintainedGraph.hot`
@@ -115,53 +114,41 @@ object CorpusPipeline {
 
     /** The committed (docs, pairs, kept) frames at the current
       * version — hot blocks if this process committed them. A
-      * RECOVERED process reads the parquet snapshot ONCE and
-      * `localCheckpoint`s it into hot blocks BEFORE anything downstream
-      * builds on it: `advance` chains `unionByName` on these frames and
-      * the retention loop deletes `v=newV-2`, so a LAZY read of the
-      * recovered `v=N` would still be referenced by the hot chain two
-      * commits after a restart — the snapshot write of `v=N+3` would
-      * then scan a deleted directory and die (the recovery lineage bug
-      * the r9 kill/restart test exposed). Same posture as the
-      * `hotDerived` recovery branch and `MaintainedGraph.commit`, which
-      * cut lineage eagerly for the same reason. */
+      * RECOVERED process reconstructs them from disk ONCE and
+      * `localCheckpoint`s them into hot blocks BEFORE anything
+      * downstream builds on them: `advance` chains `unionByName` on
+      * these frames and retention deletes the files they came from, so
+      * a LAZY read of the recovered `v=N` would still be referenced by
+      * the hot chain after retention passes it — the snapshot write of
+      * `v=N+3` would then scan a deleted directory and die (the
+      * recovery lineage bug the r9 kill/restart test exposed). Same
+      * posture as the `hotDerived` recovery branch and
+      * `MaintainedGraph.commit`, which cut lineage eagerly for the
+      * same reason. */
     private def hotState: (DataFrame, DataFrame, DataFrame) = synchronized {
       require(version > 0, "MaintainedCorpus: no committed version yet")
       hot match {
         case Some((v, d, p, kp)) if v == version => (d, p, kp)
         case _ =>
-          val (d, p, kp) =
-            if (stateFormat == "snapshot")
-              (spark.read.parquet(s"$stateDir/docs/v=$version").localCheckpoint(),
-               spark.read.parquet(s"$stateDir/pairs/v=$version").localCheckpoint(),
-               spark.read.parquet(s"$stateDir/kept/v=$version").localCheckpoint())
-            else reconstruct(version)
+          val (d, p, kp) = reconstruct(version)
           hot = Some((version, d, p, kp))
           (d, p, kp)
       }
     }
 
-    /** Snapshot versions present on disk (the `docs/v=N` dirs). */
-    private def snapshotVersions(): Seq[Int] =
-      Option(new java.io.File(s"$stateDir/docs").listFiles())
-        .getOrElse(Array.empty).toSeq
-        .flatMap(f => scala.util.Try(f.getName.stripPrefix("v=").toInt).toOption)
-
-    /** Upsert-log recovery: newest snapshot at-or-below `v`, then replay
-      * segments in version order — docs and pairs are APPEND-only (the
-      * corpus store's invariant, so a segment is just the batch's rows
-      * and its new pairs); the kept set applies its per-batch diff
-      * (evictions out, fresh keepers in). One lineage cut at the end. */
+    /** Recovery: the newest snapshot at or below `v`, then its
+      * segments in version order (none at cadence 1) — docs and pairs
+      * are APPEND-only (the corpus store's invariant, so a segment is
+      * just the batch's rows and its new pairs); the kept set applies
+      * its per-batch diff (evictions out, fresh keepers in). One
+      * lineage cut at the end. */
     private def reconstruct(v: Int): (DataFrame, DataFrame, DataFrame) = {
-      val snaps = snapshotVersions().filter(_ <= v)
-      require(snaps.nonEmpty,
-        s"MaintainedCorpus: no snapshot at or below v=$v under $stateDir")
-      val s0 = snaps.max
-      var d = spark.read.parquet(s"$stateDir/docs/v=$s0")
-      var p = spark.read.parquet(s"$stateDir/pairs/v=$s0")
-      var kp = spark.read.parquet(s"$stateDir/kept/v=$s0")
+      val s0 = state.baseSnapshot(v)
+      var d = spark.read.parquet(state.snapshotDir("docs", s0))
+      var p = spark.read.parquet(state.snapshotDir("pairs", s0))
+      var kp = spark.read.parquet(state.snapshotDir("kept", s0))
       ((s0 + 1) to v).foreach { lv =>
-        val seg = s"$stateDir/log/v=$lv"
+        val seg = state.segmentDir(lv)
         d = d.unionByName(spark.read.parquet(s"$seg/dins"))
         p = p.unionByName(spark.read.parquet(s"$seg/pins"))
         kp = kp.join(spark.read.parquet(s"$seg/kout"), Seq("doc_id"), "left_anti")
@@ -206,7 +193,7 @@ object CorpusPipeline {
         b.select("doc_id").collect().map(_.getLong(0))
       }
       if (bIds.isEmpty) {
-        writePointer(v, batchId); cur = (v, batchId); return v
+        state.writePointer(v, batchId); cur = (v, batchId); return v
       }
       val (docs0, pairs0, kept0) =
         if (v == 0) {
@@ -355,92 +342,35 @@ object CorpusPipeline {
         .select("doc_id", "embedding")
       graph.advance(batchId, freshEmb, Some(evicted)): Unit
       // ---- corpus commit (pointer last — the batch's commit marker);
-      // writes scan hot blocks, not recomputed lineage. Two spellings
-      // behind the same pointer contract (mirror of MaintainedGraph):
-      // "snapshot" writes the full state per batch; "upsertlog" writes
-      // the per-batch DELTA — the batch's docs, its new pairs and the
-      // kept-set diff, ALL already computed by the advance algebra
-      // above, so the segment costs zero extra compute and O(|batch|)
-      // write I/O instead of O(corpus) — with a full snapshot every
-      // `compactEvery` versions bounding recovery replay.
+      // writes scan hot blocks, not recomputed lineage. A snapshot
+      // version writes the full state; any other version writes the
+      // batch's DELTA — its docs, its new pairs and the kept-set diff,
+      // ALL already computed by the advance algebra above, so the
+      // segment costs zero extra compute and O(|batch|) write I/O
+      // instead of O(corpus).
       val newV = v + 1
-      val snapVersions =
-        if (stateFormat == "snapshot") Nil
-        else snapshotVersions().filter(_ <= v)
-      val snapNow = stateFormat == "snapshot" || snapVersions.isEmpty ||
-        newV - snapVersions.max >= compactEvery
+      val snapNow = state.beginVersion(newV)
       // independent state writes run concurrently (guide §2.6) — the
       // driver was the only thing serializing them
-      if (snapNow) {
-        deleteDir(s"$stateDir/log/v=$newV"): Unit
+      if (snapNow)
         graft.Phases.inParallel(spark, "corpus:snapshot-write")(
-          () => allDocs.write.mode("overwrite").parquet(s"$stateDir/docs/v=$newV"),
-          () => pairs1.write.mode("overwrite").parquet(s"$stateDir/pairs/v=$newV"),
-          () => kept1.write.mode("overwrite").parquet(s"$stateDir/kept/v=$newV"))
-      } else {
-        Seq("docs", "pairs", "kept").foreach(kind =>
-          deleteDir(s"$stateDir/$kind/v=$newV"): Unit)
-        val seg = s"$stateDir/log/v=$newV"
+          () => allDocs.write.mode("overwrite").parquet(state.snapshotDir("docs", newV)),
+          () => pairs1.write.mode("overwrite").parquet(state.snapshotDir("pairs", newV)),
+          () => kept1.write.mode("overwrite").parquet(state.snapshotDir("kept", newV)))
+      else {
+        val seg = state.segmentDir(newV)
         graft.Phases.inParallel(spark, "corpus:log-write")(
           () => b.write.mode("overwrite").parquet(s"$seg/dins"),
           () => newPairs.write.mode("overwrite").parquet(s"$seg/pins"),
           () => fresh.write.mode("overwrite").parquet(s"$seg/kin"),
           () => evicted.write.mode("overwrite").parquet(s"$seg/kout"))
       }
-      writePointer(newV, batchId)
+      state.writePointer(newV, batchId)
       hot = Some((newV, allDocs, pairs1, kept1))
       hotDerived = Some((newV, shAll, bandAll))
       cur = (newV, batchId)
-      if (stateFormat == "snapshot") {
-        Seq("docs", "pairs", "kept").foreach { kind =>
-          var old = newV - 2
-          while (old >= 1 && deleteDir(s"$stateDir/$kind/v=$old")) old -= 1
-        }
-      } else if (snapNow) {
-        // log retention at compaction: v=newV-1 reconstructs from the
-        // PREVIOUS snapshot plus its trailing segments
-        snapVersions.sorted.lastOption.foreach { p =>
-          snapVersions.filter(_ < p).foreach { s =>
-            Seq("docs", "pairs", "kept").foreach(kind =>
-              deleteDir(s"$stateDir/$kind/v=$s"): Unit)
-          }
-          (1 to p).foreach(s => deleteDir(s"$stateDir/log/v=$s"): Unit)
-        }
-      }
+      if (snapNow) state.retain(newV)
       newV
-    }
-
-    private def pointerPath = java.nio.file.Paths.get(s"$stateDir/POINTER")
-
-    private def readPointer(): Option[(Int, Long)] =
-      if (!java.nio.file.Files.exists(pointerPath)) None
-      else {
-        val parts = new String(java.nio.file.Files.readAllBytes(pointerPath),
-          java.nio.charset.StandardCharsets.UTF_8).trim.split(" ")
-        require(parts.length == 2,
-          s"MaintainedCorpus: corrupt pointer ${parts.toSeq} at $pointerPath")
-        Some((parts(0).toInt, parts(1).toLong))
-      }
-
-    private def writePointer(v: Int, batchId: Long): Unit = {
-      val tmp = java.nio.file.Paths.get(s"$stateDir/POINTER.tmp")
-      java.nio.file.Files.write(tmp, s"$v $batchId".getBytes(
-        java.nio.charset.StandardCharsets.UTF_8))
-      java.nio.file.Files.move(tmp, pointerPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-
-    private def deleteDir(path: String): Boolean = {
-      val d = new java.io.File(path)
-      if (!d.exists) false
-      else {
-        def rec(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rec)
-          f.delete(): Unit
-        }
-        rec(d); true
-      }
     }
   }
 
@@ -544,8 +474,7 @@ object CorpusPipeline {
     * chained DuckDB oracle re-derives from scratch. */
   def continuousOverFile(spark: SparkSession, sfDir: String,
                          k: Int = 5, nSlices: Int = 4,
-                         stateFormat: String = "snapshot",
-                         compactEvery: Int = 4): DataFrame = {
+                         compactEvery: Int = 1): DataFrame = {
     val feed = graft.Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
       .join(graft.Tables.embeddings(spark, sfDir)
         .select(col("vec_id").as("doc_id"),
@@ -554,7 +483,7 @@ object CorpusPipeline {
     val root = java.nio.file.Files.createTempDirectory("graft_corpuspipe").toString
     val in = s"$root/in"
     val mc = new MaintainedCorpus(spark, s"$root/state", k,
-      stateFormat = stateFormat, compactEvery = compactEvery)
+      compactEvery = compactEvery)
     // test-scale runner tuning only (the drainToTable rule): each
     // micro-batch chains many SMALL state jobs, and 32 shuffle
     // partitions plus per-stage AQE re-planning per tiny stage is pure
@@ -579,7 +508,7 @@ object CorpusPipeline {
     // pin the result into hot blocks, then reclaim the temp root
     // (state snapshots there hold multiple full corpus copies per run)
     val out = mc.graph.edges.orderBy("query_id", "neighbor_id").localCheckpoint()
-    GraphStream.deleteRecursively(root)
+    VersionedState.deleteRecursively(root)
     out
   }
 }

@@ -676,7 +676,7 @@ object CorpusStream {
         .start()
       try q.awaitTermination() finally q.stop()
       spark.table(name).localCheckpoint()
-    } finally GraphStream.deleteRecursively(root)
+    } finally VersionedState.deleteRecursively(root)
   }
 
   /** Streaming model-based quality gate — the Bernoulli-NB serve half
@@ -1400,7 +1400,7 @@ object CorpusStream {
       q.awaitTermination()
     }
     val out = cm.verdict.orderBy("doc_id").localCheckpoint()
-    GraphStream.deleteRecursively(root)
+    VersionedState.deleteRecursively(root)
     out
   }
 

@@ -16,10 +16,11 @@ import graft.operators.AnnServe
   * SAME DuckDB oracle as the batch `q_knn_graph`.
   *
   * State + recovery contract (the part `foreachBatch` does not give
-  * for free): the maintained state is (corpus, edges) snapshot
-  * directories versioned `v=N`, plus one POINTER file naming
-  * (version, lastAppliedBatchId) that is written LAST and atomically
-  * (temp + ATOMIC_MOVE) — the pointer IS the batch's commit:
+  * for free): the maintained state is versioned `v=N` on disk in the
+  * `VersionedState` layout — (corpus, edges) snapshots and delta
+  * segments — plus one POINTER file naming (version,
+  * lastAppliedBatchId) that is written LAST and atomically (temp +
+  * ATOMIC_MOVE) — the pointer IS the batch's commit:
   *  - crash BEFORE the pointer write → the pointer still names v=N-1;
   *    Spark replays the batch from its checkpoint and the advance
   *    recomputes v=N from v=N-1, overwriting any partial dirs
@@ -29,25 +30,20 @@ import graft.operators.AnnServe
   *    and the advance is a loud no-op (the state already includes
   *    it) — exactly-once observable state, the same contract the
   *    scored-events file runner pins for its sink.
-  * Only the last two versions are retained (the replay fallback needs
-  * v=N-1 and nothing older).
+  * Retention keeps what v=N-1 needs and nothing older.
   *
   * Cost shape per batch (the honest 100 TB posture): the graph math
   * is the incremental operators' — |old|·|new| + |new|² serve scans
   * for an insert batch, |affected|·|remaining| for a delete — and
-  * NEVER re-pays old×old. TWO state spellings sit behind the same
-  * pointer contract, selected by `stateFormat`:
-  *  - "snapshot" (default, simplest-correct): O(n) full write per
-  *    batch, versions fully isolated, trivial recovery;
-  *  - "upsertlog" (the production write path): per-version DELTA
-  *    segments — corpus inserts/deletes, the full new neighbor lists
-  *    of CHANGED queries, eviction tombstones — so write I/O is
-  *    O(|changed|) per batch, with a full snapshot every
-  *    `compactEvery` versions (log compaction) bounding recovery
-  *    replay; retention keeps the previous snapshot plus its trailing
-  *    segments (v=N-1 must stay reconstructible).
-  * Both are drained-state bit-identical (StreamingSpec gates it) and
-  * the graph compute dominates either at steady state. */
+  * NEVER re-pays old×old. The write side follows the snapshot cadence
+  * `compactEvery`: a full snapshot is an O(n) write; every other
+  * version writes a DELTA segment — corpus inserts/deletes, the full
+  * new neighbor lists of CHANGED queries, eviction tombstones — so its
+  * write I/O is O(|changed|), and the snapshot every `compactEvery`
+  * versions bounds recovery replay. The default cadence 1 snapshots
+  * every version (versions fully isolated, nothing to replay). Every
+  * cadence drains to the bit-identical state (StreamingSpec gates it)
+  * and the graph compute dominates at steady state. */
 object GraphStream {
 
   /** The standing maintained graph: versioned on-disk (corpus, edges)
@@ -61,15 +57,12 @@ object GraphStream {
                               k: Int = 5,
                               idCol: String = "vec_id",
                               vecCol: String = "embedding",
-                              stateFormat: String = "snapshot",
-                              compactEvery: Int = 4) {
-    require(stateFormat == "snapshot" || stateFormat == "upsertlog",
-      s"MaintainedGraph: unknown stateFormat '$stateFormat'")
-    require(compactEvery >= 2, s"compactEvery=$compactEvery must be >= 2")
-    new java.io.File(stateDir).mkdirs()
+                              compactEvery: Int = 1) {
+    private val state = new VersionedState(stateDir, "MaintainedGraph",
+      Seq("corpus", "edges"), compactEvery)
     // (version, lastAppliedBatchId) — recovered from the pointer when
     // one exists, so a restarted process resumes the standing graph
-    @volatile private var cur: (Int, Long) = readPointer().getOrElse((0, -1L))
+    @volatile private var cur: (Int, Long) = state.readPointer().getOrElse((0, -1L))
     // The committed version stays HOT in the cluster (localCheckpoint
     // blocks); the parquet snapshot is the RECOVERY path only. Between
     // batches every reader — the next advance's fitShard collect, the
@@ -83,7 +76,7 @@ object GraphStream {
     // ADVICE r15: the preverifiedEdges fast path's induction argument
     // ("edges0 is this operator's own complete output") is weakest
     // right after process recovery, where edges0 comes from on-disk
-    // snapshot/upsertlog replay — a corrupted or truncated segment
+    // snapshot + segment replay — a corrupted or truncated segment
     // must trip the loud completeness require, not silently produce a
     // wrong graph. Set when hotState materializes from DISK, cleared
     // after the first advance re-verifies; in-memory frames committed
@@ -122,22 +115,16 @@ object GraphStream {
 
     /** The committed (corpus, edges) frames at the current version —
       * hot blocks if this process committed them. A RECOVERED process
-      * materializes ONCE: the snapshot format reads its two dirs; the
-      * upsert-log format replays segments forward from the latest
-      * snapshot at-or-below the pointer version. Both paths
-      * `localCheckpoint` before installing as hot so no downstream
-      * lineage references files retention may later delete (the
-      * MaintainedCorpus recovery lineage lesson). */
+      * materializes ONCE through `reconstruct`, which `localCheckpoint`s
+      * before installing as hot so no downstream lineage references
+      * files retention may later delete (the MaintainedCorpus recovery
+      * lineage lesson). */
     private def hotState: (DataFrame, DataFrame) = synchronized {
       require(version > 0, "MaintainedGraph: no committed version yet")
       hot match {
         case Some((v, c, e)) if v == version => (c, e)
         case _ =>
-          val (c, e) =
-            if (stateFormat == "snapshot")
-              (spark.read.parquet(s"$stateDir/corpus/v=$version").localCheckpoint(),
-               spark.read.parquet(s"$stateDir/edges/v=$version").localCheckpoint())
-            else reconstruct(version)
+          val (c, e) = reconstruct(version)
           hot = Some((version, c, e))
           edgesFromReplay = true
           (c, e)
@@ -152,27 +139,19 @@ object GraphStream {
       * `knnGraphIncremental` precondition holds by construction). */
     def edges: DataFrame = hotState._2
 
-    /** Snapshot versions present on disk (the `corpus/v=N` dirs). */
-    private def snapshotVersions(): Seq[Int] =
-      Option(new java.io.File(s"$stateDir/corpus").listFiles())
-        .getOrElse(Array.empty).toSeq
-        .flatMap(f => scala.util.Try(f.getName.stripPrefix("v=").toInt).toOption)
-
-    /** Upsert-log recovery: read the newest snapshot at-or-below `v`,
-      * then replay each log segment in version order — corpus deletes
-      * then inserts, edge rows of REWRITTEN queries replaced wholesale
-      * (a segment's `eup` carries the full new neighbor list of every
-      * query whose list changed; `edel` tombstones removed queries).
-      * One pass, one lineage cut at the end. */
+    /** Recovery: read the newest snapshot at or below `v`, then replay
+      * each segment after it in version order (none at cadence 1) —
+      * corpus deletes then inserts, edge rows of REWRITTEN queries
+      * replaced wholesale (a segment's `eup` carries the full new
+      * neighbor list of every query whose list changed; `edel`
+      * tombstones removed queries). One pass, one lineage cut at the
+      * end. */
     private def reconstruct(v: Int): (DataFrame, DataFrame) = {
-      val snaps = snapshotVersions().filter(_ <= v)
-      require(snaps.nonEmpty,
-        s"MaintainedGraph: no snapshot at or below v=$v under $stateDir")
-      val s0 = snaps.max
-      var c = spark.read.parquet(s"$stateDir/corpus/v=$s0")
-      var e = spark.read.parquet(s"$stateDir/edges/v=$s0")
+      val s0 = state.baseSnapshot(v)
+      var c = spark.read.parquet(state.snapshotDir("corpus", s0))
+      var e = spark.read.parquet(state.snapshotDir("edges", s0))
       ((s0 + 1) to v).foreach { lv =>
-        val seg = s"$stateDir/log/v=$lv"
+        val seg = state.segmentDir(lv)
         val cins = spark.read.parquet(s"$seg/cins")
         val cdel = spark.read.parquet(s"$seg/cdel")
         val eup = spark.read.parquet(s"$seg/eup")
@@ -284,7 +263,7 @@ object GraphStream {
       if (nIns == 0 && removedSet.isEmpty) {
         // an empty micro-batch advances the applied-batch pointer only
         // (the existing version dirs stay the state)
-        writePointer(v, batchId)
+        state.writePointer(v, batchId)
         cur = (v, batchId)
         return v
       }
@@ -360,54 +339,31 @@ object GraphStream {
                        shardAfter: AnnServe.AnnShard,
                        removedQueryIds: Set[Long] = Set.empty): Unit = {
       // materialize once into hot blocks, persist from those blocks.
-      // The SNAPSHOT write branch reads c and e from exactly ONE
-      // writer each (corpus→c, edges→e — disjoint), so its
-      // checkpoints are LAZY (r16): each write job materializes its
-      // own frame, saving the two standalone checkpoint jobs per
-      // batch. The DELTA branch keeps the r15 eager pair — its
-      // writers cross-read c and e (cins/cdel both scan c, eup scans
-      // e and eOld), and lazily materializing inside those parallel
-      // writes was tried and DUPLICATED the merge compute (concurrent
-      // jobs racing to fill the same un-materialized blocks).
-      val snapVersions0 =
-        if (stateFormat == "snapshot") Nil
-        else snapshotVersions().filter(_ <= cur._1)
-      val snapNow0 = stateFormat == "snapshot" || snapVersions0.isEmpty ||
-        newV - snapVersions0.max >= compactEvery
+      // A SNAPSHOT commit reads c and e from exactly ONE writer each
+      // (corpus→c, edges→e — disjoint), so its checkpoints are LAZY
+      // (r16): each write job materializes its own frame, saving two
+      // standalone checkpoint jobs per batch. A DELTA commit keeps the
+      // r15 eager pair — its writers cross-read c and e (cins/cdel both
+      // scan c, eup scans e and eOld), and lazily materializing inside
+      // those parallel writes was tried and DUPLICATED the merge
+      // compute (concurrent jobs racing to fill the same
+      // un-materialized blocks). Independent state writes run
+      // CONCURRENTLY (guide §2.6): the driver was the only thing
+      // serializing them, and on tiny per-batch state the job
+      // round-trip dominates the write itself.
+      val snapNow = state.beginVersion(newV)
       var c: DataFrame = null
       var e: DataFrame = null
-      if (snapNow0) {
+      if (snapNow) {
         c = corpusDf.localCheckpoint(false)
         e = edgesDf.select("query_id", "neighbor_id", "cos").localCheckpoint(false)
-      } else graft.Phases.inParallel(spark, "graph:commit-ckpt")(
-        () => c = corpusDf.localCheckpoint(),
-        () => e = edgesDf.select("query_id", "neighbor_id", "cos").localCheckpoint())
-      // the PRODUCTION write spelling ("upsertlog"): a per-version
-      // DELTA segment instead of the O(n) full snapshot — the write
-      // I/O becomes O(|changed|) per batch, which is the term the
-      // snapshot spelling names as its production form
-      // (GraphStream.scala header). A full snapshot still lands at
-      // bootstrap and every `compactEvery` versions (log compaction),
-      // bounding replay length; both spellings sit behind the same
-      // pointer-commit contract and are drained-state bit-identical
-      // (StreamingSpec gates it).
-      // only COMMITTED snapshots (<= the current pointer version) count:
-      // a crashed commit attempt can leave a stale v=newV dir that the
-      // pointer never blessed — the replayed commit below overwrites or
-      // removes it so recovery never reads a half-written snapshot
-      val snapVersions = snapVersions0
-      val snapNow = snapNow0
-      // Independent state writes run CONCURRENTLY (guide §2.6): the
-      // driver was the only thing serializing them, and on tiny
-      // per-batch state the job round-trip dominates the write itself.
-      if (snapNow) {
-        deleteDir(s"$stateDir/log/v=$newV"): Unit
         graft.Phases.inParallel(spark, "graph:commit-write")(
-          () => c.write.mode("overwrite").parquet(s"$stateDir/corpus/v=$newV"),
-          () => e.write.mode("overwrite").parquet(s"$stateDir/edges/v=$newV"))
+          () => c.write.mode("overwrite").parquet(state.snapshotDir("corpus", newV)),
+          () => e.write.mode("overwrite").parquet(state.snapshotDir("edges", newV)))
       } else {
-        deleteDir(s"$stateDir/corpus/v=$newV"): Unit
-        deleteDir(s"$stateDir/edges/v=$newV"): Unit
+        graft.Phases.inParallel(spark, "graph:commit-ckpt")(
+          () => c = corpusDf.localCheckpoint(),
+          () => e = edgesDf.select("query_id", "neighbor_id", "cos").localCheckpoint())
         // deltas vs the CURRENT committed state (hot — this process
         // committed it, or the recovery path materialized it). The
         // changed-query set comes from an exceptAll scan of hot blocks
@@ -416,7 +372,7 @@ object GraphStream {
         // computes it. Removed QUERY ids are the advance's driver-side
         // eviction set (bounded per batch), not a corpus-wide distinct.
         val (cOld, eOld) = hotState
-        val seg = s"$stateDir/log/v=$newV"
+        val seg = state.segmentDir(newV)
         import spark.implicits._
         graft.Phases.inParallel(spark, "graph:commit-write")(
           () => c.join(cOld, Seq(idCol), "left_anti")
@@ -433,65 +389,14 @@ object GraphStream {
           () => removedQueryIds.toSeq.sorted.toDF("query_id")
             .write.mode("overwrite").parquet(s"$seg/edel"))
       }
-      writePointer(newV, batchId)
+      state.writePointer(newV, batchId)
       hot = Some((newV, c, e))
       // this process produced (and, post-recovery, re-verified) these
       // edges — the preverified fast path's induction restarts here
       edgesFromReplay = false
       hotShard = Some((newV, shardAfter))
       cur = (newV, batchId)
-      if (stateFormat == "snapshot") {
-        // retention: the replay fallback needs v=newV-1 only
-        Seq("corpus", "edges").foreach { kind =>
-          var old = newV - 2
-          while (old >= 1 && deleteDir(s"$stateDir/$kind/v=$old")) old -= 1
-        }
-      } else if (snapNow) {
-        // log retention at compaction: v=newV-1 reconstructs from the
-        // PREVIOUS snapshot plus its trailing segments — everything
-        // strictly older than that snapshot can go
-        val prev = (snapVersions :+ newV).filter(_ < newV).sorted.lastOption
-        prev.foreach { p =>
-          snapVersions.filter(_ < p).foreach { s =>
-            deleteDir(s"$stateDir/corpus/v=$s"): Unit
-            deleteDir(s"$stateDir/edges/v=$s"): Unit
-          }
-          (1 to p).foreach(s => deleteDir(s"$stateDir/log/v=$s"): Unit)
-        }
-      }
-    }
-
-    private def pointerPath = java.nio.file.Paths.get(s"$stateDir/POINTER")
-
-    private def readPointer(): Option[(Int, Long)] =
-      if (!java.nio.file.Files.exists(pointerPath)) None
-      else {
-        val parts = new String(java.nio.file.Files.readAllBytes(pointerPath),
-          java.nio.charset.StandardCharsets.UTF_8).trim.split(" ")
-        require(parts.length == 2,
-          s"MaintainedGraph: corrupt pointer ${parts.toSeq} at $pointerPath")
-        Some((parts(0).toInt, parts(1).toLong))
-      }
-
-    private def writePointer(v: Int, batchId: Long): Unit = {
-      val tmp = java.nio.file.Paths.get(s"$stateDir/POINTER.tmp")
-      java.nio.file.Files.write(tmp, s"$v $batchId".getBytes(
-        java.nio.charset.StandardCharsets.UTF_8))
-      java.nio.file.Files.move(tmp, pointerPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-
-    private def deleteDir(path: String): Boolean = {
-      val d = new java.io.File(path)
-      if (!d.exists) false
-      else {
-        def rec(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rec)
-          f.delete(): Unit
-        }
-        rec(d); true
-      }
+      if (snapNow) state.retain(newV)
     }
   }
 
@@ -519,14 +424,13 @@ object GraphStream {
     * batch `q_knn_graph` DuckDB oracle applies verbatim. */
   def knnGraphOverFile(spark: SparkSession, sfDir: String,
                        k: Int = 5, nSlices: Int = 4,
-                       stateFormat: String = "snapshot",
-                       compactEvery: Int = 4): DataFrame = {
+                       compactEvery: Int = 1): DataFrame = {
     val e = graft.Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
     val root = java.nio.file.Files.createTempDirectory("graft_graphstream").toString
     val in = s"$root/in"
     val graph = new MaintainedGraph(spark, s"$root/state", k,
-      stateFormat = stateFormat, compactEvery = compactEvery)
+      compactEvery = compactEvery)
     // test-scale runner tuning only (the drainToTable rule): the
     // per-batch state jobs are tiny here, so 32-partition shuffles and
     // per-stage AQE re-planning are pure scheduler overhead
@@ -548,15 +452,7 @@ object GraphStream {
     // state snapshots there can hold multiple full-corpus copies and
     // repeated declared-query runs would otherwise accumulate them
     val out = graph.edges.orderBy("query_id", "neighbor_id").localCheckpoint()
-    deleteRecursively(root)
+    VersionedState.deleteRecursively(root)
     out
-  }
-
-  private[streaming] def deleteRecursively(path: String): Unit = {
-    def rec(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rec)
-      f.delete(): Unit
-    }
-    rec(new java.io.File(path))
   }
 }

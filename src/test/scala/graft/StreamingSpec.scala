@@ -1022,7 +1022,7 @@ class StreamingSpec extends AnyFunSuite {
       .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
     val gS = new GraphStream.MaintainedGraph(spark, s"$dir/snap", k = 5)
     val gL = new GraphStream.MaintainedGraph(spark, s"$dir/log", k = 5,
-      stateFormat = "upsertlog", compactEvery = 3)
+      compactEvery = 3)
     def edgesOf(g: GraphStream.MaintainedGraph) =
       g.edges.collect().map(graphKey).toSeq.sorted
     def corpusOf(g: GraphStream.MaintainedGraph) =
@@ -1077,7 +1077,7 @@ class StreamingSpec extends AnyFunSuite {
       "a query outside the segment changed across versions — the delta is incomplete")
     // MID-LOG recovery: a fresh process replays snap v1 + segments 2..3
     val gL2 = new GraphStream.MaintainedGraph(spark, s"$dir/log", k = 5,
-      stateFormat = "upsertlog", compactEvery = 3)
+      compactEvery = 3)
     assert(gL2.version == 3, "recovery lost the pointer")
     assert(edgesOf(gL2) == edgesOf(gS),
       "mid-log reconstruction diverged from the snapshot spelling")
@@ -1091,7 +1091,7 @@ class StreamingSpec extends AnyFunSuite {
     // POST-COMPACTION recovery reads the fresh snapshot directly, and the
     // drained state equals the scratch rebuild over the full live set
     val gL3 = new GraphStream.MaintainedGraph(spark, s"$dir/log", k = 5,
-      stateFormat = "upsertlog", compactEvery = 3)
+      compactEvery = 3)
     assert(gL3.version == 4)
     assert(edgesOf(gL3) == scratchGraph(e, 5),
       "post-compaction recovery diverged from the scratch rebuild")
@@ -1323,6 +1323,17 @@ class StreamingSpec extends AnyFunSuite {
     q2.awaitTermination()
     assert(mc2.version == nSlices,
       s"expected $nSlices commits total (>=3 after restart), got ${mc2.version}")
+    // the default snapshot cadence 1 is the full-snapshot layout: every
+    // version a snapshot, retention keeps exactly v=N-1 and v=N, and no
+    // delta segment is ever written
+    def entries(sub: String): Set[String] =
+      Option(new java.io.File(s"$state/$sub").list()).getOrElse(Array.empty[String]).toSet
+    Seq("docs", "pairs", "kept", "graph/corpus", "graph/edges").foreach { kind =>
+      assert(entries(kind) == Set(s"v=${nSlices - 1}", s"v=$nSlices"),
+        s"cadence-1 retention left ${entries(kind)} under $kind")
+    }
+    assert(entries("log").isEmpty && entries("graph/log").isEmpty,
+      "cadence 1 wrote a delta segment")
     val docs = Tables.documents(spark, sfd)
     val pairsB = Dedup.minhashPairs(docs, "doc_id", "text",
       numHashes = 16, bands = 8, threshold = 0.1, portableMd5 = true)
@@ -1350,7 +1361,7 @@ class StreamingSpec extends AnyFunSuite {
       feed.filter(pmod(xxhash64(col("doc_id")), lit(nSlices)) === s)
         .coalesce(1).write.mode("append").parquet(in)
     def mk() = new CorpusPipeline.MaintainedCorpus(spark, state, k = 5,
-      stateFormat = "upsertlog", compactEvery = 3)
+      compactEvery = 3)
     (0 until 2).foreach(writeSlice)
     val mc1 = mk()
     val q1 = CorpusPipeline.start(mc1,
