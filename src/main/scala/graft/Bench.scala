@@ -9,47 +9,18 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Optional comma-separated name filter for targeted re-timing; unknown
-    // names fail fast (a typo must not look like a clean run).
+    val spark = Harness.session()
+    // Optional comma-separated name filter for targeted re-timing
     val selected = sys.env.get("SPARK_GRAFT_QUERIES") match {
       case None => SparkEntry.queries
       case Some(csv) =>
-        val names = csv.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-        val unknown = names.filterNot(SparkEntry.queries.contains)
-        require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
-        names.map(n => n -> SparkEntry.queries(n)).toMap
+        Harness.selectQueries(csv).map(n => n -> SparkEntry.queries(n)).toMap
     }
-    // State hygiene (BENCH_r05 lesson): several queries persist blocks
-    // they cannot release themselves — localCheckpoint'ed edge lists in
-    // the dedup/CC family (unpersisting a localCheckpoint invalidates
-    // the frame, so the query can't clean up before returning) and
-    // memory-sink tables behind the streaming twins. Left alone, 103
-    // queries x 3 executions pile those blocks up in the executor store
-    // and the alphabetically-late queries (q_s*) pay for them —
-    // BENCH_r05 recorded 2.5-9.3x regressions on byte-identical code.
-    // So: after EVERY execution, unpersist all persisted RDDs, clear
-    // the DF cache, and drop the streams' memory-sink temp views. The
-    // sweep runs outside the timers; per-query leak counts (from the
-    // warm run) are recorded in BENCH_FULL so a new leak is visible.
-    def sweep(): (Int, Int) = {
-      val rdds = spark.sparkContext.getPersistentRDDs
-      rdds.values.foreach(_.unpersist(blocking = false))
-      spark.catalog.clearCache()
-      val views = spark.catalog.listTables().collect()
-        .filter(t => t.isTemporary && t.name.startsWith("__graft_"))
-      views.foreach(v => spark.catalog.dropTempView(v.name))
-      (rdds.size, views.length)
-    }
-    sweep()
+    // After EVERY execution the sweep (Harness.sweep) releases what the
+    // query left behind, outside the timers; per-query leak counts
+    // (from the warm run) are recorded in BENCH_FULL so a new leak is
+    // visible.
+    Harness.sweep(spark)
     val leaks = scala.collection.mutable.LinkedHashMap.empty[String, Int]
     // A query that THROWS must not masquerade as a timing: a swallowed
     // failure records its time-TO-FAILURE (task retries, broadcast
@@ -106,20 +77,15 @@ object Bench {
       }
     }
     def timedRun(name: String,
-                 fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val s = System.nanoTime()
-      runOnce(name, fn)
-      val e = System.nanoTime()
-      sweep()
-      (e - s) / 1e9
-    }
+                 fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double =
+      Harness.timed(spark)(runOnce(name, fn))
     val tStart = scala.collection.mutable.LinkedHashMap.empty[String, Long]
     val firstPass = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
       tStart(name) = System.currentTimeMillis() / 1000L
       val w0 = System.nanoTime()
       runOnce(name, fn) // warm
       val w1 = System.nanoTime()
-      val (leakedRdds, leakedViews) = sweep()
+      val (leakedRdds, leakedViews) = Harness.sweep(spark)
       leaks(name) = leakedRdds + leakedViews
       // steady state = min of two timed runs: a single sample conflates
       // the plan's cost with transient host noise (GC, co-tenant load)
@@ -186,7 +152,7 @@ object Bench {
       }
     }
     // Post-sweep invariant: the store must be empty between queries —
-    // a nonzero residue here means sweep() missed a state class and the
+    // a nonzero residue here means the sweep missed a state class and the
     // bench ordering is contaminating measurements again.
     require(spark.sparkContext.getPersistentRDDs.isEmpty,
       "persisted RDDs survived the post-query sweep")
@@ -217,18 +183,8 @@ object Bench {
     val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "BENCH_FULL.json")
     val leaksJson = leaks.filter(_._2 > 0)
       .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    // Full JSON string escape: backslash, quote, and EVERY control
-    // char (an exception message can carry raw bytes from a parse
-    // failure — one stray control byte must not make the artifact
-    // unreadable in exactly the failure rounds it exists for).
-    def jq(s: String): String = s.flatMap {
-      case '\\' => "\\\\"
-      case '"'  => "\\\""
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
     val errsJson = errors
-      .map { case (k, v) => "\"" + k + "\":\"" + jq(v) + "\"" }
+      .map { case (k, v) => "\"" + k + "\":" + Harness.quote(v) }
       .mkString("{", ",", "}")
     // t_start_epoch_sec: per-query wall-clock stamps — a co-tenant
     // burst window is now identifiable from the artifact alone (the
@@ -247,7 +203,7 @@ object Bench {
       .map { case (k, v) => "\"" + k + "\":[" + v.map(r3).mkString(",") + "]" }
       .mkString("{", ",", "}")
     val retryErrsJson = retryErrors
-      .map { case (k, v) => "\"" + k + "\":\"" + jq(v) + "\"" }
+      .map { case (k, v) => "\"" + k + "\":" + Harness.quote(v) }
       .mkString("{", ",", "}")
     java.nio.file.Files.write(java.nio.file.Paths.get(fullPath),
       (s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsFull,""" +

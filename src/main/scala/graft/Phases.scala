@@ -3,9 +3,9 @@ import org.apache.spark.sql.SparkSession
 
 /** Job labeling (optimization guide §1.5): wrap a driver-side phase so
   * every Spark job it fires carries the label in
-  * `spark.job.description` — the UI and `ProbeMaintained`'s listener
-  * aggregate per-phase cost from it. Thread-local, restores the
-  * previous description on exit, no effect on results. */
+  * `spark.job.description` — `Harness.JobLog` (and `Probe phases` on
+  * top of it) aggregates per-phase cost from it. Thread-local, restores
+  * the previous description on exit, no effect on results. */
 object Phases {
   def phase[T](spark: SparkSession, label: String)(f: => T): T = {
     val sc = spark.sparkContext

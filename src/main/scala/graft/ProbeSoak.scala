@@ -32,6 +32,7 @@ import org.apache.spark.sql.functions._
   *
   * `gen` writes soak dirs under soak/ (gitignored); `run` times the
   * family. Usage: runMain graft.ProbeSoak gen|run [scales...]
+  * The gates' recorded readings were taken at SPARK_GRAFT_CPUS=32.
   */
 object ProbeSoak {
   val Sf01 = "/root/testdata/sf0.1"
@@ -139,29 +140,22 @@ object ProbeSoak {
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.getOrElse("run")
     val scales = if (args.length > 1) args.drop(1).map(_.toInt).toSeq else DefaultScales
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // the streaming peak-state gates take max over recentProgress,
-      // which keeps only the last N updates (default ~100) — raise it
-      // far past any soak run's micro-batch count so the true peak is
-      // never silently aged out of the window
-      .config("spark.sql.streaming.numRecentProgressUpdates", "10000")
-      // GRAFT_SOAK_ROCKSDB=1 swaps the state store to RocksDB — the
-      // production answer once distinct-key state outgrows the heap
-      // (the x48 substring cell holds 15.27M digests): same gates,
-      // bounded memory, pure config. Proves the PLANS.md claim that
-      // the state-store CHOICE is orthogonal to the operator shape.
-      .config("spark.sql.streaming.stateStore.providerClass",
-        if (sys.env.get("GRAFT_SOAK_ROCKSDB").contains("1"))
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-        else
-          "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
+    // the streaming peak-state gates take max over recentProgress,
+    // which keeps only the last N updates (default ~100) — raise it
+    // far past any soak run's micro-batch count so the true peak is
+    // never silently aged out of the window
+    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "10000")
+    // GRAFT_SOAK_ROCKSDB=1 swaps the state store to RocksDB — the
+    // production answer once distinct-key state outgrows the heap
+    // (the x48 substring cell holds 15.27M digests): same gates,
+    // bounded memory, pure config. Proves the PLANS.md claim that
+    // the state-store CHOICE is orthogonal to the operator shape.
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      if (sys.env.get("GRAFT_SOAK_ROCKSDB").contains("1"))
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+      else
+        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
 
     if (mode == "extract") {
       // Markup-extraction scale probe: wrap + extract are pure per-row
@@ -1023,10 +1017,8 @@ object ProbeSoak {
         new org.apache.spark.scheduler.SparkListener {
           override def onStageCompleted(
               ev: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            val rec = ev.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten
-            if (sys.env.contains("GRAFT_XMODAL_TIMING") && rec > 2000)
-              println(s"[xmodal-stage] ${ev.stageInfo.name.take(120)} rec=$rec")
-            shuffled.addAndGet(rec): Unit
+            shuffled.addAndGet(
+              ev.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten): Unit
           }
         })
       def measured(body: => Unit): (Double, Long) = {
@@ -1141,7 +1133,7 @@ object ProbeSoak {
       // corpora with neighborhood structure, not on isotropic noise):
       // the two-level path FORCED on the real sf0.1 embeddings table
       // must recover >= 0.85 of the exact graph's edges, like the flat
-      // path's 0.89 (ProbeKnnRecall r7).
+      // path's 0.89 (measured in r7).
       locally {
         val real = Tables.embeddings(spark, Sf01)
         val shard = AnnServe.fitShard(real)
@@ -1603,16 +1595,11 @@ object ProbeSoak {
           // same state sweep Bench runs — localCheckpoint'ed edge lists
           // otherwise pile up across the 9-query × 4-scale sweep and
           // later cells pay for earlier ones
-          def sweep(): Unit = {
-            spark.sparkContext.getPersistentRDDs.values
-              .foreach(_.unpersist(blocking = false))
-            spark.catalog.clearCache()
-          }
           def once(): (Double, Long) = {
             val t0 = System.nanoTime()
             val rows = fn(spark, dir).count()
             val t1 = System.nanoTime()
-            sweep()
+            Harness.sweep(spark)
             ((t1 - t0) / 1e9, rows)
           }
           val (ta, rows) = once()

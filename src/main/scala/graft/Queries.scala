@@ -1778,7 +1778,7 @@ object Queries {
     * whole-graph construction). Work is n²·nprobe²/nlist cosines —
     * linear in n at fixed cell occupancy — and no corpus collect
     * exists anywhere; recall < 1 by design — measured 0.998 at
-    * sf0.001 and 0.89 at sf0.1 (`ProbeKnnRecall`) with adaptive
+    * sf0.001 and 0.89 at sf0.1 (r7, vs `q_knn_graph`) with adaptive
     * nlist (~32/cell) / nprobe=6; the r7 sweep also read fixed
     * nlist=64 at 0.77–0.92 and an LSH-bucket variant at 0.62/14 s,
     * both rejected. SimilaritySpec floors 0.85 against the exact
@@ -2517,7 +2517,7 @@ object Queries {
   /** ANN top-k via IVF-PQ (rows-only) — both scale axes composed:
     * cells bound which rows a query touches, codes bound the bytes per
     * touched row, exact re-rank on the shortlist only. Parameters from
-    * the r5 `ProbeAnn` sweep (nprobe × shortlist × ksub × m at
+    * the r5 sweep (nprobe × shortlist × ksub × m at
     * sf0.001): nprobe 8→12 and shortlist 50→100 lift recall@10
     * 0.82 → 0.96 at unchanged model size and runtime — quantization
     * error was dropping true neighbors out of the 50-row ADC

@@ -1,6 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import Harness.quote
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
@@ -82,34 +82,9 @@ object Verify {
     // args: <sfDir> <outDir> [comma-separated query-name filter]
     val Array(sfDir, outDir) = args.take(2)
     val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    // A typo in the filter must not masquerade as a clean (empty) run.
-    only.foreach { names =>
-      val unknown = names.diff(SparkEntry.queries.keySet)
-      require(unknown.isEmpty,
-        s"unknown query names: ${unknown.toSeq.sorted.mkString(",")}")
-    }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      if (args.length > 2) Some(Harness.selectQueries(args(2)).toSet) else None
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val manifest = new java.io.PrintWriter(new java.io.BufferedWriter(
       new java.io.FileWriter(s"$outDir/manifest.jsonl", false)))
     val manifestLock = new Object
@@ -139,12 +114,12 @@ object Verify {
             import scala.jdk.CollectionConverters._
             val (n, hash) = canonicalHash(back.toLocalIterator().asScala, idx)
             val ms = (System.nanoTime() - t0) / 1000000L
-            manifestLine(s"""{"name":${q(name)},"rows":$n,""" +
-              s""""cols":${cols.map(q).mkString("[", ",", "]")},""" +
+            manifestLine(s"""{"name":${quote(name)},"rows":$n,""" +
+              s""""cols":${cols.map(quote).mkString("[", ",", "]")},""" +
               s""""hash":"$hash","ms":$ms}""")
           } catch { case e: Throwable =>
             System.err.println(s"[verify] $name failed: ${e.getMessage}")
-            manifestLine(s"""{"name":${q(name)},"error":${q(
+            manifestLine(s"""{"name":${quote(name)},"error":${quote(
               e.getClass.getSimpleName + ": " + String.valueOf(e.getMessage).take(300))}}""")
           }
       })
@@ -154,7 +129,7 @@ object Verify {
     manifest.close()
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${quote(k)}: ${quote(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -944,19 +944,11 @@ object CorpusStream {
                            prefix: String, df: DataFrame,
                            noDataBatch: Boolean = true): DataFrame = {
     val name = s"__graft_${prefix}_${runSeq.incrementAndGet()}"
-    val tm = sys.env.contains("GRAFT_DRAIN_TIMING")
-    var t0 = System.nanoTime()
-    def lap(tag: String): Unit = if (tm) {
-      val t1 = System.nanoTime()
-      println(f"[drain-lap] $prefix $tag ${(t1 - t0) / 1e9}%.3fs")
-      t0 = t1
-    }
     ScoreStream.withConfs(spark, "spark.sql.shuffle.partitions" -> "8",
         "spark.sql.streaming.noDataMicroBatches.enabled" -> noDataBatch.toString) {
       val q = df.writeStream.format("memory").queryName(name)
         .outputMode("append").start()
-      lap("start")
-      try { q.processAllAvailable(); lap("drain") } finally { q.stop(); lap("stop") }
+      try q.processAllAvailable() finally q.stop()
     }
     spark.table(name)
   }
@@ -1075,13 +1067,6 @@ object CorpusStream {
       * contract StreamingSpec gates on; `verdict` serves the full
       * corpus-wide table. */
     def advance(batch: DataFrame): DataFrame = synchronized {
-      val __tm = sys.env.contains("GRAFT_XMODAL_TIMING")
-      var __t0 = System.nanoTime()
-      def __lap(tag: String): Unit = if (__tm) {
-        val t1 = System.nanoTime()
-        println(f"[xmodal-adv] $tag ${(t1 - __t0) / 1e9}%.2fs")
-        __t0 = t1
-      }
       // ONE materialization of the arrival (per-batch JOB COUNT is what
       // dominates a drain at micro-batch granularity; advance pays this
       // snapshot, one tiny collect per signal, the CC pass, and one
@@ -1109,7 +1094,6 @@ object CorpusStream {
       val newEmb = Dedup.embGridRows(be, "vec_id", "embedding",
         gridDims, gridSize)
 
-      __lap("snap")
       // ONE driver round-trip for BOTH signals: the batch's per-digest
       // minima and its touched cells, tagged and unioned so the two
       // tiny aggregates share one job (micro-batch drains are
@@ -1160,7 +1144,6 @@ object CorpusStream {
         .filter(_.getInt(0) == 2).map(_.getLong(2)).toSeq
       val batchEmbIds: Seq[Long] = touchedKeys
         .filter(_.getInt(0) == 3).map(_.getLong(2)).toSeq
-      __lap("touched")
       val sess = batch.sparkSession
       import sess.implicits._
       val batchMins = broadcast(
@@ -1233,7 +1216,7 @@ object CorpusStream {
           // labeled here, not at pool creation: the pool thread's
           // thread-local job description would otherwise be inherited
           // from whichever advance FIRST created the pool and stick
-          // ("batch = 0" forever, r16 ProbeJobs finding)
+          // ("batch = 0" forever, found in r16 by listing each job's label)
           def call(): (DataFrame, DataFrame) =
             graft.Phases.phase(sess0, "xmodal:exact")(exactRewrite())
         })
@@ -1265,9 +1248,7 @@ object CorpusStream {
        }
       }
 
-      __lap("embRewrite")
       val (exDelta, docState2) = exFuture.get()
-      __lap("docRewrite")
       docState = Some(docState2); embState = Some(embState2)
 
       // ---- changed combined verdicts (batch + retraction reach) -------

@@ -108,7 +108,7 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("sim_ivfpq_topk recall@10 >= 0.9 vs brute force on sf0.001") {
-    // parameters fixed by the r5 ProbeAnn sweep (nprobe x shortlist x
+    // parameters fixed by the r5 sweep (nprobe x shortlist x
     // ksub x m): nprobe=12, shortlist=100 measured 0.96 — the
     // quantization error that capped the old nprobe=8/shortlist=50
     // config at 0.82 is absorbed by the wider ADC shortlist + probes

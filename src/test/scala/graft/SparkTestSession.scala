@@ -5,13 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** One SparkSession shared by every suite in the forked test JVM. */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Harness.session(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
