@@ -18,8 +18,10 @@ import org.apache.spark.sql.functions._
   * (ψ=256), so fitting collects at most nTrees·ψ rows — constant-size
   * model state independent of table size (the classic iForest recipe;
   * Liu et al. 2008). Scoring attaches the forest as flat primitive
-  * arrays to one native codegen expression per row
-  * (IForestScoreSamples) — embarrassingly parallel, no shuffle.
+  * arrays to one native expression per row (IForestScoreSamples),
+  * whose generated code calls the walk as a static helper
+  * (`ScoreKernels.iforest`) so HotSpot compiles the loop on its own —
+  * embarrassingly parallel, no shuffle.
   */
 final case class ITree(
     feature: Array[Int],       // -1 → leaf
@@ -59,8 +61,9 @@ final case class IForestModel(trees: Array[ITree], psi: Int, offset: Double) {
     (feature, threshold, left, right, leafC, roots)
   }
 
-  /** sklearn `score_samples`: −2^(−E[h]/c(ψ)) — one native codegen
-    * loop over the flattened forest (see IForestScoreSamples). */
+  /** sklearn `score_samples`: −2^(−E[h]/c(ψ)) — the walk over the
+    * flattened forest runs in a static helper called from generated
+    * code, so HotSpot compiles it on its own (see IForestScoreSamples). */
   def scoreSamplesCol(features: Column): Column = {
     val (fe, th, lf, rt, lc, ro) = flat
     graft.functions.ArrayMath.iforestScore(features, fe, th, lf, rt, lc, ro, c(psi))

@@ -131,7 +131,7 @@ object Lof {
     * training set's kNN structure. Training-side kdist/lrd are
     * computed distributed, then a capped deterministic subsample is
     * collected as constant-size broadcast state; scoring is a per-row
-    * UDF (k nearest among ≤`maxRefPoints` reference points — no
+    * native expression (k nearest among ≤`maxRefPoints` reference points — no
     * shuffle, streaming-safe). */
   def fitNovelty(df: DataFrame, idCol: String, featuresCol: String,
                  k: Int = 20, maxRefPoints: Int = 2000): LofNoveltyModel = {
@@ -192,11 +192,12 @@ final case class LofNoveltyModel(points: Array[Array[Double]],
                                  kdist: Array[Double], lrd: Array[Double], k: Int) {
 
   /** −LOF(x) (higher = more normal, sklearn score convention) as a
-    * native codegen expression (`functions.LofNoveltyScore`) — model
-    * state rides as flat primitive reference arrays, the k-NN heap
-    * and reach/lrd algebra run inside whole-stage codegen, and a
-    * short input vector fails loudly. Bit-identical to the retired
-    * UDF (`scoreColUdf`, kept for the differential spec). */
+    * native expression (`functions.LofNoveltyScore`) — model state
+    * rides as flat primitive reference arrays, the k-NN heap and
+    * reach/lrd algebra run in a static helper (`ScoreKernels.lof`)
+    * called from generated code, so HotSpot compiles the loop on its
+    * own, and a short input vector fails loudly. Bit-identical to the
+    * retired UDF (`scoreColUdf`, kept for the differential spec). */
   def scoreCol(features: Column): Column = {
     require(points.nonEmpty, "lof model has no reference points")
     val dim = points(0).length

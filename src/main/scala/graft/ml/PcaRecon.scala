@@ -17,8 +17,10 @@ import org.apache.spark.sql.functions._
 final case class PcaReconModel(components: Array[Array[Double]], d: Int, k: Int) {
 
   /** score = ‖x − V Vᵀ x‖² / d  (per-row mean squared reconstruction
-    * error, `model_wrapper.py:44-49`) as a native codegen expression
-    * (`functions.PcaReconScore`) — bit-identical to the retired UDF
+    * error, `model_wrapper.py:44-49`) as a native expression
+    * (`functions.PcaReconScore`) whose loop runs in a static helper
+    * (`ScoreKernels.pca`) called from generated code, so HotSpot
+    * compiles it on its own — bit-identical to the retired UDF
     * (`scoreColUdf`, kept for the differential spec). */
   def scoreCol(features: Column): Column = {
     val flat = new Array[Double](k * d)

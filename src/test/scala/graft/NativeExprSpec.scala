@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.TextHash
@@ -255,85 +257,197 @@ class NativeExprSpec extends AnyFunSuite {
     assert(e4.getMessage.contains("ragged"))
   }
 
-  test("IForestScoreSamples == the r1-r5 UDF scorer, bit-identical") {
-    val rnd = new scala.util.Random(7)
-    val dim = 6
-    val rows = (0 until 400).map(i =>
-      (i.toLong, Seq.fill(dim)(rnd.nextGaussian() * 10)))
-    val df = rows.toDF("id", "features")
-    val m = graft.ml.IsolationForest.fit(df, "features",
-      nTrees = 50, subsample = 64, contamination = 0.02, seed = 11L)
-    val both = df.select(
-        m.scoreSamplesCol(col("features")).as("native"),
-        m.scoreSamplesUdfCol(col("features")).as("udf"))
-      .collect()
-    both.foreach { r =>
-      assert(r.getDouble(0) == r.getDouble(1),
-        s"native ${r.getDouble(0)} != udf ${r.getDouble(1)}")
+  // The three score expressions run on two paths: generated code inside
+  // a whole-stage stage, and interpreted `nullSafeEval`. Each
+  // kernel-vs-UDF case below runs once per path. Both exclude
+  // ConvertToLocalRelation, which would otherwise evaluate a projection
+  // over a local frame at planning time, interpreted; the codegen path also
+  // turns off the silent fallback to interpreted evaluation.
+  private val localFold =
+    "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation"
+  private val scorePaths: Seq[(String, Map[String, String])] = Seq(
+    "" -> Map(
+      "spark.sql.optimizer.excludedRules" -> localFold,
+      "spark.sql.codegen.wholeStage" -> "true",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+      "spark.sql.codegen.fallback" -> "false"),
+    " [interpreted]" -> Map(
+      "spark.sql.optimizer.excludedRules" -> localFold,
+      "spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+
+  /** Collects `q` on the path `confs` selects, after checking from the
+    * physical plan that the path is the one taken. */
+  private def onPath(confs: Map[String, String])(q: => DataFrame): Array[Row] = {
+    val saved = confs.keys.map(k => k -> spark.conf.getOption(k))
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val df = q
+      val plan = df.queryExecution.executedPlan
+      val codegen = plan.exists(_.isInstanceOf[WholeStageCodegenExec])
+      assert(codegen == confs("spark.sql.codegen.wholeStage").toBoolean, plan.toString)
+      df.collect()
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
-    // model-mismatch guard: vector narrower than the widest split
-    // feature fails loudly (UnsafeArrayData would read garbage)
-    val short = Seq((1L, Seq(0.5))).toDF("id", "features")
-    val e = intercept[Exception] {
-      short.select(m.scoreSamplesCol(col("features"))).collect()
-    }
-    assert(e.getMessage.contains("forest model does not match") ||
-      Option(e.getCause).exists(_.getMessage.contains("forest model does not match")))
   }
 
-  test("LofNoveltyScore == the retired UDF scorer, bit-identical") {
-    val rnd = new scala.util.Random(13)
-    val dim = 5
-    val train = (0 until 300).map(i =>
-      (i.toLong, Seq.fill(dim)(rnd.nextGaussian() * 3)))
-      .toDF("id", "features")
-    val model = graft.ml.Lof.fitNovelty(train, "id", "features", k = 15)
-    // score a DIFFERENT slice (novelty semantics) including far outliers
-    val unseen = ((0 until 200).map(i =>
-        (1000L + i, Seq.fill(dim)(rnd.nextGaussian() * 3))) ++
-      (0 until 5).map(i => (2000L + i, Seq.fill(dim)(25.0 + rnd.nextGaussian()))))
-      .toDF("id", "features")
-    val both = unseen.select(
-        model.scoreCol(col("features")).as("native"),
-        model.scoreColUdf(col("features")).as("udf"))
-      .collect()
+  /** Every row of `df` scores `==` under the native expression and the
+    * UDF, on the path `confs` selects. */
+  private def assertSameAsUdf(confs: Map[String, String], df: DataFrame,
+                              native: Column, udf: Column): Unit = {
+    val both = onPath(confs)(df.select(native.as("native"), udf.as("udf")))
+    assert(both.length == df.count())
     both.foreach { r =>
       assert(r.getDouble(0) == r.getDouble(1),
         s"native ${r.getDouble(0)} != udf ${r.getDouble(1)}")
     }
-    // model-mismatch guard: short vector fails loudly
-    val short = Seq((1L, Seq(0.5))).toDF("id", "features")
-    val e = intercept[Exception] {
-      short.select(model.scoreCol(col("features"))).collect()
-    }
-    assert(e.getMessage.contains("reference model does not match") ||
-      Option(e.getCause).exists(_.getMessage.contains("reference model does not match")))
   }
 
-  test("PcaReconScore == the retired UDF scorer, bit-identical") {
-    val rnd = new scala.util.Random(29)
-    val dim = 7
-    val train = (0 until 250).map { i =>
-      // rank-2 structure + noise so components are meaningful
-      val a = rnd.nextGaussian(); val b = rnd.nextGaussian()
-      (i.toLong, Seq.tabulate(dim)(j => a * (j + 1) + b * math.sin(j) +
-        0.1 * rnd.nextGaussian()))
-    }.toDF("id", "features")
-    val model = graft.ml.PcaRecon.fit(train, "features", k = 3)
-    val both = train.select(
-        model.scoreCol(col("features")).as("native"),
-        model.scoreColUdf(col("features")).as("udf"))
-      .collect()
-    both.foreach { r =>
-      assert(r.getDouble(0) == r.getDouble(1),
-        s"native ${r.getDouble(0)} != udf ${r.getDouble(1)}")
+  for ((path, confs) <- scorePaths) {
+    test(s"IForestScoreSamples == the r1-r5 UDF scorer, bit-identical$path") {
+      val rnd = new scala.util.Random(7)
+      val dim = 6
+      val rows = (0 until 400).map(i =>
+        (i.toLong, Seq.fill(dim)(rnd.nextGaussian() * 10)))
+      val df = rows.toDF("id", "features")
+      val m = graft.ml.IsolationForest.fit(df, "features",
+        nTrees = 50, subsample = 64, contamination = 0.02, seed = 11L)
+      val both = onPath(confs)(df.select(
+          m.scoreSamplesCol(col("features")).as("native"),
+          m.scoreSamplesUdfCol(col("features")).as("udf")))
+      both.foreach { r =>
+        assert(r.getDouble(0) == r.getDouble(1),
+          s"native ${r.getDouble(0)} != udf ${r.getDouble(1)}")
+      }
+      // model-mismatch guard: vector narrower than the widest split
+      // feature fails loudly (UnsafeArrayData would read garbage)
+      val short = Seq((1L, Seq(0.5))).toDF("id", "features")
+      val e = intercept[Exception] {
+        onPath(confs)(short.select(m.scoreSamplesCol(col("features"))))
+      }
+      assert(e.getMessage.contains("forest model does not match") ||
+        Option(e.getCause).exists(_.getMessage.contains("forest model does not match")))
     }
-    val short = Seq((1L, Seq(0.5))).toDF("id", "features")
-    val e = intercept[Exception] {
-      short.select(model.scoreCol(col("features"))).collect()
+
+    test(s"LofNoveltyScore == the retired UDF scorer, bit-identical$path") {
+      val rnd = new scala.util.Random(13)
+      val dim = 5
+      val train = (0 until 300).map(i =>
+        (i.toLong, Seq.fill(dim)(rnd.nextGaussian() * 3)))
+        .toDF("id", "features")
+      val model = graft.ml.Lof.fitNovelty(train, "id", "features", k = 15)
+      // score a DIFFERENT slice (novelty semantics) including far outliers
+      val unseen = ((0 until 200).map(i =>
+          (1000L + i, Seq.fill(dim)(rnd.nextGaussian() * 3))) ++
+        (0 until 5).map(i => (2000L + i, Seq.fill(dim)(25.0 + rnd.nextGaussian()))))
+        .toDF("id", "features")
+      val both = onPath(confs)(unseen.select(
+          model.scoreCol(col("features")).as("native"),
+          model.scoreColUdf(col("features")).as("udf")))
+      both.foreach { r =>
+        assert(r.getDouble(0) == r.getDouble(1),
+          s"native ${r.getDouble(0)} != udf ${r.getDouble(1)}")
+      }
+      // model-mismatch guard: short vector fails loudly
+      val short = Seq((1L, Seq(0.5))).toDF("id", "features")
+      val e = intercept[Exception] {
+        onPath(confs)(short.select(model.scoreCol(col("features"))))
+      }
+      assert(e.getMessage.contains("reference model does not match") ||
+        Option(e.getCause).exists(_.getMessage.contains("reference model does not match")))
     }
-    assert(e.getMessage.contains("component model does not match") ||
-      Option(e.getCause).exists(_.getMessage.contains("component model does not match")))
+
+    test(s"PcaReconScore == the retired UDF scorer, bit-identical$path") {
+      val rnd = new scala.util.Random(29)
+      val dim = 7
+      val train = (0 until 250).map { i =>
+        // rank-2 structure + noise so components are meaningful
+        val a = rnd.nextGaussian(); val b = rnd.nextGaussian()
+        (i.toLong, Seq.tabulate(dim)(j => a * (j + 1) + b * math.sin(j) +
+          0.1 * rnd.nextGaussian()))
+      }.toDF("id", "features")
+      val model = graft.ml.PcaRecon.fit(train, "features", k = 3)
+      val withZero = train.union(Seq((-1L, Seq.fill(dim)(0.0))).toDF("id", "features"))
+      val both = onPath(confs)(withZero.select(
+          model.scoreCol(col("features")).as("native"),
+          model.scoreColUdf(col("features")).as("udf")))
+      both.foreach { r =>
+        assert(r.getDouble(0) == r.getDouble(1),
+          s"native ${r.getDouble(0)} != udf ${r.getDouble(1)}")
+      }
+      val short = Seq((1L, Seq(0.5))).toDF("id", "features")
+      val e = intercept[Exception] {
+        onPath(confs)(short.select(model.scoreCol(col("features"))))
+      }
+      assert(e.getMessage.contains("component model does not match") ||
+        Option(e.getCause).exists(_.getMessage.contains("component model does not match")))
+    }
+
+    test(s"LofNoveltyScore ties: duplicated and equidistant reference points == UDF$path") {
+      // reference points on the integer grid {0,1,2}³, each repeated
+      // 1-4 times: kdist ties, zero distances and heap ties everywhere
+      val grid = for (a <- 0 to 2; b <- 0 to 2; c <- 0 to 2)
+        yield Seq(a.toDouble, b.toDouble, c.toDouble)
+      val train = grid.zipWithIndex.flatMap { case (p, i) => Seq.fill(1 + i % 4)(p) }
+        .zipWithIndex.map { case (p, id) => (id.toLong, p) }
+        .toDF("id", "features")
+      val model = graft.ml.Lof.fitNovelty(train, "id", "features", k = 6)
+      // cell centres sit equidistant from 8 grid points, edge and face
+      // midpoints from 2 and 4; grid points and the origin hit duplicates
+      val halves = for (a <- Seq(0.5, 1.5); b <- Seq(0.5, 1.5); c <- Seq(0.5, 1.5))
+        yield Seq(a, b, c)
+      val queries = (halves ++ Seq(Seq(1.0, 1.0, 0.5), Seq(0.5, 0.0, 1.5),
+          Seq(0.5, 0.5, 2.0)) ++ grid ++ Seq(Seq(0.0, 0.0, 0.0)))
+        .zipWithIndex.map { case (q, i) => (i.toLong, q) }.toDF("id", "features")
+      val centre = Array(0.5, 0.5, 0.5)
+      val atCorner = model.points.count(p =>
+        p.indices.map(j => (p(j) - centre(j)) * (p(j) - centre(j))).sum == 0.75)
+      assert(atCorner > model.k, s"only $atCorner reference points tie at the k-th distance")
+      assertSameAsUdf(confs, queries,
+        model.scoreCol(col("features")), model.scoreColUdf(col("features")))
+      // the fitted kdist/lrd are near-uniform on a grid, so which tied
+      // point the heap keeps barely shows; distinct per-point values do
+      val n = model.points.length
+      val marked = model.copy(kdist = Array.tabulate(n)(i => 0.5 + 0.013 * i),
+        lrd = Array.tabulate(n)(i => 1.0 + 0.37 * i))
+      assertSameAsUdf(confs, queries,
+        marked.scoreCol(col("features")), marked.scoreColUdf(col("features")))
+    }
+
+    test(s"IForestScoreSamples: a value on a split threshold goes right, == UDF$path") {
+      import graft.ml.{IForestModel, ITree, IsolationForest}
+      // root: x0 < 0.5 ? leaf(3) : (x1 < 0 ? leaf(1) : leaf(2))
+      val tree = ITree(feature = Array(0, -1, 1, -1, -1),
+        threshold = Array(0.5, 0.0, 0.0, 0.0, 0.0),
+        left = Array(1, -1, 3, -1, -1), right = Array(2, -1, 4, -1, -1),
+        size = Array(6, 3, 3, 1, 2))
+      val m = IForestModel(Array(tree), psi = 6, offset = 0.0)
+      def score(pathLen: Double) = -math.pow(2.0, -pathLen / IsolationForest.c(6))
+      val cases = Seq(
+        Seq(0.5, 0.0) -> score(2.0 + IsolationForest.c(2)),   // right, right
+        Seq(0.5, -0.1) -> score(2.0),                          // right, left
+        Seq(0.4, 0.0) -> score(1.0 + IsolationForest.c(3)),   // left
+        Seq(0.0, 0.0) -> score(1.0 + IsolationForest.c(3)))   // all-zero: left
+      val got = onPath(confs)(cases.map(_._1).zipWithIndex
+          .map { case (x, i) => (i.toLong, x) }.toDF("id", "features")
+          .select(col("id"), m.scoreSamplesCol(col("features"))))
+        .sortBy(_.getLong(0)).map(_.getDouble(1)).toSeq
+      assert(got == cases.map(_._2))
+      // every split of a small fitted forest, hit exactly, plus the origin
+      val rnd = new scala.util.Random(5)
+      val dim = 4
+      val df = (0 until 300).map(i => (i.toLong, Seq.fill(dim)(rnd.nextGaussian())))
+        .toDF("id", "features")
+      val fitted = IsolationForest.fit(df, "features", nTrees = 5, subsample = 32, seed = 3L)
+      val onSplit = fitted.trees.toSeq.flatMap(t => t.feature.indices.filter(t.feature(_) >= 0)
+        .map(n => Seq.tabulate(dim)(j => if (j == t.feature(n)) t.threshold(n) else rnd.nextGaussian())))
+      val inputs = (onSplit :+ Seq.fill(dim)(0.0)).zipWithIndex
+        .map { case (x, i) => (i.toLong, x) }.toDF("id", "features")
+      assertSameAsUdf(confs, inputs,
+        fitted.scoreSamplesCol(col("features")), fitted.scoreSamplesUdfCol(col("features")))
+    }
   }
 
   test("CosineTopK == naive rounded-rank reference on random shards incl. ties") {

@@ -599,4 +599,22 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(plan.contains("TakeOrderedAndProject"),
       s"top-k must be TakeOrdered:\n${plan.take(800)}")
   }
+
+  test("Ensemble.scoreBatch generated code calls the three score kernels and loops over no model") {
+    import org.apache.spark.sql.execution.debug.codegenStringSeq
+    val fitted = graft.ml.Ensemble.fit(spark, sf, graft.ml.Ensemble.Config(
+      nTrees = 10, subsample = 64, pcaK = 3, lofK = 5, lofRefPoints = 100))
+    val q = graft.ml.Ensemble.scoreBatch(graft.Tables.events(spark, sf), fitted)
+    q.collect()  // the adaptive plan holds its codegen stages once executed
+    val src = codegenStringSeq(q.queryExecution.executedPlan).map(_._2).mkString("\n")
+    for (k <- Seq("iforest", "lof", "pca"))
+      assert(src.contains(s"graft.functions.ScoreKernels.$k("), s"no $k kernel call")
+    assert(!src.contains("lofSiftDown"))
+    // a kernel loop pasted into the stage indexes a model array in place;
+    // the kernel calls only pass the arrays on
+    val indexed = """/\* (if|lof|pca)[A-Za-z]+ \*/\)\[""".r.findAllIn(src).toSeq
+    assert(indexed.isEmpty, s"model arrays indexed in generated code: ${indexed.distinct}")
+    assert(src.contains("/* lofPoints */") && src.contains("/* ifFeature */") &&
+      src.contains("/* pcaComponents */"))
+  }
 }
