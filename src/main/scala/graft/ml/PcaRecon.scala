@@ -59,46 +59,17 @@ object PcaRecon {
 
   /** Fit top-k principal components of `featuresCol` (array<double>).
     *
-    * The covariance is computed distributed (one treeAggregate of
-    * mean + second-moment sums — d² state, no shuffle of rows); its
-    * eigendecomposition runs on the driver with a cyclic Jacobi
-    * iteration. We deliberately do NOT use MLlib's PCA here: it routes
-    * the d×d SVD through F2J LAPACK `dgesdd`, whose `dlascl` scaling
-    * loop can spin forever (observed: 20 min of CPU on an 18×18
-    * matrix during a concurrent fit). Jacobi on a small symmetric
-    * matrix is exact, deterministic, and loop-bounded. */
+    * The covariance comes from `momentSums` (one job, d² state, no
+    * shuffle of rows); its eigendecomposition runs on the driver with
+    * a cyclic Jacobi iteration. We deliberately do NOT use MLlib's PCA
+    * here: it routes the d×d SVD through F2J LAPACK `dgesdd`, whose
+    * `dlascl` scaling loop can spin forever (observed: 20 min of CPU on
+    * an 18×18 matrix during a concurrent fit). Jacobi on a small
+    * symmetric matrix is exact and loop-bounded, and the moment sums
+    * are merged in a fixed order, so the whole fit is deterministic:
+    * two fits over the same partitioning give `==` components. */
   def fit(df: DataFrame, featuresCol: String, k: Int): PcaReconModel = {
-    val rows = df.select(col(featuresCol)).rdd.map(_.getSeq[Double](0).toArray)
-    val (n, sum, outer) = rows.treeAggregate(
-      (0L, null: Array[Double], null: Array[Array[Double]]))(
-      seqOp = { case ((cnt, s0, m0), x) =>
-        val d = x.length
-        val s = if (s0 == null) new Array[Double](d) else s0
-        val m = if (m0 == null) Array.ofDim[Double](d, d) else m0
-        var i = 0
-        while (i < d) {
-          s(i) += x(i)
-          var j = i
-          while (j < d) { m(i)(j) += x(i) * x(j); j += 1 }
-          i += 1
-        }
-        (cnt + 1, s, m)
-      },
-      combOp = {
-        case ((c1, s1, m1), (c2, s2, m2)) =>
-          if (s1 == null) (c2, s2, m2)
-          else if (s2 == null) (c1, s1, m1)
-          else {
-            var i = 0
-            while (i < s1.length) {
-              s1(i) += s2(i)
-              var j = i
-              while (j < s1.length) { m1(i)(j) += m2(i)(j); j += 1 }
-              i += 1
-            }
-            (c1 + c2, s1, m1)
-          }
-      })
+    val (n, sum, outer) = momentSums(df, featuresCol)
     require(n > 1, s"need >1 row to fit PCA, got $n")
     val d = sum.length
     val kk = math.min(k, d)
@@ -113,6 +84,51 @@ object PcaRecon {
     val order = eigVals.zipWithIndex.sortBy(-_._1).map(_._2).take(kk)
     val comps = order.map(c => Array.tabulate(d)(i => eigVecs(i)(c)))
     PcaReconModel(comps, d, kk)
+  }
+
+  /** (row count, per-column sums, upper triangle of Σ x·xᵀ) of
+    * `featuresCol` in one job: each partition folds its rows to a
+    * partial, and the driver merges the partials in partition order.
+    * Merged in task-completion order, as `treeAggregate` does, the
+    * floating sums would differ in their last bits between runs. */
+  private[graft] def momentSums(df: DataFrame, featuresCol: String)
+      : (Long, Array[Double], Array[Array[Double]]) = {
+    type Moments = (Long, Array[Double], Array[Array[Double]])
+    val zero: Moments = (0L, null, null)
+    val add: (Moments, Array[Double]) => Moments = {
+      case ((cnt, s0, m0), x) =>
+        val d = x.length
+        val s = if (s0 == null) new Array[Double](d) else s0
+        val m = if (m0 == null) Array.ofDim[Double](d, d) else m0
+        var i = 0
+        while (i < d) {
+          s(i) += x(i)
+          var j = i
+          while (j < d) { m(i)(j) += x(i) * x(j); j += 1 }
+          i += 1
+        }
+        (cnt + 1, s, m)
+    }
+    val merge: (Moments, Moments) => Moments = {
+      case ((c1, s1, m1), (c2, s2, m2)) =>
+        if (s1 == null) (c2, s2, m2)
+        else if (s2 == null) (c1, s1, m1)
+        else {
+          var i = 0
+          while (i < s1.length) {
+            s1(i) += s2(i)
+            var j = i
+            while (j < s1.length) { m1(i)(j) += m2(i)(j); j += 1 }
+            i += 1
+          }
+          (c1 + c2, s1, m1)
+        }
+    }
+    df.select(col(featuresCol)).rdd
+      .mapPartitions(rows => Iterator(
+        rows.map(_.getSeq[Double](0).toArray).foldLeft(zero)(add)))
+      .collect() // in partition order
+      .foldLeft(zero)(merge)
   }
 
   /** Cyclic Jacobi eigendecomposition of a symmetric matrix:

@@ -319,7 +319,6 @@ object Ivf {
                targetCell: Int = 32,
                maxFlatNlist: Int = 4096,
                cellCap: Int = 512,
-               probeSplit: Option[(Int, Int)] = None,
                keepIsolated: Boolean = false): DataFrame = {
     val e = emb.select(col(idCol).as("vec_id"),
       col(vecCol).cast("array<double>").as("f"))
@@ -337,8 +336,8 @@ object Ivf {
         // vectors): two-level residual quantizer — nc·nc effective
         // cells keep occupancy at targetCell while fit and per-row
         // probe stay O(nc). Probe budget: npc = ~nprobe/2 coarse cells
-        // × npf = 3 fine cells ≈ 1.5x the flat path's cell count —
-        // the r8 ProbeSoak knn2sweep showed fine-cell BOUNDARIES are
+        // × npf = 3 fine cells ≈ 1.5x the flat path's cell count — an
+        // r8 sweep of (npc, npf) splits showed fine-cell BOUNDARIES are
         // where product cells lose true neighbors (npf 2 → 3 lifted
         // real-table recall 0.73 → 0.92 at 9 cells, while 12 cells at
         // npf=2 managed only 0.84), and the extra candidates stay
@@ -349,8 +348,7 @@ object Ivf {
           s"knnGraph: $nlistNeeded cells needs nc=$nc > 4096 coarse " +
             "centroids (~536M vectors at targetCell=32) — shard the " +
             "corpus and merge per-node top-k")
-        val (npc, npf) = probeSplit.getOrElse(
-          (math.max(2, (nprobe + 1) / 2), 3))
+        val (npc, npf) = (math.max(2, (nprobe + 1) / 2), 3)
         val sample = math.min(math.max(8192, 20 * nc), 32768)
         val c2 = fitCentroids2(e, "vec_id", "f", nc, nc, sampleSize = sample)
         e.select(col("vec_id"), col("f"),

@@ -388,9 +388,10 @@ object LinkGraph {
     * (degree 10^6) yields ~10^12 candidates by itself; under degree
     * ordering every edge points INTO the hub (outdeg 0), and the
     * classic arboricity bound caps total candidates at O(m^1.5)
-    * regardless of skew — the `ProbeSoak triorient` case measures
-    * the collapse on a planted hub. Same plan shape: two self-joins
-    * of the oriented list plus the two host-keyed degree joins. */
+    * regardless of skew — LinkGraphSpec's `orientByDegree` case
+    * counts the collapse on a planted hub. Same plan shape: two
+    * self-joins of the oriented list plus the two host-keyed degree
+    * joins. */
   def triangleCounts(edges: DataFrame): DataFrame = {
     val und = edges.select(
         least(col("src_host"), col("dst_host")).as("a"),

@@ -137,7 +137,7 @@ object Pq {
 
   /** The query-side ADC lookup table: a flat m·ksub array,
     * `lut[s·ksub + c]` = ‖query_sub_s − codebook_s(c)‖². */
-  private[graft] def lutCol(qvec: Column, model: Model): Column =
+  private def lutCol(qvec: Column, model: Model): Column =
     array((0 until model.m).flatMap(s =>
       model.codebooks(s).map(c =>
         graft.functions.ArrayMath.sqDiffSum(subVec(qvec, model, s),
@@ -153,7 +153,7 @@ object Pq {
     * (one pass over the m codes into the row's query LUT; replaced a
     * 2·m `element_at` chain that cost ~80 µs/row on the r5 soak,
     * `PLANS.md` "r5 scale soak"). Never a dim-length loop. */
-  private[graft] def adcDist(model: Model): Column =
+  private def adcDist(model: Model): Column =
     graft.functions.ArrayMath.adcDistance(col("codes"), col("__lut"), model.ksub)
 
   def topk(encoded: DataFrame, queries: DataFrame, idCol: String,

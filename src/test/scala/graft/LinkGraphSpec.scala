@@ -236,6 +236,14 @@ class LinkGraphSpec extends AnyFunSuite {
     assert(or.length == 11) // orientation is a bijection on edges
     assert(or.filter(p => p._1 == "mm" || p._2 == "mm")
       .forall(_._2 == "mm"), s"hub edge oriented outward: ${or.toSeq}")
+    // wedges (x -> mm, mm -> y) through the hub: indeg(mm)·outdeg(mm)
+    // candidates of the wedge join. Lexicographic orientation (a -> b,
+    // a < b) gives n² of them; degree orientation none.
+    def hubWedges(es: Seq[(String, String)]): Int =
+      es.count(_._2 == "mm") * es.count(_._1 == "mm")
+    val lex = und.collect().map(r => (r.getString(0), r.getString(1))).toSeq
+    assert(hubWedges(lex) >= 5 * 5, s"lexicographic hub wedges: ${hubWedges(lex)}")
+    assert(hubWedges(or.toSeq) == 0)
     // wedge candidates through the hub vanish: no oriented edge LEAVES
     // mm, so the join key e2.x = e1.y never matches y = mm pairs
     val t = LinkGraph.triangleCounts(e)

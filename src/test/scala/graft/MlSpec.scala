@@ -109,6 +109,25 @@ class MlSpec extends AnyFunSuite {
     assert(maxErr < 1e-9, s"full-rank PCA should reconstruct, got $maxErr")
   }
 
+  test("pca recon: two fits over 16 partitions give == components and moment sums") {
+    val rnd = new scala.util.Random(5)
+    // magnitudes over nine decades: any change in the order partial
+    // sums merge in shows in the last bits
+    val df = (0 until 4000).map { i =>
+      (i.toLong, Seq.fill(6)(rnd.nextGaussian() * math.pow(10, rnd.nextInt(9) - 3)))
+    }.toDF("id", "features").repartition(16).localCheckpoint()
+    assert(df.rdd.getNumPartitions == 16)
+    val fits = (1 to 3).map(_ => PcaRecon.fit(df, "features", 3))
+    fits.tail.foreach { f =>
+      assert(f.components.map(_.toSeq).toSeq == fits.head.components.map(_.toSeq).toSeq)
+    }
+    val (n1, sum1, outer1) = PcaRecon.momentSums(df, "features")
+    val (n2, sum2, outer2) = PcaRecon.momentSums(df, "features")
+    assert(n1 == 4000 && n2 == 4000)
+    assert(sum1.toSeq == sum2.toSeq)
+    assert(outer1.map(_.toSeq).toSeq == outer2.map(_.toSeq).toSeq)
+  }
+
   test("lof exact: planted outliers get LOF >> 1, inliers ~ 1") {
     val sample = planted.filter(col("id") % 2 === 0 || col("is_anomaly"))
     val lof = Lof.exact(sample, "id", "features", 10)

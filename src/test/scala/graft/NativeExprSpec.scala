@@ -25,6 +25,42 @@ class NativeExprSpec extends AnyFunSuite {
 
   private def tokens = split(trim(col("text")), "\\s+")
 
+  // A native expression runs on two paths: generated code inside a
+  // whole-stage stage, and interpreted `nullSafeEval`. Each case that
+  // loops over `evalPaths` runs once per path. Both exclude
+  // ConvertToLocalRelation, which would otherwise evaluate a projection
+  // over a local frame at planning time, interpreted; the codegen path also
+  // turns off the silent fallback to interpreted evaluation.
+  private val localFold =
+    "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation"
+  private val evalPaths: Seq[(String, Map[String, String])] = Seq(
+    "" -> Map(
+      "spark.sql.optimizer.excludedRules" -> localFold,
+      "spark.sql.codegen.wholeStage" -> "true",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+      "spark.sql.codegen.fallback" -> "false"),
+    " [interpreted]" -> Map(
+      "spark.sql.optimizer.excludedRules" -> localFold,
+      "spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+
+  /** Collects `q` on the path `confs` selects, after checking from the
+    * physical plan that the path is the one taken. */
+  private def onPath(confs: Map[String, String])(q: => DataFrame): Array[Row] = {
+    val saved = confs.keys.map(k => k -> spark.conf.getOption(k))
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val df = q
+      val plan = df.queryExecution.executedPlan
+      val codegen = plan.exists(_.isInstanceOf[WholeStageCodegenExec])
+      assert(codegen == confs("spark.sql.codegen.wholeStage").toBoolean, plan.toString)
+      df.collect()
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("Shingles == array_distinct(transform(concat_ws)) on random docs") {
     val k = 3
     val native = corpus.select(col("doc_id"),
@@ -103,121 +139,130 @@ class NativeExprSpec extends AnyFunSuite {
       .forall(_.length == 32))
   }
 
-  test("SimHash64 codegen and interpreted eval agree on every doc") {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.catalyst.util.GenericArrayData
-    import org.apache.spark.sql.types.{ArrayType, StringType}
-    import org.apache.spark.unsafe.types.UTF8String
-    // column path (whole-stage codegen over rows)
-    val colPath = corpus.select(col("doc_id"),
-      TextHash.simhash64(tokens).as("sig")).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // direct interpreted eval of the same expression per doc
-    corpus.collect().foreach { r =>
-      val toks = r.getString(1).trim.split("\\s+")
-      val arr = new GenericArrayData(toks.map(t => UTF8String.fromString(t): Any))
-      val interp = graft.functions.SimHash64(
-        Literal(arr, ArrayType(StringType))).eval(null).asInstanceOf[Long]
-      assert(interp == colPath(r.getLong(0)), s"doc ${r.getLong(0)}")
+  for ((path, confs) <- evalPaths) {
+    test(s"SimHash64 codegen and interpreted eval agree on every doc$path") {
+      import org.apache.spark.sql.catalyst.expressions.Literal
+      import org.apache.spark.sql.catalyst.util.GenericArrayData
+      import org.apache.spark.sql.types.{ArrayType, StringType}
+      import org.apache.spark.unsafe.types.UTF8String
+      val colPath = onPath(confs)(corpus.select(col("doc_id"),
+        TextHash.simhash64(tokens).as("sig")))
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      // direct interpreted eval of the same expression per doc
+      corpus.collect().foreach { r =>
+        val toks = r.getString(1).trim.split("\\s+")
+        val arr = new GenericArrayData(toks.map(t => UTF8String.fromString(t): Any))
+        val interp = graft.functions.SimHash64(
+          Literal(arr, ArrayType(StringType))).eval(null).asInstanceOf[Long]
+        assert(interp == colPath(r.getLong(0)), s"doc ${r.getLong(0)}")
+      }
     }
   }
 
-  test("FuzzyMatchStats == layered filter/transform/levenshtein HOFs on random keys") {
-    val rnd2 = new scala.util.Random(19)
-    val alpha = "abcde "
-    def randKey(n: Int) = (0 until n).map(_ => alpha(rnd2.nextInt(alpha.length))).mkString
-    // small alphabet + short strings → plenty of within-budget pairs
-    val bench = (0 until 40).map(_ => randKey(3 + rnd2.nextInt(10))).distinct
-    val docs = (0 until 300).map(i => (i.toLong, randKey(1 + rnd2.nextInt(14))))
-      .toDF("doc_id", "c_key")
-    for (maxDist <- Seq(0, 2, 4)) {
-      val native = docs.select(col("doc_id"),
-        graft.functions.FuzzyMatch.stats(col("c_key"), bench, maxDist).as("st"))
-        .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
-      val layered = docs.select(col("doc_id"),
-        filter(
-          transform(
-            filter(lit(bench.toArray),
-              b => abs(length(b) - length(col("c_key"))) <= maxDist),
-            b => levenshtein(col("c_key"), b)),
-          d => d <= maxDist).as("ds"))
-        .collect().map { r =>
-          val ds = r.getSeq[Int](1)
-          r.getLong(0) -> Seq(ds.size, if (ds.isEmpty) -1 else ds.min)
-        }.toMap
-      assert(native == layered, s"maxDist=$maxDist")
-    }
-    // interpreted eval agrees with the column (codegen) path
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    val colPath = docs.select(col("doc_id"),
-      graft.functions.FuzzyMatch.stats(col("c_key"), bench, 2).as("st"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
-    docs.collect().foreach { r =>
-      val interp = graft.functions.FuzzyMatchStats(
-        Literal(org.apache.spark.unsafe.types.UTF8String.fromString(r.getString(1)),
-          org.apache.spark.sql.types.StringType), bench, 2)
-        .eval(null).asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-      assert(interp.toIntArray().toSeq == colPath(r.getLong(0)), s"doc ${r.getLong(0)}")
-    }
-  }
-
-  test("NearestCentroidCell == array_min(array(struct(sqDiffSum, idx))) incl. subspace offsets") {
-    import graft.functions.ArrayMath
-    val vrnd = new scala.util.Random(11)
-    val dim = 8
-    val vecs = (0 until 300).map { i =>
-      (i.toLong, Seq.fill(dim)(vrnd.nextGaussian()))
-    }.toDF("id", "v")
-    val cents = Array.fill(5)(Array.fill(dim)(vrnd.nextGaussian()))
-    // full-width assignment: native vs the struct-literal spelling
-    val structForm = array_min(array(cents.zipWithIndex.toSeq.map { case (c, i) =>
-      struct(ArrayMath.sqDiffSum(col("v"), typedLit(c.toSeq)).as("d"),
-             lit(i).as("cell"))
-    }: _*)).getField("cell")
-    val both = vecs.select(col("id"),
-        ArrayMath.nearestCell(col("v"), cents).as("native"),
-        structForm.as("struct")).collect()
-    both.foreach(r => assert(r.getInt(1) == r.getInt(2), s"id ${r.getLong(0)}"))
-    // subspace offset (the PQ form): offset 4, width-4 codebooks vs
-    // the slice + struct spelling
-    val books = Array.fill(5)(Array.fill(4)(vrnd.nextGaussian()))
-    val sliceForm = array_min(array(books.zipWithIndex.toSeq.map { case (c, i) =>
-      struct(ArrayMath.sqDiffSum(slice(col("v"), 5, 4), typedLit(c.toSeq)).as("d"),
-             lit(i).as("code"))
-    }: _*)).getField("code")
-    val sub = vecs.select(col("id"),
-        ArrayMath.nearestCell(col("v"), books, offset = 4).as("native"),
-        sliceForm.as("struct")).collect()
-    sub.foreach(r => assert(r.getInt(1) == r.getInt(2), s"id ${r.getLong(0)} (offset)"))
-    // interpreted eval agrees with codegen (filter pushdown runs it
-    // interpreted in some paths)
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.catalyst.util.GenericArrayData
-    import org.apache.spark.sql.types.{ArrayType, DoubleType}
-    val colPath = both.map(r => r.getLong(0) -> r.getInt(1)).toMap
-    vecs.collect().foreach { r =>
-      val arr = new GenericArrayData(r.getSeq[Double](1).toArray.map(_.asInstanceOf[Any]))
-      val interp = graft.functions.NearestCentroidCell(
-        Literal(arr, ArrayType(DoubleType)), cents, 0).eval(null).asInstanceOf[Int]
-      assert(interp == colPath(r.getLong(0)), s"interp id ${r.getLong(0)}")
+  for ((path, confs) <- evalPaths) {
+    test(s"FuzzyMatchStats == layered filter/transform/levenshtein HOFs on random keys$path") {
+      val rnd2 = new scala.util.Random(19)
+      val alpha = "abcde "
+      def randKey(n: Int) = (0 until n).map(_ => alpha(rnd2.nextInt(alpha.length))).mkString
+      // small alphabet + short strings → plenty of within-budget pairs
+      val bench = (0 until 40).map(_ => randKey(3 + rnd2.nextInt(10))).distinct
+      val docs = (0 until 300).map(i => (i.toLong, randKey(1 + rnd2.nextInt(14))))
+        .toDF("doc_id", "c_key")
+      for (maxDist <- Seq(0, 2, 4)) {
+        val native = onPath(confs)(docs.select(col("doc_id"),
+          graft.functions.FuzzyMatch.stats(col("c_key"), bench, maxDist).as("st")))
+          .map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
+        // the HOF reference is CodegenFallback: it never compiles into a
+        // whole-stage stage, so it is collected as is on both paths
+        val layered = docs.select(col("doc_id"),
+          filter(
+            transform(
+              filter(lit(bench.toArray),
+                b => abs(length(b) - length(col("c_key"))) <= maxDist),
+              b => levenshtein(col("c_key"), b)),
+            d => d <= maxDist).as("ds"))
+          .collect().map { r =>
+            val ds = r.getSeq[Int](1)
+            r.getLong(0) -> Seq(ds.size, if (ds.isEmpty) -1 else ds.min)
+          }.toMap
+        assert(native == layered, s"maxDist=$maxDist")
+      }
+      // direct interpreted eval agrees with the column path
+      import org.apache.spark.sql.catalyst.expressions.Literal
+      val colPath = onPath(confs)(docs.select(col("doc_id"),
+        graft.functions.FuzzyMatch.stats(col("c_key"), bench, 2).as("st")))
+        .map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
+      docs.collect().foreach { r =>
+        val interp = graft.functions.FuzzyMatchStats(
+          Literal(org.apache.spark.unsafe.types.UTF8String.fromString(r.getString(1)),
+            org.apache.spark.sql.types.StringType), bench, 2)
+          .eval(null).asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+        assert(interp.toIntArray().toSeq == colPath(r.getLong(0)), s"doc ${r.getLong(0)}")
+      }
     }
   }
 
-  test("AdcDistance == the element_at chain on random codes/LUTs") {
-    import graft.functions.ArrayMath
-    val arnd = new scala.util.Random(13)
-    val (m, ksub) = (16, 16)
-    val rows = (0 until 300).map { i =>
-      (i.toLong, Seq.fill(m)(arnd.nextInt(ksub)),
-        Seq.fill(m * ksub)(arnd.nextDouble()))
-    }.toDF("id", "codes", "__lut")
-    val chain = (0 until m).map(s =>
-      element_at(col("__lut"), element_at(col("codes"), s + 1) + lit(s * ksub + 1)))
-      .reduce(_ + _)
-    val got = rows.select(col("id"),
-        ArrayMath.adcDistance(col("codes"), col("__lut"), ksub).as("native"),
-        chain.as("chain")).collect()
-    got.foreach(r => assert(r.getDouble(1) == r.getDouble(2), s"id ${r.getLong(0)}"))
+  for ((path, confs) <- evalPaths) {
+    test(s"NearestCentroidCell == array_min(array(struct(sqDiffSum, idx))) incl. subspace offsets$path") {
+      import graft.functions.ArrayMath
+      val vrnd = new scala.util.Random(11)
+      val dim = 8
+      val vecs = (0 until 300).map { i =>
+        (i.toLong, Seq.fill(dim)(vrnd.nextGaussian()))
+      }.toDF("id", "v")
+      val cents = Array.fill(5)(Array.fill(dim)(vrnd.nextGaussian()))
+      // full-width assignment: native vs the struct-literal spelling
+      val structForm = array_min(array(cents.zipWithIndex.toSeq.map { case (c, i) =>
+        struct(ArrayMath.sqDiffSum(col("v"), typedLit(c.toSeq)).as("d"),
+               lit(i).as("cell"))
+      }: _*)).getField("cell")
+      val both = onPath(confs)(vecs.select(col("id"),
+          ArrayMath.nearestCell(col("v"), cents).as("native"),
+          structForm.as("struct")))
+      both.foreach(r => assert(r.getInt(1) == r.getInt(2), s"id ${r.getLong(0)}"))
+      // subspace offset (the PQ form): offset 4, width-4 codebooks vs
+      // the slice + struct spelling
+      val books = Array.fill(5)(Array.fill(4)(vrnd.nextGaussian()))
+      val sliceForm = array_min(array(books.zipWithIndex.toSeq.map { case (c, i) =>
+        struct(ArrayMath.sqDiffSum(slice(col("v"), 5, 4), typedLit(c.toSeq)).as("d"),
+               lit(i).as("code"))
+      }: _*)).getField("code")
+      val sub = onPath(confs)(vecs.select(col("id"),
+          ArrayMath.nearestCell(col("v"), books, offset = 4).as("native"),
+          sliceForm.as("struct")))
+      sub.foreach(r => assert(r.getInt(1) == r.getInt(2), s"id ${r.getLong(0)} (offset)"))
+      // direct interpreted eval agrees with the column path (filter
+      // pushdown runs it interpreted in some plans)
+      import org.apache.spark.sql.catalyst.expressions.Literal
+      import org.apache.spark.sql.catalyst.util.GenericArrayData
+      import org.apache.spark.sql.types.{ArrayType, DoubleType}
+      val colPath = both.map(r => r.getLong(0) -> r.getInt(1)).toMap
+      vecs.collect().foreach { r =>
+        val arr = new GenericArrayData(r.getSeq[Double](1).toArray.map(_.asInstanceOf[Any]))
+        val interp = graft.functions.NearestCentroidCell(
+          Literal(arr, ArrayType(DoubleType)), cents, 0).eval(null).asInstanceOf[Int]
+        assert(interp == colPath(r.getLong(0)), s"interp id ${r.getLong(0)}")
+      }
+    }
+  }
+
+  for ((path, confs) <- evalPaths) {
+    test(s"AdcDistance == the element_at chain on random codes/LUTs$path") {
+      import graft.functions.ArrayMath
+      val arnd = new scala.util.Random(13)
+      val (m, ksub) = (16, 16)
+      val rows = (0 until 300).map { i =>
+        (i.toLong, Seq.fill(m)(arnd.nextInt(ksub)),
+          Seq.fill(m * ksub)(arnd.nextDouble()))
+      }.toDF("id", "codes", "__lut")
+      val chain = (0 until m).map(s =>
+        element_at(col("__lut"), element_at(col("codes"), s + 1) + lit(s * ksub + 1)))
+        .reduce(_ + _)
+      val got = onPath(confs)(rows.select(col("id"),
+          ArrayMath.adcDistance(col("codes"), col("__lut"), ksub).as("native"),
+          chain.as("chain")))
+      got.foreach(r => assert(r.getDouble(1) == r.getDouble(2), s"id ${r.getLong(0)}"))
+    }
   }
 
   test("model-mismatch guards fail loudly instead of reading garbage") {
@@ -257,42 +302,6 @@ class NativeExprSpec extends AnyFunSuite {
     assert(e4.getMessage.contains("ragged"))
   }
 
-  // The three score expressions run on two paths: generated code inside
-  // a whole-stage stage, and interpreted `nullSafeEval`. Each
-  // kernel-vs-UDF case below runs once per path. Both exclude
-  // ConvertToLocalRelation, which would otherwise evaluate a projection
-  // over a local frame at planning time, interpreted; the codegen path also
-  // turns off the silent fallback to interpreted evaluation.
-  private val localFold =
-    "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation"
-  private val scorePaths: Seq[(String, Map[String, String])] = Seq(
-    "" -> Map(
-      "spark.sql.optimizer.excludedRules" -> localFold,
-      "spark.sql.codegen.wholeStage" -> "true",
-      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
-      "spark.sql.codegen.fallback" -> "false"),
-    " [interpreted]" -> Map(
-      "spark.sql.optimizer.excludedRules" -> localFold,
-      "spark.sql.codegen.wholeStage" -> "false",
-      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
-
-  /** Collects `q` on the path `confs` selects, after checking from the
-    * physical plan that the path is the one taken. */
-  private def onPath(confs: Map[String, String])(q: => DataFrame): Array[Row] = {
-    val saved = confs.keys.map(k => k -> spark.conf.getOption(k))
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
-      val df = q
-      val plan = df.queryExecution.executedPlan
-      val codegen = plan.exists(_.isInstanceOf[WholeStageCodegenExec])
-      assert(codegen == confs("spark.sql.codegen.wholeStage").toBoolean, plan.toString)
-      df.collect()
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   /** Every row of `df` scores `==` under the native expression and the
     * UDF, on the path `confs` selects. */
   private def assertSameAsUdf(confs: Map[String, String], df: DataFrame,
@@ -305,7 +314,7 @@ class NativeExprSpec extends AnyFunSuite {
     }
   }
 
-  for ((path, confs) <- scorePaths) {
+  for ((path, confs) <- evalPaths) {
     test(s"IForestScoreSamples == the r1-r5 UDF scorer, bit-identical$path") {
       val rnd = new scala.util.Random(7)
       val dim = 6
@@ -450,63 +459,67 @@ class NativeExprSpec extends AnyFunSuite {
     }
   }
 
-  test("CosineTopK == naive rounded-rank reference on random shards incl. ties") {
-    // quantized coordinates (multiples of 0.25) make rounded-cosine
-    // collisions common, exercising the (cos desc, id asc) tie-break
-    // and the BigDecimal-avoidance guard's boundary
-    val r = new scala.util.Random(11)
-    val dim = 8; val n = 300; val k = 7
-    val vecs = Array.fill(n, dim)(r.nextInt(8) * 0.25 - 1.0)
-    val ids = Array.tabulate(n)(i => (i * 3 + 1).toLong)
-    def round6(x: Double) = java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-    def cos(a: Array[Double], b: Array[Double]): Double = {
-      val dp = a.zip(b).map { case (x, y) => x * y }.sum
-      val den = math.sqrt(a.map(x => x * x).sum) * math.sqrt(b.map(x => x * x).sum)
-      if (den > 0) dp / den else 0.0
-    }
-    val df = ids.zip(vecs).toSeq.toDF("vec_id", "embedding")
-    val shard = graft.operators.AnnServe.fitShard(df)
-    val queries = ids.take(20).zip(vecs.take(20)).toSeq.toDF("vec_id", "embedding")
-    val got = graft.operators.AnnServe.topkRows(queries, shard, k)
-      .collect().map(x => (x.getLong(0), x.getLong(1), x.getDouble(2)))
-      .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).toSet).toMap
-    (0 until 20).foreach { qi =>
-      val qid = ids(qi)
-      val expect = ids.indices.filter(ids(_) != qid)
-        .map(i => (ids(i), round6(cos(vecs(qi), vecs(i)))))
-        .sortBy { case (id, c) => (-c, id) }.take(k).toSet
-      assert(got(qid) == expect, s"query $qid: ${got(qid)} vs $expect")
+  for ((path, confs) <- evalPaths) {
+    test(s"CosineTopK == naive rounded-rank reference on random shards incl. ties$path") {
+      // quantized coordinates (multiples of 0.25) make rounded-cosine
+      // collisions common, exercising the (cos desc, id asc) tie-break
+      // and the BigDecimal-avoidance guard's boundary
+      val r = new scala.util.Random(11)
+      val dim = 8; val n = 300; val k = 7
+      val vecs = Array.fill(n, dim)(r.nextInt(8) * 0.25 - 1.0)
+      val ids = Array.tabulate(n)(i => (i * 3 + 1).toLong)
+      def round6(x: Double) = java.math.BigDecimal.valueOf(x)
+        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+      def cos(a: Array[Double], b: Array[Double]): Double = {
+        val dp = a.zip(b).map { case (x, y) => x * y }.sum
+        val den = math.sqrt(a.map(x => x * x).sum) * math.sqrt(b.map(x => x * x).sum)
+        if (den > 0) dp / den else 0.0
+      }
+      val df = ids.zip(vecs).toSeq.toDF("vec_id", "embedding")
+      val shard = graft.operators.AnnServe.fitShard(df)
+      val queries = ids.take(20).zip(vecs.take(20)).toSeq.toDF("vec_id", "embedding")
+      val got = onPath(confs)(graft.operators.AnnServe.topkRows(queries, shard, k))
+        .map(x => (x.getLong(0), x.getLong(1), x.getDouble(2)))
+        .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).toSet).toMap
+      (0 until 20).foreach { qi =>
+        val qid = ids(qi)
+        val expect = ids.indices.filter(ids(_) != qid)
+          .map(i => (ids(i), round6(cos(vecs(qi), vecs(i)))))
+          .sortBy { case (id, c) => (-c, id) }.take(k).toSet
+        assert(got(qid) == expect, s"query $qid: ${got(qid)} vs $expect")
+      }
     }
   }
 
-  test("AdcTopK == naive rounded-rank reference on random codes incl. ties") {
-    val r = new scala.util.Random(13)
-    val m = 4; val ksub = 4; val dsub = 2; val n = 250; val k = 6
-    val books = Array.fill(m, ksub, dsub)(r.nextInt(4) * 0.5)
-    val codes = Array.fill(n * m)(r.nextInt(ksub).toByte)
-    val ids = Array.tabulate(n)(i => (i * 2 + 5).toLong)
-    val model = graft.operators.Pq.Model(m, ksub, dsub, books)
-    val shard = graft.operators.AnnServe.PqShard(ids, codes, model)
-    val qvecs = Array.fill(15, m * dsub)(r.nextInt(4) * 0.5)
-    val queries = ids.take(15).zip(qvecs).toSeq.toDF("vec_id", "embedding")
-    def round6(x: Double) = java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-    val got = graft.operators.AnnServe.pqTopkRows(queries, shard, k)
-      .collect().map(x => (x.getLong(0), x.getLong(1), x.getDouble(2)))
-      .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).toSet).toMap
-    (0 until 15).foreach { qi =>
-      val qid = ids(qi)
-      val expect = (0 until n).filter(ids(_) != qid).map { i =>
-        val dist = (0 until m).map { s =>
-          val c = codes(i * m + s) & 0xff
-          (0 until dsub).map { j =>
-            val d = qvecs(qi)(s * dsub + j) - books(s)(c)(j); d * d
+  for ((path, confs) <- evalPaths) {
+    test(s"AdcTopK == naive rounded-rank reference on random codes incl. ties$path") {
+      val r = new scala.util.Random(13)
+      val m = 4; val ksub = 4; val dsub = 2; val n = 250; val k = 6
+      val books = Array.fill(m, ksub, dsub)(r.nextInt(4) * 0.5)
+      val codes = Array.fill(n * m)(r.nextInt(ksub).toByte)
+      val ids = Array.tabulate(n)(i => (i * 2 + 5).toLong)
+      val model = graft.operators.Pq.Model(m, ksub, dsub, books)
+      val shard = graft.operators.AnnServe.PqShard(ids, codes, model)
+      val qvecs = Array.fill(15, m * dsub)(r.nextInt(4) * 0.5)
+      val queries = ids.take(15).zip(qvecs).toSeq.toDF("vec_id", "embedding")
+      def round6(x: Double) = java.math.BigDecimal.valueOf(x)
+        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+      val got = onPath(confs)(graft.operators.AnnServe.pqTopkRows(queries, shard, k))
+        .map(x => (x.getLong(0), x.getLong(1), x.getDouble(2)))
+        .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).toSet).toMap
+      (0 until 15).foreach { qi =>
+        val qid = ids(qi)
+        val expect = (0 until n).filter(ids(_) != qid).map { i =>
+          val dist = (0 until m).map { s =>
+            val c = codes(i * m + s) & 0xff
+            (0 until dsub).map { j =>
+              val d = qvecs(qi)(s * dsub + j) - books(s)(c)(j); d * d
+            }.sum
           }.sum
-        }.sum
-        (ids(i), round6(dist))
-      }.sortBy { case (id, d) => (d, id) }.take(k).toSet
-      assert(got(qid) == expect, s"query $qid: ${got(qid)} vs $expect")
+          (ids(i), round6(dist))
+        }.sortBy { case (id, d) => (d, id) }.take(k).toSet
+        assert(got(qid) == expect, s"query $qid: ${got(qid)} vs $expect")
+      }
     }
   }
 
