@@ -26,14 +26,20 @@ object Pipelines {
       suspiciousChannel: String = "purchase", // reference: "card"
       propsKeyThreshold: Int = 80)  // stands in for the location whitelist
 
-  /** The reference's entire non-ML scoring path (`api/app.py:230-259`
-    * minus model scores) over the `events` table:
-    * filter → profile agg → broadcast join → deviation → rules →
-    * gateway fusion (model scores = 0) → risk level.
-    *
-    * Returns one row per event, ordered by `event_id`, float columns
-    * rounded to 6 decimals for oracle parity.
-    */
+  /** The events binding of the three rules (`api/app.py:170-178`):
+    * large amount, suspicious channel with a high `props.k` (standing
+    * in for the card/location rule) and odd hour. The column defaults
+    * read the raw `events` schema. Returned as a triple because
+    * `q_rule_score` names each triggered part in its flags. */
+  def eventRules(cfg: EventScoringConfig, amount: Column = col("value"),
+                 channel: Column = col("event_type"), props: Column = col("props"),
+                 hourOfDay: Column = hour(col("ts"))): (Column, Column, Column) = (
+    Scoring.ruleLargeAmount(amount, cfg.largeAmount),
+    when(lower(channel) === cfg.suspiciousChannel &&
+           get_json_object(props, "$.k").cast("int") > cfg.propsKeyThreshold,
+         lit(Scoring.RuleLocationWeight)).otherwise(lit(0.0)),
+    Scoring.ruleOddHour(hourOfDay, cfg.oddHourCutoff))
+
   /** The scoring transform alone (no source, no sort): rules →
     * deviation → gateway fusion → risk over an events frame already
     * joined to its customer profile (`cust_avg`). Works identically on
@@ -41,31 +47,11 @@ object Pipelines {
     * (`streaming.ScoreStream`) reuses it verbatim. */
   def applyScoring(joined: DataFrame,
                    cfg: EventScoringConfig = EventScoringConfig()): DataFrame = {
-    val r1 = Scoring.ruleLargeAmount(col("value"), cfg.largeAmount)
-    val r2 = when(lower(col("event_type")) === cfg.suspiciousChannel &&
-                    get_json_object(col("props"), "$.k").cast("int") > cfg.propsKeyThreshold,
-                  lit(Scoring.RuleLocationWeight)).otherwise(lit(0.0))
-    val r3 = Scoring.ruleOddHour(hour(col("ts")), cfg.oddHourCutoff)
-
-    // Staged intermediate columns, NOT one nested expression: fusion
-    // references rule/dev/base several times, and inlining them (what a
-    // single select would do) blows the codegen'd Project up ~16× —
-    // measured 23 s of Janino compile on the flagship. Multi-stage
-    // projections keep each expression defined once; CollapseProject
-    // leaves non-cheap multiply-referenced aliases alone.
+    val (r1, r2, r3) = eventRules(cfg)
     joined
-      .withColumn("__rule", Scoring.ruleScore(r1, r2, r3))
-      .withColumn("__dev", Scoring.deviation(col("value"), col("cust_avg")))
-      .withColumn("__base",
-        lit(0.45) * col("__rule") +
-          lit(0.4) * (lit(0.4) * lit(0.0) + lit(0.3) * lit(0.0) + lit(0.3) * lit(0.0)) +
-          lit(0.15) * Scoring.clip01(col("__dev") / lit(2.0)))
-      .withColumn("__over",
-        when(col("__rule") >= 0.6 && col("__base") < 0.4, lit(0.5))
-          .otherwise(col("__base")))
-      .withColumn("__agg",
-        when(col("value") >= cfg.bigAmount, greatest(col("__over"), lit(0.85)))
-          .otherwise(col("__over")))
+      .transform(Scoring.fuseGateway(Scoring.ruleScore(r1, r2, r3),
+        Scoring.deviation(col("value"), col("cust_avg")), lit(0.0),
+        col("value"), cfg.bigAmount))
       .select(
         col("event_id"),
         round(col("__rule"), 6).as("rule_score"),
@@ -74,6 +60,14 @@ object Pipelines {
         Scoring.riskLevel(col("__agg")).as("risk_level"))
   }
 
+  /** The reference's entire non-ML scoring path (`api/app.py:230-259`
+    * minus model scores) over the `events` table:
+    * filter → profile agg → broadcast join → deviation → rules →
+    * gateway fusion (model scores = 0) → risk level.
+    *
+    * Returns one row per event, ordered by `event_id`, float columns
+    * rounded to 6 decimals for oracle parity.
+    */
   def scoreEvents(spark: SparkSession, sfDir: String,
                   cfg: EventScoringConfig = EventScoringConfig()): DataFrame = {
     val ev = Tables.events(spark, sfDir)
@@ -107,18 +101,9 @@ object Pipelines {
                                       cfg.cardChannel, cfg.safeLocations)
     val r3 = Scoring.ruleOddHour(hour(col("timestamp")), cfg.oddHourCutoff)
     Profiles.joinProfiles(tx, prof, "customer_id")
-      .withColumn("__rule", Scoring.ruleScore(r1, r2, r3))
-      .withColumn("__dev", Scoring.deviation(col("amount"), col("cust_avg")))
-      .withColumn("__mr", modelRisk)
-      .withColumn("__base",
-        lit(0.45) * col("__rule") + lit(0.4) * col("__mr") +
-          lit(0.15) * Scoring.clip01(col("__dev") / lit(2.0)))
-      .withColumn("__over",
-        when(col("__rule") >= 0.6 && col("__base") < 0.4, lit(0.5))
-          .otherwise(col("__base")))
-      .withColumn("__agg",
-        when(col("amount") >= cfg.amountHighRisk, greatest(col("__over"), lit(0.85)))
-          .otherwise(col("__over")))
+      .transform(Scoring.fuseGateway(Scoring.ruleScore(r1, r2, r3),
+        Scoring.deviation(col("amount"), col("cust_avg")), modelRisk,
+        col("amount"), cfg.amountHighRisk))
       .select(
         col("transaction_id"), col("amount"),
         round(col("__rule"), 6).as("rule_score"),
@@ -132,11 +117,7 @@ object Pipelines {
   def scoreEventsWorker(spark: SparkSession, sfDir: String,
                         cfg: EventScoringConfig = EventScoringConfig()): DataFrame = {
     val ev = Tables.events(spark, sfDir)
-    val r1 = Scoring.ruleLargeAmount(col("value"), cfg.largeAmount)
-    val r2 = when(lower(col("event_type")) === cfg.suspiciousChannel &&
-                    get_json_object(col("props"), "$.k").cast("int") > cfg.propsKeyThreshold,
-                  lit(Scoring.RuleLocationWeight)).otherwise(lit(0.0))
-    val r3 = Scoring.ruleOddHour(hour(col("ts")), cfg.oddHourCutoff)
+    val (r1, r2, r3) = eventRules(cfg)
     ev.withColumn("__rule", Scoring.ruleScore(r1, r2, r3))
       .withColumn("__agg",
         Scoring.fuseWorker(col("__rule"), lit(0.0), lit(0.0), lit(0.0)))

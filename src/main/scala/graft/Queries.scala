@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Profiles, Scoring, TimeFeatures, Validate, Windows}
 import graft.functions.VectorOps
@@ -35,13 +35,6 @@ object Queries {
   // channel=event_type, location≙props.k) -------------------------------
 
   private val cfg = Pipelines.EventScoringConfig()
-
-  private def evRules: (Column, Column, Column) = (
-    Scoring.ruleLargeAmount(col("value"), cfg.largeAmount),
-    when(lower(col("event_type")) === cfg.suspiciousChannel &&
-           get_json_object(col("props"), "$.k").cast("int") > cfg.propsKeyThreshold,
-         lit(Scoring.RuleLocationWeight)).otherwise(lit(0.0)),
-    Scoring.ruleOddHour(hour(col("ts")), cfg.oddHourCutoff))
 
   private val sqlRules =
     """CASE WHEN value > 100.0 THEN 0.6 ELSE 0.0 END
@@ -209,7 +202,7 @@ object Queries {
   private val qRuleScore = Q(
     "q_rule_score",
     (s, d) => {
-      val (r1, r2, r3) = evRules
+      val (r1, r2, r3) = Pipelines.eventRules(cfg)
       Tables.events(s, d)
         .select(col("event_id"),
                 round(Scoring.ruleScore(r1, r2, r3), 6).as("rule_score"),
@@ -380,16 +373,9 @@ object Queries {
                                         "1-urgent", Seq("BUILDING", "AUTOMOBILE"))
       val r3 = when(month(col("o_orderdate")) <= 2, lit(0.2)).otherwise(lit(0.0))
       joined
-        .withColumn("__rule", Scoring.ruleScore(r1, r2, r3))
-        .withColumn("__dev", Scoring.deviation(col("o_totalprice"), col("cust_avg")))
-        .withColumn("__base",
-          lit(0.45) * col("__rule") + lit(0.4) * (lit(0.4) * lit(0.0) + lit(0.3) * lit(0.0) + lit(0.3) * lit(0.0)) +
-            lit(0.15) * Scoring.clip01(col("__dev") / lit(2.0)))
-        .withColumn("__over",
-          when(col("__rule") >= 0.6 && col("__base") < 0.4, lit(0.5)).otherwise(col("__base")))
-        .withColumn("__agg",
-          when(col("o_totalprice") >= 450000.0, greatest(col("__over"), lit(0.85)))
-            .otherwise(col("__over")))
+        .transform(Scoring.fuseGateway(Scoring.ruleScore(r1, r2, r3),
+          Scoring.deviation(col("o_totalprice"), col("cust_avg")), lit(0.0),
+          col("o_totalprice"), 450000.0))
         .select(col("o_orderkey").as("transaction_id"),
                 round(col("__rule"), 6).as("rule_score"),
                 round(col("__dev"), 6).as("deviation_score"),

@@ -11,7 +11,8 @@ import graft.operators.Scoring
   *   fit:   preproc fit → 80/20 split (seed 42, `train.py:83`) →
   *          iForest + PCA-recon (AE substitute) + LOF-novelty fits →
   *          P97.5 AE threshold — all state constant-size.
-  *   score: enrich → features → 3 broadcast-model score columns →
+  *   score: bind → enrich → features → 3 native-expression model
+  *          scores (`functions.ArrayMath` kernels) →
   *          worker normalization (`python_scoring/app.py:188-196`) →
   *          rules + deviation → gateway fusion → risk level.
   *
@@ -27,7 +28,13 @@ object Ensemble {
       nTrees: Int = 200, subsample: Int = 256, contamination: Double = 0.01,
       pcaK: Int = 8, lofK: Int = 20, lofRefPoints: Int = 2000, seed: Long = 42L,
       largeAmount: Double = 100.0, bigAmount: Double = 250.0,
-      suspiciousChannel: String = "purchase", propsKeyThreshold: Int = 80)
+      suspiciousChannel: String = "purchase", propsKeyThreshold: Int = 80) {
+    /** The rule thresholds as the events rule set reads them (the odd-
+      * hour cutoff keeps its default). */
+    def rules: graft.Pipelines.EventScoringConfig = graft.Pipelines.EventScoringConfig(
+      largeAmount = largeAmount, bigAmount = bigAmount,
+      suspiciousChannel = suspiciousChannel, propsKeyThreshold = propsKeyThreshold)
+  }
 
   /** Everything scoring needs, all broadcast-safe constant-size state
     * plus the two small profile tables (broadcast at join time). */
@@ -91,27 +98,15 @@ object Ensemble {
 
   /** Score a raw events frame (batch OR streaming): requires the
     * events schema (`event_id, ts, user_id, event_type, value,
-    * props`). Pure transform — broadcast joins + expression/UDF
-    * columns, no aggregation over the scored frame itself. */
+    * props`). Pure transform — broadcast profile joins + native
+    * expressions (the model kernels are `functions.ArrayMath`
+    * expressions, no UDFs), no aggregation over the scored frame
+    * itself. */
   def scoreBatch(events: DataFrame, m: Fitted): DataFrame = {
-    val cfg = m.cfg
-    val enriched0 = events
-      .withColumn("amount", col("value"))
-      .withColumn("channel", col("event_type"))
-      .withColumn("location",
-        concat(lit("zone_"),
-               (get_json_object(col("props"), "$.k").cast("int") / lit(25)).cast("int")))
-    val enriched = graft.operators.Profiles.joinProfiles(
-        graft.operators.TimeFeatures.withTimeFeatures(enriched0, "ts"),
-        m.custProfile, "user_id", Some((m.merchProfile, "channel")))
-      .withColumn("cust_txn_count", col("cust_txn_count").cast("double"))
-    val feats = m.preproc.transform(enriched)
-
-    val r1 = Scoring.ruleLargeAmount(col("amount"), cfg.largeAmount)
-    val r2 = when(lower(col("channel")) === cfg.suspiciousChannel &&
-                    get_json_object(col("props"), "$.k").cast("int") > cfg.propsKeyThreshold,
-                  lit(Scoring.RuleLocationWeight)).otherwise(lit(0.0))
-    val r3 = Scoring.ruleOddHour(col("hour"))
+    val feats = m.preproc.transform(Features.enrichEvents(
+      Features.bindEvents(events), m.custProfile, m.merchProfile))
+    val (r1, r2, r3) = graft.Pipelines.eventRules(m.cfg.rules,
+      col("amount"), col("channel"), col("props"), col("hour"))
 
     feats
       .withColumn("__if_raw", m.ifModel.decisionCol(col("features")))
@@ -122,19 +117,10 @@ object Ensemble {
       .withColumn("__if", Scoring.invSigmoid(col("__if_raw")))
       .withColumn("__lof_n", Scoring.invSigmoid(col("__lof_raw") + lit(1.0)))
       .withColumn("__ae", Scoring.normAe(col("__ae_raw"), lit(m.aeThreshold)))
-      .withColumn("__rule", Scoring.ruleScore(r1, r2, r3))
-      .withColumn("__dev", Scoring.deviation(col("amount"), col("cust_avg_amount")))
-      .withColumn("__mr",
-        lit(0.4) * col("__if") + lit(0.3) * col("__lof_n") + lit(0.3) * col("__ae"))
-      .withColumn("__base",
-        lit(0.45) * col("__rule") + lit(0.4) * col("__mr") +
-          lit(0.15) * Scoring.clip01(col("__dev") / lit(2.0)))
-      .withColumn("__over",
-        when(col("__rule") >= 0.6 && col("__base") < 0.4, lit(0.5))
-          .otherwise(col("__base")))
-      .withColumn("__agg",
-        when(col("amount") >= cfg.bigAmount, greatest(col("__over"), lit(0.85)))
-          .otherwise(col("__over")))
+      .transform(Scoring.fuseGateway(Scoring.ruleScore(r1, r2, r3),
+        Scoring.deviation(col("amount"), col("cust_avg_amount")),
+        lit(0.4) * col("__if") + lit(0.3) * col("__lof_n") + lit(0.3) * col("__ae"),
+        col("amount"), m.cfg.bigAmount))
       .select(
         col("event_id").as("transaction_id"),
         round(col("__if"), 6).as("anomaly_score_iforest"),

@@ -17,21 +17,33 @@ object Features {
     "cust_avg_amount", "cust_txn_count", "merch_avg_amount")
   val CatCols: Seq[String] = Seq("channel", "location")
 
-  /** events → enriched modeling frame with the reference's column names. */
+  /** events → enriched modeling frame with the reference's column
+    * names; the profiles are computed over the bound frame. */
   def eventFeatures(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = Tables.events(spark, sfDir)
+    val ev = bindEvents(Tables.events(spark, sfDir))
+    enrichEvents(ev, Profiles.customerProfileFull(ev, "user_id", "amount"),
+                 Profiles.merchantProfile(ev, "channel", "amount"))
+  }
+
+  /** Raw events → the reference's `amount`/`channel`/`location`
+    * columns (FIXTURES.md §B1 mapping). */
+  def bindEvents(events: DataFrame): DataFrame =
+    events
       .withColumn("amount", col("value"))
       .withColumn("channel", col("event_type"))
       // props.k deciles stand in for the location categorical
       .withColumn("location",
         concat(lit("zone_"),
                (get_json_object(col("props"), "$.k").cast("int") / lit(25)).cast("int")))
-    val withTime = TimeFeatures.withTimeFeatures(ev, "ts")
-    val custProf = Profiles.customerProfileFull(ev, "user_id", "amount")
-    val merchProf = Profiles.merchantProfile(ev, "channel", "amount")
-    Profiles.joinProfiles(withTime, custProf, "user_id", Some((merchProf, "channel")))
+
+  /** Bound events → calendar features + the customer (`user_id`) and
+    * merchant (`channel`) profiles, broadcast-joined. Batch fit and
+    * `Ensemble.scoreBatch` (fitted profiles) share it. */
+  def enrichEvents(bound: DataFrame, custProfile: DataFrame,
+                   merchProfile: DataFrame): DataFrame =
+    Profiles.joinProfiles(TimeFeatures.withTimeFeatures(bound, "ts"),
+        custProfile, "user_id", Some((merchProfile, "channel")))
       .withColumn("cust_txn_count", col("cust_txn_count").cast("double"))
-  }
 
   /** The SAME feature assembly over the reference's own transactions
     * schema (`Sources.transactionsCsvSchema` — the shape of

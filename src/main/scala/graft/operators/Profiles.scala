@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Entity-profile aggregation + enrichment joins.
@@ -19,24 +19,6 @@ import org.apache.spark.sql.functions._
   * transaction.
   */
 object Profiles {
-
-  /** 90-day customer profile: `SELECT customer_id, AVG(amount),
-    * COUNT(*) ... WHERE ts >= now - INTERVAL 90 DAY GROUP BY customer_id`
-    * (`api/app.py:123-128`). `now` is a caller-supplied literal for
-    * determinism (never `current_timestamp()`). */
-  def customerProfile(tx: DataFrame, customerCol: String, amountCol: String,
-                      tsCol: String, now: Column, windowDays: Int): DataFrame =
-    tx.filter(col(tsCol) >= now - expr(s"INTERVAL $windowDays DAYS"))
-      .groupBy(col(customerCol))
-      .agg(avg(col(amountCol)).as("cust_avg_amount"),
-           count(lit(1)).as("cust_txn_count"))
-
-  /** Same profile + transactions-per-day frequency `COUNT(*)/window`
-    * (`python_scoring/app.py:121-125`). */
-  def customerProfileWithFreq(tx: DataFrame, customerCol: String, amountCol: String,
-                              tsCol: String, now: Column, windowDays: Int): DataFrame =
-    customerProfile(tx, customerCol, amountCol, tsCol, now, windowDays)
-      .withColumn("cust_freq", col("cust_txn_count") / lit(windowDays.toDouble))
 
   /** Merchant profile: `SELECT merchant_id, AVG(amount) ... GROUP BY
     * merchant_id` (`api/app.py:132-137`). Unwindowed, like the reference. */

@@ -1,13 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Rule evaluation, score normalization, fusion, and risk labeling.
   *
-  * Everything here is pure `Column` arithmetic (no UDFs), so Catalyst
-  * constant-folds the weights and the whole scoring pipeline stays inside
-  * one whole-stage-codegen span — this is the reason these are expressions
+  * Everything here is pure `Column` arithmetic (no UDFs; the gateway
+  * fusion stages it as `withColumn`s), so Catalyst constant-folds the
+  * weights and the whole scoring pipeline stays inside one
+  * whole-stage-codegen span — this is the reason these are expressions
   * rather than functions over collected rows.
   *
   * Reference: rules `api/app.py:167-179`, normalization
@@ -69,18 +70,35 @@ object Scoring {
   def normAe(x: Column, threshold: Column): Column =
     clip01(x / (threshold + lit(1e-9)))
 
-  /** Gateway fusion (`api/app.py:181-187`), canonical:
-    * model_risk = .4·if + .3·lof + .3·ae;
+  /** Gateway fusion (`api/app.py:181-187`), canonical, as a staged
+    * transform for `df.transform(...)`:
+    * model_risk = .4·if + .3·lof + .3·ae (0 when no models score);
     * agg = .45·rule + .4·model_risk + .15·clip(dev/2, 0, 1);
     * override agg = 0.5 if rule ≥ 0.6 ∧ agg < 0.4;
-    * floor agg = max(agg, 0.85) if amount ≥ bigAmount. */
-  def fuseGateway(rule: Column, scoreIf: Column, scoreLof: Column, scoreAe: Column,
-                  dev: Column, amount: Column, bigAmount: Double): Column = {
-    val modelRisk = lit(0.4) * scoreIf + lit(0.3) * scoreLof + lit(0.3) * scoreAe
-    val base = lit(0.45) * rule + lit(0.4) * modelRisk + lit(0.15) * clip01(dev / lit(2.0))
-    val overridden = when(rule >= 0.6 && base < 0.4, lit(0.5)).otherwise(base)
-    when(amount >= bigAmount, greatest(overridden, lit(0.85))).otherwise(overridden)
-  }
+    * floor agg = max(agg, 0.85) if amount ≥ bigAmount.
+    * Adds `__rule`, `__dev`, `__mr`, `__base`, `__over` and `__agg`;
+    * each caller selects and rounds its own output columns.
+    *
+    * Staged intermediate columns, NOT one nested expression: fusion
+    * references rule/dev/base several times, and inlining them (what a
+    * single select would do) blows the codegen'd Project up ~16× —
+    * measured 23 s of Janino compile on the flagship. Multi-stage
+    * projections keep each expression defined once; CollapseProject
+    * leaves non-cheap multiply-referenced aliases alone. */
+  def fuseGateway(rule: Column, dev: Column, modelRisk: Column, amount: Column,
+                  bigAmount: Double)(df: DataFrame): DataFrame =
+    df.withColumn("__rule", rule)
+      .withColumn("__dev", dev)
+      .withColumn("__mr", modelRisk)
+      .withColumn("__base",
+        lit(0.45) * col("__rule") + lit(0.4) * col("__mr") +
+          lit(0.15) * clip01(col("__dev") / lit(2.0)))
+      .withColumn("__over",
+        when(col("__rule") >= 0.6 && col("__base") < 0.4, lit(0.5))
+          .otherwise(col("__base")))
+      .withColumn("__agg",
+        when(amount >= bigAmount, greatest(col("__over"), lit(0.85)))
+          .otherwise(col("__over")))
 
   /** Worker fusion (`python_scoring/app.py:188-196`), divergent alt:
     * agg = .4·if + .3·lof + .3·ae + .45·rule (unclipped, can exceed 1). */

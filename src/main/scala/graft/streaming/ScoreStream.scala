@@ -36,25 +36,22 @@ object ScoreStream {
     * stream-static profile join → scoring transform. */
   def scored(events: DataFrame, custProfile: DataFrame,
              cfg: Pipelines.EventScoringConfig = Pipelines.EventScoringConfig(),
-             watermark: String = "1 day"): DataFrame = {
-    val deduped = events
-      .withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark("event_id")
+             watermark: String = "1 day"): DataFrame =
     Pipelines.applyScoring(
-      Profiles.joinProfiles(deduped, custProfile, "user_id"), cfg)
-  }
+      Profiles.joinProfiles(dedup(events, watermark), custProfile, "user_id"), cfg)
 
   /** FULL real-time inference (the north-star surface): watermarked,
     * deduped stream scored by the fitted ML ensemble — broadcast
     * models (forest/PCA/LOF-novelty/scaler) + stream-static profile
     * joins, the SAME `Ensemble.scoreBatch` transform as batch. */
   def scoredWithModels(events: DataFrame, fitted: graft.ml.Ensemble.Fitted,
-                       watermark: String = "1 day"): DataFrame = {
-    val deduped = events
-      .withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark("event_id")
-    graft.ml.Ensemble.scoreBatch(deduped, fitted)
-  }
+                       watermark: String = "1 day"): DataFrame =
+    graft.ml.Ensemble.scoreBatch(dedup(events, watermark), fitted)
+
+  /** The scoring paths' shared prefix: watermark on `ts`, then
+    * exactly-once on `event_id` within it. */
+  private def dedup(events: DataFrame, watermark: String): DataFrame =
+    events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark("event_id")
 
   /** Sliding event-time profile aggregate — the streaming form of the
     * 90-day `WHERE ts >= NOW() - 90 DAY` profile (`api/app.py:126`):
@@ -94,6 +91,17 @@ object ScoreStream {
   private def idempotentParquetSink(outDir: String)(batch: DataFrame, id: Long): Unit =
     batch.write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
 
+  /** The runners' one body: `scored` → idempotent sink, exactly-once
+    * by `checkpointDir`, under `trigger` (the engine default when
+    * `None`). */
+  private def run(scored: DataFrame, outDir: String, checkpointDir: String,
+                  trigger: Option[Trigger]): StreamingQuery = {
+    val w = scored.writeStream
+      .foreachBatch(idempotentParquetSink(outDir) _)
+      .option("checkpointLocation", checkpointDir)
+    trigger.fold(w)(w.trigger(_)).start()
+  }
+
   /** Configured-source → scored → parquet-append runner (the
     * deployable shape: exactly-once via checkpoint + idempotent batch
     * ids). Kafka wiring:
@@ -108,11 +116,8 @@ object ScoreStream {
     * new deployments on an empty output directory. */
   def start(spark: SparkSession, src: SourceConfig, custProfile: DataFrame,
             outDir: String, checkpointDir: String): StreamingQuery =
-    scored(source(spark, src), custProfile).writeStream
-      .foreachBatch(idempotentParquetSink(outDir) _)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    run(scored(source(spark, src), custProfile), outDir, checkpointDir,
+        Some(Trigger.AvailableNow()))
 
   /** Line-JSON → typed events: the parse step shared by the socket
     * front door and the file/Kafka JSON paths' parity spec — one
@@ -146,10 +151,7 @@ object ScoreStream {
   def serveSocket(spark: SparkSession, host: String, port: Int,
                   custProfile: DataFrame, outDir: String,
                   checkpointDir: String): StreamingQuery =
-    scored(socketSource(spark, host, port), custProfile).writeStream
-      .foreachBatch(idempotentParquetSink(outDir) _)
-      .option("checkpointLocation", checkpointDir)
-      .start()
+    run(scored(socketSource(spark, host, port), custProfile), outDir, checkpointDir, None)
 
   private val runSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
@@ -214,11 +216,7 @@ object ScoreStream {
             maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
     val reader = spark.readStream.schema(eventSchema)
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val events = reader.json(inputDir)
-    scored(events, custProfile).writeStream
-      .foreachBatch(idempotentParquetSink(outDir) _)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    run(scored(reader.json(inputDir), custProfile), outDir, checkpointDir,
+        Some(Trigger.AvailableNow()))
   }
 }
