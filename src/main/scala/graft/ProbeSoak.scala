@@ -51,7 +51,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *  - `xmodal [k]`: incremental cross-modal dedup over 8 batches of
   *    k thousand rows (default 20; k < 2 is not a valid gate setting).
   *  - `stream`: the streaming dedup twins' state bounds.
-  * An unknown mode throws before a session is built.
+  * An unknown mode or too-small scales throw before a session is built.
   * The gates' recorded readings were taken at SPARK_GRAFT_CPUS=32.
   */
 object ProbeSoak {
@@ -80,6 +80,21 @@ object ProbeSoak {
     Modes.getOrElse(name, throw new IllegalArgumentException(
       s"unknown ProbeSoak mode '$name'; valid modes: ${Modes.keys.toSeq.sorted.mkString(" ")}"))
 
+  /** Refuses scales too small for a mode's gates (see the header);
+    * `main` calls it before it builds a session. */
+  private[graft] def requireValidScales(name: String, scales: Seq[Int]): Unit = {
+    val why = name match {
+      case "cluster" if scales.last < 4 => "cluster gates shard balance at the last " +
+        "scale, which needs 4 or more (at x2, ~340 rows per shard vary past 1.2x)"
+      case "logio" if scales.min < 4 => "logio needs scales of 4 or more " +
+        "(at x1 the fixed batches dwarf the standing corpus)"
+      case "xmodal" if scales.head < 2 => "xmodal needs k >= 2 (below 2k-row batches the " +
+        "fixed AQE exchange floor of each advance reads as growth)"
+      case _ => ""
+    }
+    require(why.isEmpty, s"$why; got ${scales.mkString(" ")}")
+  }
+
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("run")
     val body = mode(name)
@@ -87,6 +102,7 @@ object ProbeSoak {
     // xmodal's one argument is its batch size in thousands of rows
     val scales =
       if (given.nonEmpty) given else if (name == "xmodal") Seq(20) else DefaultScales
+    requireValidScales(name, scales)
     val spark = Harness.session()
     // the streaming peak-state gates take max over recentProgress,
     // which keeps only the last N updates (default ~100) — raise it

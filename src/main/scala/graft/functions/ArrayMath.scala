@@ -382,9 +382,8 @@ case class AdcDistance(left: Expression, right: Expression, ksub: Int)
   * static methods (`graft.functions.ScoreKernels.lof(...)`) and
   * `nullSafeEval` calls them directly, so codegen and interpreted
   * evaluation run the same loop. Accumulation order, heap order and
-  * tie handling are those of the retired UDFs
-  * (`IForestModel.scoreSamplesUdfCol`, `LofNoveltyModel.scoreColUdf`,
-  * `PcaReconModel.scoreColUdf`), so scores are bit-identical
+  * tie handling are those of the retired UDF scorers (kept in the
+  * test tree as `UdfScorers`), so scores are bit-identical
   * (NativeExprSpec pins both paths against them). */
 private[graft] object ScoreKernels {
 

@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * how distributed search engines split document-partitioned
   * indexes). Fields are validated at construction: a ragged index
   * must fail at fit time, not as an executor-side AIOOBE inside the
-  * scan (the `loadGraphShard` rule). */
+  * scan. */
 final case class Bm25Index(terms: Array[String], df: Array[Long],
                            postOff: Array[Int], postDoc: Array[Long],
                            postTf: Array[Int], postDl: Array[Int],

@@ -3,11 +3,11 @@ package graft.ml
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-/** Model-artifact persistence (`snk_model_artifact`, SURVEY §2.1):
-  * the reference bundles preproc + models with joblib + a TF
+/** Fitted-ensemble bundle persistence (`snk_model_artifact`, SURVEY
+  * §2.1): the reference bundles preproc + models with joblib + a TF
   * SavedModel (`train.py:91-102`); here every fitted model is plain
-  * numbers, so artifacts are a small JSON file — engine-portable,
-  * diff-able, loadable anywhere (no pickle/classloader coupling).
+  * numbers, so the bundle is four small JSON files plus the profiles —
+  * engine-portable, diff-able, no pickle/classloader coupling.
   */
 object Artifacts {
 
@@ -110,372 +110,6 @@ object Artifacts {
       spark.read.parquet(s"$dir/cust_profile.parquet"),
       spark.read.parquet(s"$dir/merch_profile.parquet"),
       cfg)
-  }
-
-  // -- ANN index model state (train once, ship to every prober) --------
-
-  /** Decontamination Bloom filter — the sketch is its own wire format
-    * (`BloomFilter.writeTo`), so the artifact is the binary sketch
-    * directly: fit once against a benchmark release, ship to every
-    * scrub job (`Corpus.decontaminateWithBloom`). */
-  def saveBloom(bf: org.apache.spark.util.sketch.BloomFilter, path: String): Unit = {
-    val p = Paths.get(path)
-    if (p.getParent != null) Files.createDirectories(p.getParent)
-    val out = Files.newOutputStream(p)
-    try bf.writeTo(out) finally out.close()
-  }
-
-  def loadBloom(path: String): org.apache.spark.util.sketch.BloomFilter = {
-    val in = Files.newInputStream(Paths.get(path))
-    try org.apache.spark.util.sketch.BloomFilter.readFrom(in) finally in.close()
-  }
-
-  /** IVF coarse-quantizer centroids — the constant-size half of an IVF
-    * index (the assigned/bucketed corpus table is the other half). */
-  def saveIvfCentroids(centroids: Array[Array[Double]], path: String): Unit =
-    write(path, s"""{"centroids":${jArr(centroids.map(row => jArr(row.map(jNum))))}}""")
-
-  def loadIvfCentroids(path: String): Array[Array[Double]] = {
-    val p = new P(read(path))
-    p.objField("centroids")
-    p.arr(() => p.arr(() => p.num()).toArray).toArray
-  }
-
-  /** Two-level residual coarse quantizer (`Ivf.Centroids2`) — the
-    * model behind the past-the-ceiling kNN-graph path; two centroid
-    * matrices in the same JSON shape as the flat IVF artifact. */
-  def saveCentroids2(c2: graft.operators.Ivf.Centroids2, dir: String): Unit = {
-    saveIvfCentroids(c2.coarse, s"$dir/coarse.json")
-    saveIvfCentroids(c2.fine, s"$dir/fine.json")
-  }
-
-  def loadCentroids2(dir: String): graft.operators.Ivf.Centroids2 =
-    graft.operators.Ivf.Centroids2(
-      loadIvfCentroids(s"$dir/coarse.json"),
-      loadIvfCentroids(s"$dir/fine.json"))
-
-  /** PQ codebooks — with the encoded (nid, cell, codes) table these
-    * fully define an IVF-PQ index; scorers rebuild LUTs from this. */
-  def savePq(m: graft.operators.Pq.Model, path: String): Unit = {
-    val books = jArr(m.codebooks.map(b => jArr(b.map(c => jArr(c.map(jNum))))))
-    write(path, s"""{"m":${m.m},"ksub":${m.ksub},"dsub":${m.dsub},"codebooks":$books}""")
-  }
-
-  def loadPq(path: String): graft.operators.Pq.Model = {
-    val p = new P(read(path))
-    p.objField("m"); val m = p.num().toInt
-    p.objField("ksub"); val ksub = p.num().toInt
-    p.objField("dsub"); val dsub = p.num().toInt
-    p.objField("codebooks")
-    val books = p.arr(() => p.arr(() => p.arr(() => p.num()).toArray).toArray).toArray
-    graft.operators.Pq.Model(m, ksub, dsub, books)
-  }
-
-  /** Bernoulli-NB quality model: dense per-bucket presence weights +
-    * absence base + class prior (`Corpus.NbQualityModel`). */
-  def saveNbQuality(m: graft.operators.Corpus.NbQualityModel, path: String): Unit =
-    write(path, s"""{"nBuckets":${m.nBuckets},"base":${jNum(m.base)},""" +
-      s""""prior":${jNum(m.prior)},"weights":${jArr(m.weights.map(jNum))}}""")
-
-  def loadNbQuality(path: String): graft.operators.Corpus.NbQualityModel = {
-    val p = new P(read(path))
-    p.objField("nBuckets"); val n = p.num().toInt
-    p.objField("base"); val base = p.num()
-    p.objField("prior"); val prior = p.num()
-    p.objField("weights"); val w = p.arr(() => p.num()).toArray
-    require(w.length == n, s"weight array ${w.length} != nBuckets $n")
-    graft.operators.Corpus.NbQualityModel(n, w, base, prior)
-  }
-
-  /** Trained lang-ID model (`Corpus.fitLangModel`). */
-  def saveLangModel(m: graft.operators.Corpus.LangModel, path: String): Unit =
-    write(path, s"""{"nBuckets":${m.nBuckets},""" +
-      s""""langs":${jArr(m.langs.map(jStr))},""" +
-      s""""priors":${jArr(m.priors.map(jNum))},""" +
-      s""""weights":${jArr(m.flatW.map(jNum))}}""")
-
-  def loadLangModel(path: String): graft.operators.Corpus.LangModel = {
-    val p = new P(read(path))
-    p.objField("nBuckets"); val n = p.num().toInt
-    p.objField("langs"); val langs = p.arr(() => p.str()).toArray
-    p.objField("priors"); val priors = p.arr(() => p.num()).toArray
-    p.objField("weights"); val w = p.arr(() => p.num()).toArray
-    graft.operators.Corpus.LangModel(langs, n, w, priors)
-  }
-
-  /** Fuzzy-decontamination key set (`Corpus.fitFuzzyKeys`). */
-  def saveFuzzyKeys(keys: Array[String], path: String): Unit =
-    write(path, s"""{"keys":${jArr(keys.map(jStr))}}""")
-
-  def loadFuzzyKeys(path: String): Array[String] = {
-    val p = new P(read(path))
-    p.objField("keys"); p.arr(() => p.str()).toArray
-  }
-
-  /** ANN serve index shard (`AnnServe.AnnShard`): ids + row-major
-    * vectors — with this file a serving node answers queries with no
-    * other state. Binary, not the JSON the small models use: a
-    * rowCap-sized shard is ~0.5 GB of doubles, which as JSON would
-    * materialize a multi-GB transient string on save and push the
-    * 2³¹-char String limit on load; and 64-bit ids must round-trip
-    * EXACTLY (a Double-typed JSON number silently corrupts ids above
-    * 2⁵³). Streamed fixed-width big-endian: magic, dim, n, n longs,
-    * n·dim doubles. */
-  private val AnnShardMagic = 0x47414e53 // "GANS"
-
-  def saveAnnShard(sh: graft.operators.AnnServe.AnnShard, path: String): Unit = {
-    val p = Paths.get(path)
-    if (p.getParent != null) Files.createDirectories(p.getParent)
-    val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
-      Files.newOutputStream(p), 1 << 20))
-    try {
-      out.writeInt(AnnShardMagic)
-      out.writeInt(sh.dim)
-      out.writeInt(sh.ids.length)
-      sh.ids.foreach(out.writeLong)
-      sh.flatVecs.foreach(out.writeDouble)
-    } finally out.close()
-  }
-
-  def loadAnnShard(path: String): graft.operators.AnnServe.AnnShard = {
-    val in = new java.io.DataInputStream(new java.io.BufferedInputStream(
-      Files.newInputStream(Paths.get(path)), 1 << 20))
-    try {
-      require(in.readInt() == AnnShardMagic, s"$path is not an AnnShard artifact")
-      val dim = in.readInt()
-      val n = in.readInt()
-      require(dim > 0 && n >= 0, s"corrupt AnnShard header: dim=$dim n=$n")
-      // overflow + plausibility checks BEFORE allocating: a corrupt
-      // header's n*dim can wrap the Int product (to 0 or a small
-      // positive) and surface as a confusing downstream AnnShard
-      // require failure or NegativeArraySizeException; and a header
-      // larger than the file itself should fail as the header error it
-      // is, not as a truncated-read EOFException mid-array
-      require(n.toLong * dim <= Int.MaxValue,
-        s"corrupt AnnShard header: n=$n x dim=$dim overflows an array size")
-      val expectedBytes = 12L + n.toLong * 8 + n.toLong * dim * 8
-      val fileBytes = Files.size(Paths.get(path))
-      require(fileBytes == expectedBytes,
-        s"corrupt/truncated AnnShard: header (dim=$dim n=$n) implies " +
-          s"$expectedBytes bytes but $path holds $fileBytes")
-      val ids = Array.fill(n)(in.readLong())
-      val vecs = Array.fill(n * dim)(in.readDouble())
-      graft.operators.AnnServe.AnnShard(ids, vecs, dim)
-    } finally in.close()
-  }
-
-  /** Graph-beam serve shard (`AnnServe.GraphShard`): the raw shard
-    * plus the symmetrized CSR adjacency and entry points — with this
-    * file a serving node answers beam queries with no other state
-    * (the graph does NOT need rebuilding on load; that is the point
-    * of persisting it). Same binary rationale and header-validation
-    * discipline as the AnnShard artifact. Layout: magic, dim, n,
-    * nEdges, nEntries, n longs (ids), n·dim doubles, (n+1) ints
-    * (nbrOff), nEdges ints (nbrIdx), nEntries ints (entryIdx). */
-  private val GraphShardMagic = 0x47475348 // "GGSH"
-
-  def saveGraphShard(sh: graft.operators.AnnServe.GraphShard, path: String): Unit = {
-    val p = Paths.get(path)
-    if (p.getParent != null) Files.createDirectories(p.getParent)
-    val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
-      Files.newOutputStream(p), 1 << 20))
-    try {
-      out.writeInt(GraphShardMagic)
-      out.writeInt(sh.dim)
-      out.writeInt(sh.ids.length)
-      out.writeInt(sh.nbrIdx.length)
-      out.writeInt(sh.entryIdx.length)
-      sh.ids.foreach(out.writeLong)
-      sh.flatVecs.foreach(out.writeDouble)
-      sh.nbrOff.foreach(out.writeInt)
-      sh.nbrIdx.foreach(out.writeInt)
-      sh.entryIdx.foreach(out.writeInt)
-    } finally out.close()
-  }
-
-  def loadGraphShard(path: String): graft.operators.AnnServe.GraphShard = {
-    val in = new java.io.DataInputStream(new java.io.BufferedInputStream(
-      Files.newInputStream(Paths.get(path)), 1 << 20))
-    try {
-      require(in.readInt() == GraphShardMagic, s"$path is not a GraphShard artifact")
-      val dim = in.readInt()
-      val n = in.readInt()
-      val nEdges = in.readInt()
-      val nEntries = in.readInt()
-      require(dim > 0 && n >= 0 && nEdges >= 0 && nEntries > 0,
-        s"corrupt GraphShard header: dim=$dim n=$n nEdges=$nEdges nEntries=$nEntries")
-      require(n.toLong * dim <= Int.MaxValue,
-        s"corrupt GraphShard header: n=$n x dim=$dim overflows an array size")
-      val expectedBytes = 20L + n.toLong * 8 + n.toLong * dim * 8 +
-        (n.toLong + 1) * 4 + nEdges.toLong * 4 + nEntries.toLong * 4
-      val fileBytes = Files.size(Paths.get(path))
-      require(fileBytes == expectedBytes,
-        s"corrupt/truncated GraphShard: header (dim=$dim n=$n nEdges=$nEdges " +
-          s"nEntries=$nEntries) implies $expectedBytes bytes but $path holds $fileBytes")
-      val ids = Array.fill(n)(in.readLong())
-      val vecs = Array.fill(n * dim)(in.readDouble())
-      val nbrOff = Array.fill(n + 1)(in.readInt())
-      val nbrIdx = Array.fill(nEdges)(in.readInt())
-      val entries = Array.fill(nEntries)(in.readInt())
-      require(nbrOff.head == 0 && nbrOff.last == nEdges,
-        s"corrupt GraphShard adjacency: offsets [${nbrOff.head}, ${nbrOff.last}] " +
-          s"vs $nEdges edges")
-      // A size-consistent but bit-corrupted artifact must fail HERE,
-      // loudly, not later as an executor-side AIOOBE inside
-      // GraphBeamTopK: offsets must be non-decreasing and every
-      // adjacency/entry index must name a real node.
-      var i = 0
-      while (i < n) {
-        require(nbrOff(i) <= nbrOff(i + 1),
-          s"corrupt GraphShard adjacency: nbrOff($i)=${nbrOff(i)} > " +
-            s"nbrOff(${i + 1})=${nbrOff(i + 1)} (offsets must be non-decreasing)")
-        i += 1
-      }
-      i = 0
-      while (i < nEdges) {
-        require(nbrIdx(i) >= 0 && nbrIdx(i) < n,
-          s"corrupt GraphShard adjacency: nbrIdx($i)=${nbrIdx(i)} outside [0, $n)")
-        i += 1
-      }
-      i = 0
-      while (i < nEntries) {
-        require(entries(i) >= 0 && entries(i) < n,
-          s"corrupt GraphShard entries: entryIdx($i)=${entries(i)} outside [0, $n)")
-        i += 1
-      }
-      graft.operators.AnnServe.GraphShard(ids, vecs, dim, nbrOff, nbrIdx, entries)
-    } finally in.close()
-  }
-
-  /** SQ8 serve shard (`AnnServe.SqShard`): ids + byte codes + the
-    * per-dim dequantization line + fitted norms — the whole serving
-    * state of the compressed tier in one file. Same binary rationale
-    * and header-validation discipline as the AnnShard artifact.
-    * Layout: magic, dim, n, 2·dim doubles (min, step interleaved per
-    * dim), n longs, n doubles (norms), n·dim bytes. */
-  private val SqShardMagic = 0x47535153 // "GSQS"
-
-  def saveSqShard(sh: graft.operators.AnnServe.SqShard, path: String): Unit = {
-    val p = Paths.get(path)
-    if (p.getParent != null) Files.createDirectories(p.getParent)
-    val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
-      Files.newOutputStream(p), 1 << 20))
-    try {
-      out.writeInt(SqShardMagic)
-      out.writeInt(sh.dim)
-      out.writeInt(sh.ids.length)
-      var j = 0
-      while (j < sh.dim) {
-        out.writeDouble(sh.minl(j)); out.writeDouble(sh.stepl(j)); j += 1
-      }
-      sh.ids.foreach(out.writeLong)
-      sh.norms.foreach(out.writeDouble)
-      out.write(sh.codes)
-    } finally out.close()
-  }
-
-  def loadSqShard(path: String): graft.operators.AnnServe.SqShard = {
-    val in = new java.io.DataInputStream(new java.io.BufferedInputStream(
-      Files.newInputStream(Paths.get(path)), 1 << 20))
-    try {
-      require(in.readInt() == SqShardMagic, s"$path is not an SqShard artifact")
-      val dim = in.readInt()
-      val n = in.readInt()
-      require(dim > 0 && n >= 0, s"corrupt SqShard header: dim=$dim n=$n")
-      require(n.toLong * dim <= Int.MaxValue,
-        s"corrupt SqShard header: n=$n x dim=$dim overflows an array size")
-      val expectedBytes = 12L + dim.toLong * 16 + n.toLong * 16 + n.toLong * dim
-      val fileBytes = Files.size(Paths.get(path))
-      require(fileBytes == expectedBytes,
-        s"corrupt/truncated SqShard: header (dim=$dim n=$n) implies " +
-          s"$expectedBytes bytes but $path holds $fileBytes")
-      val minl = new Array[Double](dim)
-      val stepl = new Array[Double](dim)
-      var j = 0
-      while (j < dim) { minl(j) = in.readDouble(); stepl(j) = in.readDouble(); j += 1 }
-      val ids = Array.fill(n)(in.readLong())
-      val norms = Array.fill(n)(in.readDouble())
-      val codes = new Array[Byte](n * dim)
-      in.readFully(codes)
-      graft.operators.AnnServe.SqShard(ids, codes, minl, stepl, norms)
-    } finally in.close()
-  }
-
-  /** BM25 inverted-index shard (`functions.Bm25Index`): vocabulary,
-    * per-term df, CSR postings with (doc_id, tf, doclen), and the
-    * global statistics — the sparse serve tier's whole serving state
-    * in one file, completing the serve-artifact matrix next to the
-    * raw/graph/SQ8 shards (a serving node loads the index with NO
-    * rebuild). Binary rationale as the AnnShard artifact; terms are
-    * length-prefixed modified-UTF (`writeUTF` — corpus tokens are far
-    * under its 64 KB bound), so the byte size is variable and load
-    * validation is header plausibility + the Bm25Index constructor's
-    * own structural `require`s (ragged arrays, non-monotonic offsets
-    * fail loudly at load, not executor-side). Layout: magic, nTerms,
-    * nPostings, n (long), avgdl (double), nTerms UTF terms, nTerms
-    * longs (df), (nTerms+1) ints (postOff), nPostings longs (doc),
-    * nPostings ints (tf), nPostings ints (dl). */
-  private val Bm25IndexMagic = 0x47424d49 // "GBMI"
-
-  def saveBm25Index(ix: graft.functions.Bm25Index, path: String): Unit = {
-    val p = Paths.get(path)
-    if (p.getParent != null) Files.createDirectories(p.getParent)
-    val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
-      Files.newOutputStream(p), 1 << 20))
-    try {
-      out.writeInt(Bm25IndexMagic)
-      out.writeInt(ix.terms.length)
-      out.writeInt(ix.postDoc.length)
-      out.writeLong(ix.n)
-      out.writeDouble(ix.avgdl)
-      ix.terms.foreach(out.writeUTF)
-      ix.df.foreach(out.writeLong)
-      ix.postOff.foreach(out.writeInt)
-      ix.postDoc.foreach(out.writeLong)
-      ix.postTf.foreach(out.writeInt)
-      ix.postDl.foreach(out.writeInt)
-    } finally out.close()
-  }
-
-  def loadBm25Index(path: String): graft.functions.Bm25Index = {
-    val in = new java.io.DataInputStream(new java.io.BufferedInputStream(
-      Files.newInputStream(Paths.get(path)), 1 << 20))
-    try {
-      require(in.readInt() == Bm25IndexMagic, s"$path is not a Bm25Index artifact")
-      val nTerms = in.readInt()
-      val nPost = in.readInt()
-      val n = in.readLong()
-      val avgdl = in.readDouble()
-      require(nTerms >= 0 && nPost >= 0 && n > 0,
-        s"corrupt Bm25Index header: terms=$nTerms postings=$nPost n=$n")
-      // plausibility before allocation (the loadAnnShard rule): the
-      // fixed-width tail alone needs this many bytes, so a corrupt
-      // header larger than the file fails as a header error, not a
-      // mid-array EOFException
-      // header 28 + per term (2-byte UTF prefix + 8-byte df) +
-      // (nTerms+1) offset ints + per posting (8 doc + 4 tf + 4 dl)
-      val minBytes = 28L + nTerms.toLong * 10 + (nTerms.toLong + 1) * 4 +
-        nPost.toLong * 16
-      require(Files.size(Paths.get(path)) >= minBytes,
-        s"corrupt/truncated Bm25Index: header (terms=$nTerms " +
-          s"postings=$nPost) needs >= $minBytes bytes")
-      val terms = Array.fill(nTerms)(in.readUTF())
-      val df = Array.fill(nTerms)(in.readLong())
-      val off = Array.fill(nTerms + 1)(in.readInt())
-      val pDoc = Array.fill(nPost)(in.readLong())
-      val pTf = Array.fill(nPost)(in.readInt())
-      val pDl = Array.fill(nPost)(in.readInt())
-      // the constructor validates structure (offsets monotonic,
-      // aligned lengths); the search contract additionally needs the
-      // vocabulary sorted — verify, don't trust the file
-      var i = 1
-      while (i < nTerms) {
-        require(terms(i - 1).compareTo(terms(i)) < 0,
-          s"corrupt Bm25Index vocabulary: terms($i) out of order")
-        i += 1
-      }
-      graft.functions.Bm25Index(terms, df, off, pDoc, pTf, pDl, n, avgdl)
-    } finally in.close()
   }
 
   private def write(path: String, content: String): Unit = {

@@ -63,34 +63,12 @@ final case class IForestModel(trees: Array[ITree], psi: Int, offset: Double) {
 
   /** sklearn `score_samples`: −2^(−E[h]/c(ψ)) — the walk over the
     * flattened forest runs in a static helper called from generated
-    * code, so HotSpot compiles it on its own (see IForestScoreSamples). */
+    * code, so HotSpot compiles it on its own (see IForestScoreSamples).
+    * Bit-identical to the retired UDF scorer, which the test tree keeps
+    * in `UdfScorers` as NativeExprSpec's reference. */
   def scoreSamplesCol(features: Column): Column = {
     val (fe, th, lf, rt, lc, ro) = flat
     graft.functions.ArrayMath.iforestScore(features, fe, th, lf, rt, lc, ro, c(psi))
-  }
-
-  /** The r1–r5 Scala-UDF scorer, kept ONLY as the differential
-    * reference for NativeExprSpec (bit-identical scores required). */
-  private[graft] def scoreSamplesUdfCol(features: Column): Column = {
-    val ts = trees; val cPsi = c(psi)
-    val f = udf { (x: Seq[Double]) =>
-      val xa = x.toArray
-      var total = 0.0
-      var t = 0
-      while (t < ts.length) {
-        val tr = ts(t)
-        var node = 0; var depth = 0.0
-        while (tr.feature(node) >= 0) {
-          node = if (xa(tr.feature(node)) < tr.threshold(node)) tr.left(node)
-                 else tr.right(node)
-          depth += 1.0
-        }
-        total += depth + c(tr.size(node))
-        t += 1
-      }
-      -math.pow(2.0, -(total / ts.length) / cPsi)
-    }
-    f(features)
   }
 
   /** sklearn `decision_function`: score_samples − offset (negative ⇒

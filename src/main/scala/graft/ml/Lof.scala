@@ -197,7 +197,8 @@ final case class LofNoveltyModel(points: Array[Array[Double]],
     * reach/lrd algebra run in a static helper (`ScoreKernels.lof`)
     * called from generated code, so HotSpot compiles the loop on its
     * own, and a short input vector fails loudly. Bit-identical to the
-    * retired UDF (`scoreColUdf`, kept for the differential spec). */
+    * retired UDF, which the test tree keeps in `UdfScorers` as
+    * NativeExprSpec's reference. */
   def scoreCol(features: Column): Column = {
     require(points.nonEmpty, "lof model has no reference points")
     val dim = points(0).length
@@ -207,59 +208,5 @@ final case class LofNoveltyModel(points: Array[Array[Double]],
       System.arraycopy(points(i), 0, flat, i * dim, dim); i += 1
     }
     graft.functions.ArrayMath.lofScore(features, flat, dim, kdist, lrd, k)
-  }
-
-  /** The original UDF scorer — retained ONLY as the differential
-    * reference for NativeExprSpec (proves `scoreCol`'s codegen path
-    * bit-identical); not used by any query path. */
-  private[graft] def scoreColUdf(features: Column): Column = {
-    val pts = points; val kd = kdist; val lr = lrd; val kk = k
-    val f = udf { (x: Seq[Double]) =>
-      val xa = x.toArray
-      val n = pts.length
-      val heapD = new Array[Double](kk); val heapI = new Array[Int](kk)
-      var filled = 0
-      var i = 0
-      while (i < n) {
-        val p = pts(i)
-        var s = 0.0; var j = 0
-        while (j < p.length) { val d0 = xa(j) - p(j); s += d0 * d0; j += 1 }
-        val d = math.sqrt(s)
-        if (filled < kk) {
-          heapD(filled) = d; heapI(filled) = i; filled += 1
-          if (filled == kk) { // build max-heap
-            var m = kk / 2 - 1
-            while (m >= 0) { siftDown(heapD, heapI, m, kk); m -= 1 }
-          }
-        } else if (d < heapD(0)) {
-          heapD(0) = d; heapI(0) = i; siftDown(heapD, heapI, 0, kk)
-        }
-        i += 1
-      }
-      val m = filled
-      var reachSum = 0.0; var lrdSum = 0.0
-      var t = 0
-      while (t < m) {
-        val o = heapI(t)
-        reachSum += math.max(heapD(t), kd(o))
-        lrdSum += lr(o)
-        t += 1
-      }
-      val lrdX = 1.0 / (reachSum / m + 1e-10)
-      -(lrdSum / m) / lrdX
-    }
-    f(features)
-  }
-
-  private def siftDown(d: Array[Double], ix: Array[Int], start: Int, len: Int): Unit = {
-    var root = start
-    while (2 * root + 1 < len) {
-      var child = 2 * root + 1
-      if (child + 1 < len && d(child + 1) > d(child)) child += 1
-      if (d(root) >= d(child)) return
-      val td = d(root); d(root) = d(child); d(child) = td
-      val ti = ix(root); ix(root) = ix(child); ix(child) = ti
-      root = child
-    }
   }
 }

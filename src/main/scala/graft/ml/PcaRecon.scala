@@ -20,38 +20,13 @@ final case class PcaReconModel(components: Array[Array[Double]], d: Int, k: Int)
     * error, `model_wrapper.py:44-49`) as a native expression
     * (`functions.PcaReconScore`) whose loop runs in a static helper
     * (`ScoreKernels.pca`) called from generated code, so HotSpot
-    * compiles it on its own — bit-identical to the retired UDF
-    * (`scoreColUdf`, kept for the differential spec). */
+    * compiles it on its own — bit-identical to the retired UDF, which
+    * the test tree keeps in `UdfScorers` as NativeExprSpec's reference. */
   def scoreCol(features: Column): Column = {
     val flat = new Array[Double](k * d)
     var j = 0
     while (j < k) { System.arraycopy(components(j), 0, flat, j * d, d); j += 1 }
     graft.functions.ArrayMath.pcaReconScore(features, flat, d, k)
-  }
-
-  /** The original UDF scorer — retained ONLY as the differential
-    * reference for NativeExprSpec; not used by any query path. */
-  private[graft] def scoreColUdf(features: Column): Column = {
-    val comp = components // (k rows, each of length d)
-    val dd = d
-    val f = udf { (x: Seq[Double]) =>
-      val xa = x.toArray
-      val proj = new Array[Double](comp.length)
-      var j = 0
-      while (j < comp.length) {
-        val row = comp(j); var i = 0; var s = 0.0
-        while (i < dd) { s += row(i) * xa(i); i += 1 }
-        proj(j) = s; j += 1
-      }
-      var err = 0.0; var i = 0
-      while (i < dd) {
-        var r = 0.0; var jj = 0
-        while (jj < comp.length) { r += comp(jj)(i) * proj(jj); jj += 1 }
-        val e = xa(i) - r; err += e * e; i += 1
-      }
-      err / dd
-    }
-    f(features)
   }
 }
 

@@ -1128,8 +1128,8 @@ object Codecs {
     require(bytes.length >= 13, "truncated logical screen descriptor")
     val w = u16(6); val h = u16(8)
     require(w > 0 && h > 0, s"bad GIF dimensions ${w}x$h")
-    // Plausibility cap BEFORE any allocation (the loadAnnShard header
-    // rule): garbage bytes behind a valid magic must fail with a
+    // Plausibility cap BEFORE any allocation (check the header before
+    // allocating from it): garbage bytes behind a valid magic must fail with a
     // catchable require, never an OutOfMemoryError from a 4-billion-
     // pixel canvas. 2^24 pixels (4096x4096) covers any sane GIF.
     require(w.toLong * h <= (1L << 24), s"implausible GIF screen ${w}x$h")

@@ -1155,16 +1155,16 @@ object AnnServe {
     * Exact-over-union under the SHARED dequantization line, so the
     * answer is bit-identical to one whole-corpus SqShard for any
     * shard count (all shards must come from one `fitSqShards` fit —
-    * asserted via the shared line reference). */
+    * asserted by comparing their lines by value). */
   def sqTopkRowsSharded(queries: DataFrame, shards: Seq[SqShard], k: Int = 10,
                         idCol: String = "vec_id",
                         vecCol: String = "embedding"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(shards.nonEmpty, "sqTopkRowsSharded: no shards")
-    // VALUE equality, not reference (ADVICE r8): shards persisted via
-    // Artifacts.saveSqShard and reloaded on serving nodes carry
-    // value-equal but reference-distinct line arrays, and a restored
-    // deployment from one fit must stay mergeable.
+    // VALUE equality, not reference: shards of one fit that were
+    // serialized or copied on their way to serving nodes carry
+    // value-equal but reference-distinct line arrays, and such a
+    // deployment must stay mergeable.
     require(shards.forall(sh =>
         java.util.Arrays.equals(sh.minl, shards.head.minl) &&
         java.util.Arrays.equals(sh.stepl, shards.head.stepl)),

@@ -217,8 +217,7 @@ object Corpus {
       fitDecontaminationBloom(benchmark, idCol, textCol, k, fpp), idCol, textCol, k)
 
   /** The fit half: the benchmark shingle set compressed to the sketch —
-    * a constant-size model artifact (persist with `Artifacts.saveBloom`,
-    * re-serve with `decontaminateWithBloom`). */
+    * a constant-size model (re-serve with `decontaminateWithBloom`). */
   def fitDecontaminationBloom(benchmark: DataFrame, idCol: String,
                               textCol: String, k: Int = 8, fpp: Double = 1e-6)
       : org.apache.spark.util.sketch.BloomFilter = {
@@ -1144,8 +1143,7 @@ object Corpus {
     * (untrained buckets carry 0.0 — algebraically identical to the
     * relational left join's coalesce-to-zero), plus the absence base
     * and the class prior. nBuckets doubles ≈ 32 KB at the 4096
-    * default — IVF-centroid-class model state, persistable via
-    * `Artifacts.saveNbQuality`. */
+    * default — IVF-centroid-class model state. */
   final case class NbQualityModel(nBuckets: Int, weights: Array[Double],
                                   base: Double, prior: Double)
 

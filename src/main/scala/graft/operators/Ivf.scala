@@ -132,7 +132,6 @@ object Ivf {
       "Centroids2: ragged centroid matrix")
     def nc: Int = coarse.length
     def nf: Int = fine.length
-    def nCells: Int = nc * nf
     private[Ivf] lazy val flatCoarse: Array[Double] = coarse.flatten
     private[Ivf] lazy val flatFine: Array[Double] = fine.flatten
   }

@@ -37,11 +37,4 @@ object Validate {
         .otherwise("non-numeric id").as("error"))
     (valid, errors)
   }
-
-  /** Fill missing engineered features with 0.0 (`train.py:49-53`) and
-    * missing categorical strings with "" (`api/app.py:163-164`). */
-  def fillDefaults(df: DataFrame, numericCols: Seq[String], stringCols: Seq[String]): DataFrame = {
-    val filledNum = if (numericCols.nonEmpty) df.na.fill(0.0, numericCols) else df
-    if (stringCols.nonEmpty) filledNum.na.fill("", stringCols) else filledNum
-  }
 }

@@ -351,7 +351,7 @@ object CorpusStream {
   /** Streaming benchmark decontamination — the serve half of the Bloom
     * sketch over a live ingestion feed. The batch fit
     * (`Corpus.fitDecontaminationBloom`) runs once over the benchmark
-    * suite (constant-size model, persistable via Artifacts.saveBloom);
+    * suite (constant-size model);
     * serving is `Corpus.decontaminateRows` — a row-local shingle +
     * sketch-probe projection with NO state, NO watermark, NO shuffle,
     * so a 100 TB/day feed scrubs at scan speed in append mode. Exact
@@ -387,10 +387,9 @@ object CorpusStream {
 
   /** Streaming fuzzy decontamination — the edit-distance serve half
     * over a live feed. Fit (`Corpus.fitFuzzyKeys`) collects the
-    * benchmark's canonical keys once (constant-size model,
-    * persistable via Artifacts.saveFuzzyKeys); serving is a row-local
-    * higher-order-function fold — no UDF, no state, no shuffle, append
-    * mode at scan speed. */
+    * benchmark's canonical keys once (constant-size model); serving
+    * is a row-local higher-order-function fold — no UDF, no state, no
+    * shuffle, append mode at scan speed. */
   def fuzzyDecontaminated(docs: DataFrame, keys: Array[String],
                           idCol: String = "doc_id", textCol: String = "text",
                           maxDist: Int = 3, prefixChars: Int = 64): DataFrame =
@@ -681,9 +680,9 @@ object CorpusStream {
 
   /** Streaming model-based quality gate — the Bernoulli-NB serve half
     * over a live feed. Fit (`Corpus.fitNbQuality`) runs batch-side
-    * (two nBuckets-bounded aggs, constant-size model, persistable via
-    * Artifacts.saveNbQuality); serving folds the literal weight array
-    * row-locally — no state, no shuffle, append mode. */
+    * (two nBuckets-bounded aggs, constant-size model); serving folds
+    * the literal weight array row-locally — no state, no shuffle,
+    * append mode. */
   def nbScored(docs: DataFrame, m: graft.operators.Corpus.NbQualityModel,
                idCol: String = "doc_id", textCol: String = "text"): DataFrame =
     graft.operators.Corpus.nbScoreRows(docs, m, idCol, textCol)

@@ -325,7 +325,7 @@ class NativeExprSpec extends AnyFunSuite {
         nTrees = 50, subsample = 64, contamination = 0.02, seed = 11L)
       val both = onPath(confs)(df.select(
           m.scoreSamplesCol(col("features")).as("native"),
-          m.scoreSamplesUdfCol(col("features")).as("udf")))
+          UdfScorers.scoreSamplesUdfCol(m, col("features")).as("udf")))
       both.foreach { r =>
         assert(r.getDouble(0) == r.getDouble(1),
           s"native ${r.getDouble(0)} != udf ${r.getDouble(1)}")
@@ -354,7 +354,7 @@ class NativeExprSpec extends AnyFunSuite {
         .toDF("id", "features")
       val both = onPath(confs)(unseen.select(
           model.scoreCol(col("features")).as("native"),
-          model.scoreColUdf(col("features")).as("udf")))
+          UdfScorers.scoreColUdf(model, col("features")).as("udf")))
       both.foreach { r =>
         assert(r.getDouble(0) == r.getDouble(1),
           s"native ${r.getDouble(0)} != udf ${r.getDouble(1)}")
@@ -381,7 +381,7 @@ class NativeExprSpec extends AnyFunSuite {
       val withZero = train.union(Seq((-1L, Seq.fill(dim)(0.0))).toDF("id", "features"))
       val both = onPath(confs)(withZero.select(
           model.scoreCol(col("features")).as("native"),
-          model.scoreColUdf(col("features")).as("udf")))
+          UdfScorers.scoreColUdf(model, col("features")).as("udf")))
       both.foreach { r =>
         assert(r.getDouble(0) == r.getDouble(1),
           s"native ${r.getDouble(0)} != udf ${r.getDouble(1)}")
@@ -415,14 +415,14 @@ class NativeExprSpec extends AnyFunSuite {
         p.indices.map(j => (p(j) - centre(j)) * (p(j) - centre(j))).sum == 0.75)
       assert(atCorner > model.k, s"only $atCorner reference points tie at the k-th distance")
       assertSameAsUdf(confs, queries,
-        model.scoreCol(col("features")), model.scoreColUdf(col("features")))
+        model.scoreCol(col("features")), UdfScorers.scoreColUdf(model, col("features")))
       // the fitted kdist/lrd are near-uniform on a grid, so which tied
       // point the heap keeps barely shows; distinct per-point values do
       val n = model.points.length
       val marked = model.copy(kdist = Array.tabulate(n)(i => 0.5 + 0.013 * i),
         lrd = Array.tabulate(n)(i => 1.0 + 0.37 * i))
       assertSameAsUdf(confs, queries,
-        marked.scoreCol(col("features")), marked.scoreColUdf(col("features")))
+        marked.scoreCol(col("features")), UdfScorers.scoreColUdf(marked, col("features")))
     }
 
     test(s"IForestScoreSamples: a value on a split threshold goes right, == UDF$path") {
@@ -455,7 +455,7 @@ class NativeExprSpec extends AnyFunSuite {
       val inputs = (onSplit :+ Seq.fill(dim)(0.0)).zipWithIndex
         .map { case (x, i) => (i.toLong, x) }.toDF("id", "features")
       assertSameAsUdf(confs, inputs,
-        fitted.scoreSamplesCol(col("features")), fitted.scoreSamplesUdfCol(col("features")))
+        fitted.scoreSamplesCol(col("features")), UdfScorers.scoreSamplesUdfCol(fitted, col("features")))
     }
   }
 

@@ -38,5 +38,15 @@ class ProbeSoakSpec extends AnyFunSuite {
     assert(e.getMessage.contains("unknown ProbeSoak mode 'ann'"))
     assert(e.getMessage.contains("maintained"))
     assert(ProbeSoak.mode("logio") eq ProbeSoak.Modes("logio"))
+    // so are scales the header names too small for a mode's gates
+    val small = Seq("cluster" -> Seq(1, 2), "logio" -> Seq(1, 4), "xmodal" -> Seq(1))
+    small.foreach { case (name, scales) =>
+      val e = intercept[IllegalArgumentException](ProbeSoak.requireValidScales(name, scales))
+      assert(e.getMessage.contains(name), e.getMessage)
+    }
+    ProbeSoak.requireValidScales("cluster", Seq(1, 2, 4))
+    ProbeSoak.requireValidScales("logio", Seq(4, 8))
+    ProbeSoak.requireValidScales("xmodal", Seq(20))
+    ProbeSoak.requireValidScales("extract", Seq(1, 2))
   }
 }

@@ -128,196 +128,6 @@ class SourcesSpec extends AnyFunSuite {
     assert(s1.sameElements(s2))
   }
 
-  test("ANN index artifacts: IVF centroids and PQ codebooks reload bit-identically") {
-    val dir = tmp()
-    val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val cent = graft.operators.Ivf.fitCentroids(e, "vec_id", "embedding", nlist = 8)
-    Artifacts.saveIvfCentroids(cent, s"$dir/ivf.json")
-    val cent2 = Artifacts.loadIvfCentroids(s"$dir/ivf.json")
-    assert(cent2.map(_.toSeq).toSeq == cent.map(_.toSeq).toSeq)
-
-    val pq = graft.operators.Pq.fit(e, "vec_id", "embedding", m = 8, ksub = 16)
-    Artifacts.savePq(pq, s"$dir/pq.json")
-    val pq2 = Artifacts.loadPq(s"$dir/pq.json")
-    assert(pq2.m == pq.m && pq2.ksub == pq.ksub && pq2.dsub == pq.dsub)
-    assert(pq2.codebooks.map(_.map(_.toSeq).toSeq).toSeq ==
-      pq.codebooks.map(_.map(_.toSeq).toSeq).toSeq)
-    // a prober using the reloaded state returns identical neighbors
-    val q = e.filter(col("vec_id") < 5)
-    val r1 = graft.operators.Pq.topkIvfPq(e, "vec_id", "embedding", q,
-      k = 5, cent, nprobe = 4, pq, shortlist = 20).collect().map(_.toString)
-    val r2 = graft.operators.Pq.topkIvfPq(e, "vec_id", "embedding", q,
-      k = 5, cent2, nprobe = 4, pq2, shortlist = 20).collect().map(_.toString)
-    assert(r1.sameElements(r2))
-  }
-
-  test("bloom artifact round-trip: reloaded sketch scrubs identically") {
-    import org.apache.spark.sql.functions.col
-    val dir = tmp()
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val bench = docs.filter(col("doc_id") % 10 === 0)
-    val corpus = docs.filter(col("doc_id") % 10 =!= 0).limit(100)
-    val bf = graft.operators.Corpus.fitDecontaminationBloom(bench, "doc_id", "text")
-    Artifacts.saveBloom(bf, s"$dir/bench.bloom")
-    val bf2 = Artifacts.loadBloom(s"$dir/bench.bloom")
-    val a = graft.operators.Corpus
-      .decontaminateWithBloom(corpus, bf, "doc_id", "text").collect().toSeq
-    val b = graft.operators.Corpus
-      .decontaminateWithBloom(corpus, bf2, "doc_id", "text").collect().toSeq
-    assert(a == b && a.nonEmpty, "reloaded sketch must scrub bit-identically")
-  }
-
-  test("NB quality model and fuzzy key set reload bit-identically and serve identically") {
-    import org.apache.spark.sql.functions.col
-    val dir = tmp()
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val m = graft.operators.Corpus.fitNbQuality(
-      docs.filter(col("lang") === "en"), docs.filter(col("lang") =!= "en"),
-      "doc_id", "text")
-    Artifacts.saveNbQuality(m, s"$dir/nb.json")
-    val m2 = Artifacts.loadNbQuality(s"$dir/nb.json")
-    assert(m2.nBuckets == m.nBuckets && m2.base == m.base &&
-      m2.prior == m.prior && m2.weights.sameElements(m.weights))
-    val probe = docs.limit(50)
-    val a = graft.operators.Corpus.nbScoreRows(probe, m, "doc_id", "text")
-      .collect().toSeq
-    val b = graft.operators.Corpus.nbScoreRows(probe, m2, "doc_id", "text")
-      .collect().toSeq
-    assert(a == b && a.nonEmpty)
-
-    val keys = graft.operators.Corpus.fitFuzzyKeys(
-      docs.filter(col("doc_id") % 10 === 0), "text", prefixChars = 32)
-    Artifacts.saveFuzzyKeys(keys, s"$dir/fuzzy.json")
-    assert(Artifacts.loadFuzzyKeys(s"$dir/fuzzy.json").sameElements(keys)
-      && keys.nonEmpty)
-  }
-
-  test("ANN serve shard reloads bit-identically and serves identically") {
-    val dir = tmp()
-    val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val sh = graft.operators.AnnServe.fitShard(e)
-    Artifacts.saveAnnShard(sh, s"$dir/shard.json")
-    val sh2 = Artifacts.loadAnnShard(s"$dir/shard.json")
-    assert(sh2.dim == sh.dim && sh2.ids.sameElements(sh.ids) &&
-      sh2.flatVecs.sameElements(sh.flatVecs))
-    import org.apache.spark.sql.functions.col
-    val q = e.filter(col("vec_id") < 5)
-    val a = graft.operators.AnnServe.topkRows(q, sh)
-      .orderBy("query_id", "neighbor_id").collect().toSeq
-    val b = graft.operators.AnnServe.topkRows(q, sh2)
-      .orderBy("query_id", "neighbor_id").collect().toSeq
-    assert(a == b && a.nonEmpty, "reloaded shard must serve bit-identically")
-  }
-
-  test("graph-beam serve shard reloads bit-identically and serves " +
-       "identically — no graph rebuild on load") {
-    val dir = tmp()
-    import org.apache.spark.sql.functions.col
-    val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val graph = graft.operators.Ivf.knnGraph(e, "vec_id", "embedding", 8)
-    val sh = graft.operators.AnnServe.fitGraphShard(e, graph)
-    Artifacts.saveGraphShard(sh, s"$dir/graph.bin")
-    val sh2 = Artifacts.loadGraphShard(s"$dir/graph.bin")
-    assert(sh2.dim == sh.dim && sh2.ids.sameElements(sh.ids) &&
-      sh2.flatVecs.sameElements(sh.flatVecs) &&
-      sh2.nbrOff.sameElements(sh.nbrOff) &&
-      sh2.nbrIdx.sameElements(sh.nbrIdx) &&
-      sh2.entryIdx.sameElements(sh.entryIdx))
-    val q = e.filter(col("vec_id") < 5)
-    val a = graft.operators.AnnServe.graphTopkRows(q, sh)
-      .orderBy("query_id", "neighbor_id").collect().toSeq
-    val b = graft.operators.AnnServe.graphTopkRows(q, sh2)
-      .orderBy("query_id", "neighbor_id").collect().toSeq
-    assert(a == b && a.nonEmpty, "reloaded graph shard must serve bit-identically")
-  }
-
-  test("SQ8 serve shard reloads bit-identically and serves identically") {
-    val dir = tmp()
-    val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val sh = graft.operators.AnnServe.fitSqShard(e)
-    Artifacts.saveSqShard(sh, s"$dir/sq.bin")
-    val sh2 = Artifacts.loadSqShard(s"$dir/sq.bin")
-    assert(sh2.dim == sh.dim && sh2.ids.sameElements(sh.ids) &&
-      sh2.codes.sameElements(sh.codes) && sh2.minl.sameElements(sh.minl) &&
-      sh2.stepl.sameElements(sh.stepl) && sh2.norms.sameElements(sh.norms))
-    import org.apache.spark.sql.functions.col
-    val q = e.filter(col("vec_id") < 5)
-    val a = graft.operators.AnnServe.sqTopkRows(q, sh)
-      .orderBy("query_id", "neighbor_id").collect().toSeq
-    val b = graft.operators.AnnServe.sqTopkRows(q, sh2)
-      .orderBy("query_id", "neighbor_id").collect().toSeq
-    assert(a == b && a.nonEmpty, "reloaded SQ8 shard must serve bit-identically")
-  }
-
-  test("BM25 index artifact reloads bit-identically and serves identically " +
-       "— no index rebuild on load") {
-    val dir = tmp()
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val ix = graft.operators.Retrieval.fitBm25Index(docs, "doc_id", "text")
-    Artifacts.saveBm25Index(ix, s"$dir/bm25.bin")
-    val ix2 = Artifacts.loadBm25Index(s"$dir/bm25.bin")
-    assert(ix2.terms.sameElements(ix.terms) && ix2.df.sameElements(ix.df) &&
-      ix2.postOff.sameElements(ix.postOff) &&
-      ix2.postDoc.sameElements(ix.postDoc) &&
-      ix2.postTf.sameElements(ix.postTf) &&
-      ix2.postDl.sameElements(ix.postDl) &&
-      ix2.n == ix.n && ix2.avgdl == ix.avgdl)
-    val q = graft.operators.Retrieval.queryTermArrays(docs, "doc_id", "text")
-    val a = graft.operators.Retrieval.bm25ServeRows(q, ix)
-      .orderBy("query_id", "rank").collect().toSeq
-    val b = graft.operators.Retrieval.bm25ServeRows(q, ix2)
-      .orderBy("query_id", "rank").collect().toSeq
-    assert(a == b && a.nonEmpty, "reloaded index must serve bit-identically")
-    // corrupt class: a truncated file fails at load as a header error
-    val bytes = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$dir/bm25.bin"))
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$dir/trunc.bin"), bytes.take(40))
-    intercept[Exception] { Artifacts.loadBm25Index(s"$dir/trunc.bin") }
-    // wrong magic fails as "not a Bm25Index artifact", not a misread
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$dir/badmagic.bin"),
-      Array.fill[Byte](64)(0x5a))
-    intercept[IllegalArgumentException] {
-      Artifacts.loadBm25Index(s"$dir/badmagic.bin")
-    }
-  }
-
-  test("lang model round-trips bit-identically and serves identically") {
-    val dir = tmp()
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val m = graft.operators.Corpus.fitLangModel(
-      docs, "doc_id", "text", "lang", nBuckets = 256)
-    Artifacts.saveLangModel(m, s"$dir/lang.json")
-    val m2 = Artifacts.loadLangModel(s"$dir/lang.json")
-    assert(m2.langs.sameElements(m.langs) && m2.nBuckets == m.nBuckets &&
-      m2.flatW.sameElements(m.flatW) && m2.priors.sameElements(m.priors))
-    val a = graft.operators.Corpus
-      .langScoreRows(docs, m, "doc_id", "text", "lang")
-      .orderBy("doc_id").collect().toSeq
-    val b = graft.operators.Corpus
-      .langScoreRows(docs, m2, "doc_id", "text", "lang")
-      .orderBy("doc_id").collect().toSeq
-    assert(a == b && a.nonEmpty, "reloaded lang model must serve bit-identically")
-  }
-
-  test("two-level quantizer round-trips with identical probe output") {
-    import org.apache.spark.sql.functions.col
-    val dir = tmp()
-    val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("f"))
-    val c2 = graft.operators.Ivf.fitCentroids2(e, "vec_id", "f", nc = 8, nf = 8)
-    Artifacts.saveCentroids2(c2, s"$dir/c2")
-    val c2b = Artifacts.loadCentroids2(s"$dir/c2")
-    assert(c2b.nc == c2.nc && c2b.nf == c2.nf && c2b.dim == c2.dim)
-    val probe = (m: graft.operators.Ivf.Centroids2) =>
-      e.select(col("vec_id"),
-        graft.operators.Ivf.probeCells2Col(col("f"), m, npc = 2, npf = 3).as("cells"))
-        .collect().map(r => (r.getLong(0), r.getSeq[Int](1))).toSeq
-    assert(probe(c2b) == probe(c2),
-      "reloaded two-level quantizer must probe identically")
-  }
-
   test("ensemble bundle round-trip: loaded bundle scores identically") {
     val dir = tmp()
     val fitted = graft.ml.Ensemble.fit(spark, "/root/testdata/sf0.001")
