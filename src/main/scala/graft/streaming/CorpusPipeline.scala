@@ -480,35 +480,11 @@ object CorpusPipeline {
         .select(col("vec_id").as("doc_id"),
           col("embedding").cast("array<double>").as("embedding")),
         Seq("doc_id"))
-    val root = java.nio.file.Files.createTempDirectory("graft_corpuspipe").toString
-    val in = s"$root/in"
-    val mc = new MaintainedCorpus(spark, s"$root/state", k,
-      compactEvery = compactEvery)
-    // test-scale runner tuning only (the drainToTable rule): each
-    // micro-batch chains many SMALL state jobs, and 32 shuffle
-    // partitions plus per-stage AQE re-planning per tiny stage is pure
-    // scheduler overhead; the operator itself takes the session
-    // default untouched
-    ScoreStream.withConfs(spark, "spark.sql.shuffle.partitions" -> "8",
-                          "spark.sql.adaptive.enabled" -> "false") {
-      // stage the join ONCE (lazy hot blocks) — the old loop re-ran
-      // the documents⋈embeddings join per slice. The writes stay
-      // SEQUENTIAL: they append to one directory, and concurrent jobs
-      // would race on its shared _temporary staging dir.
-      val staged = feed.localCheckpoint(false)
-      (0 until nSlices).foreach { s =>
-        staged.filter(pmod(xxhash64(col("doc_id")), lit(nSlices)) === s)
-          .coalesce(1).write.mode("append").parquet(in)
-      }
-      val q = start(mc,
-        spark.readStream.schema(feed.schema).option("maxFilesPerTrigger", 1).parquet(in),
-        s"$root/ckpt")
-      q.awaitTermination()
+    Drain.sliced(spark, "corpuspipe", feed, col("doc_id"), nSlices) { (root, stream) =>
+      val mc = new MaintainedCorpus(spark, s"$root/state", k,
+        compactEvery = compactEvery)
+      (start(mc, stream, s"$root/ckpt"),
+       () => mc.graph.edges.orderBy("query_id", "neighbor_id"))
     }
-    // pin the result into hot blocks, then reclaim the temp root
-    // (state snapshots there hold multiple full corpus copies per run)
-    val out = mc.graph.edges.orderBy("query_id", "neighbor_id").localCheckpoint()
-    VersionedState.deleteRecursively(root)
-    out
   }
 }

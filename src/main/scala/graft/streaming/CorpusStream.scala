@@ -168,7 +168,7 @@ object CorpusStream {
     * safe, it arrives last and can only lose). */
   def lineDedupOverFile(spark: org.apache.spark.sql.SparkSession,
                         sfDir: String): DataFrame =
-    drainToTable(spark, "linestream",
+    Drain.toTable(spark, "linestream",
       lineDedupStream(
         graft.operators.Lines.linesWrapped(orderedDocStream(spark, sfDir),
           "doc_id", "text", "source", carry = Seq("ts")),
@@ -363,8 +363,6 @@ object CorpusStream {
                      k: Int = 8): DataFrame =
     graft.operators.Corpus.decontaminateRows(docs, bf, idCol, textCol, k)
 
-  private val runSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** The declared `q_decontaminate_stream` runner: fit the sketch on
     * the benchmark split (doc_id % 10 == 0) batch-side, stream the
     * remaining corpus from the documents parquet through the probe,
@@ -376,13 +374,10 @@ object CorpusStream {
     val docs = graft.Tables.documents(spark, sfDir)
     val bf = graft.operators.Corpus.fitDecontaminationBloom(
       docs.filter(col("doc_id") % 10 === 0), "doc_id", "text", k)
-    val name = s"__graft_decon_${runSeq.incrementAndGet()}"
     val stream = graft.Tables.documentsStream(spark, sfDir)
       .filter(col("doc_id") % 10 =!= 0)
-    val q = decontaminated(stream, bf, "doc_id", "text", k)
-      .writeStream.format("memory").queryName(name).outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name)
+    Drain.toTable(spark, "decon",
+      decontaminated(stream, bf, "doc_id", "text", k))
   }
 
   /** Streaming fuzzy decontamination — the edit-distance serve half
@@ -407,13 +402,10 @@ object CorpusStream {
     val docs = graft.Tables.documents(spark, sfDir)
     val keys = graft.operators.Corpus.fitFuzzyKeys(
       docs.filter(col("doc_id") % 10 === 0), "text", prefixChars)
-    val name = s"__graft_fuzzy_${runSeq.incrementAndGet()}"
     val stream = graft.Tables.documentsStream(spark, sfDir)
       .filter(col("doc_id") % 10 =!= 0)
-    val q = fuzzyDecontaminated(stream, keys, "doc_id", "text", maxDist, prefixChars)
-      .writeStream.format("memory").queryName(name).outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name)
+    Drain.toTable(spark, "fuzzy",
+      fuzzyDecontaminated(stream, keys, "doc_id", "text", maxDist, prefixChars))
   }
 
   /** Streaming markup extraction — boilerplate removal applied at
@@ -433,12 +425,9 @@ object CorpusStream {
     * verbatim. */
   def htmlExtractedOverFile(spark: org.apache.spark.sql.SparkSession,
                             sfDir: String): DataFrame = {
-    val name = s"__graft_extract_${runSeq.incrementAndGet()}"
-    val q = htmlExtracted(graft.operators.Extract.htmlWrapped(
-        graft.Tables.documentsStream(spark, sfDir), "doc_id", "text"))
-      .writeStream.format("memory").queryName(name).outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name)
+    Drain.toTable(spark, "extract",
+      htmlExtracted(graft.operators.Extract.htmlWrapped(
+        graft.Tables.documentsStream(spark, sfDir), "doc_id", "text")))
   }
 
   /** The declared `q_link_graph_stream` runner: page wrap + hyperlink
@@ -449,15 +438,12 @@ object CorpusStream {
     * verbatim. */
   def linkEdgesOverFile(spark: org.apache.spark.sql.SparkSession,
                         sfDir: String): DataFrame = {
-    val name = s"__graft_links_${runSeq.incrementAndGet()}"
-    val q = graft.operators.LinkGraph.linkEdges(
+    Drain.toTable(spark, "links",
+      graft.operators.LinkGraph.linkEdges(
         graft.operators.LinkGraph.linkPageWrapped(
           graft.Tables.documentsStream(spark, sfDir),
           "doc_id", "source", "lang"),
-        "doc_id", "url", "html")
-      .writeStream.format("memory").queryName(name).outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name)
+        "doc_id", "url", "html"))
   }
 
   /** The declared `q_pagerank_stream` runner — streaming link-graph
@@ -485,33 +471,20 @@ object CorpusStream {
     * every consumer's batch oracle applies verbatim. The iteration /
     * motif count then runs over the drained graph as a per-refresh
     * batch job (the serve-refresh pattern), never a per-batch corpus
-    * recompute. */
+    * recompute. Append-mode dropDuplicates emits every kept row in the
+    * data batch itself, so the drain skips the no-data batch. */
   private def hostEdgeStateDrain(spark: org.apache.spark.sql.SparkSession,
-                                 sfDir: String): DataFrame = {
-    val name = s"__graft_prstream_${runSeq.incrementAndGet()}"
-    val edges = graft.operators.LinkGraph.linkEdges(
-        graft.operators.LinkGraph.linkPageWrapped(
-          graft.Tables.documentsStream(spark, sfDir),
-          "doc_id", "source", "lang"),
-        "doc_id", "url", "html")
-      .filter(col("src_host") =!= col("dst_host"))
-      .select("src_host", "dst_host")
-      .dropDuplicates("src_host", "dst_host")
-    // r16: same test-scale drain tuning as `drainToTable` — 8 state
-    // partitions instead of 32 (fixed init+commit cost per store per
-    // batch dominates one host-graph-sized data batch), and no
-    // trailing no-data micro-batch (append-mode dropDuplicates emits
-    // every kept row in the data batch itself; the extra batch only
-    // advanced state cleanup this finite drain never reads). Drained
-    // edge set unchanged — the consumers' batch oracles gate it.
-    ScoreStream.withConfs(spark, "spark.sql.shuffle.partitions" -> "8",
-        "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
-      val q = edges.writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.table(name)
-  }
+                                 sfDir: String): DataFrame =
+    Drain.toTable(spark, "prstream",
+      graft.operators.LinkGraph.linkEdges(
+          graft.operators.LinkGraph.linkPageWrapped(
+            graft.Tables.documentsStream(spark, sfDir),
+            "doc_id", "source", "lang"),
+          "doc_id", "url", "html")
+        .filter(col("src_host") =!= col("dst_host"))
+        .select("src_host", "dst_host")
+        .dropDuplicates("src_host", "dst_host"),
+      noDataBatch = false)
 
   /** The declared `q_hits_stream` runner: integer HITS over the
     * maintained standing host graph — same state, different refresh
@@ -539,16 +512,13 @@ object CorpusStream {
     * equals the batch `Sketches.cmsSketch` cell-for-cell, so
     * `q_heavy_hitters`'s full oracle applies verbatim. */
   def cmsOverFile(spark: org.apache.spark.sql.SparkSession,
-                  sfDir: String): DataFrame = {
-    val name = s"__graft_cms_${runSeq.incrementAndGet()}"
-    val q = graft.operators.Sketches.cmsSketch(
-        graft.Tables.documentsStream(spark, sfDir), "text")
-      .writeStream.format("memory").queryName(name)
-      .outputMode("complete").start()
-    try q.processAllAvailable() finally q.stop()
-    graft.operators.Sketches.cmsReport(spark.table(name),
+                  sfDir: String): DataFrame =
+    graft.operators.Sketches.cmsReport(
+      Drain.toTable(spark, "cms",
+        graft.operators.Sketches.cmsSketch(
+          graft.Tables.documentsStream(spark, sfDir), "text"),
+        outputMode = "complete"),
       graft.Tables.documents(spark, sfDir), "text")
-  }
 
   /** The declared `q_bm25_serve_stream` runner — the SPARSE ranker's
     * serve tier (the last hole in the serve matrix next to the dense
@@ -563,14 +533,11 @@ object CorpusStream {
                         sfDir: String): DataFrame = {
     val ix = graft.operators.Retrieval.fitBm25Index(
       graft.Tables.documents(spark, sfDir), "doc_id", "text")
-    val name = s"__graft_bm25_${runSeq.incrementAndGet()}"
-    val q = graft.operators.Retrieval.bm25ServeRows(
+    Drain.toTable(spark, "bm25",
+      graft.operators.Retrieval.bm25ServeRows(
         graft.operators.Retrieval.queryTermArrays(
           graft.Tables.documentsStream(spark, sfDir), "doc_id", "text"),
-        ix)
-      .writeStream.format("memory").queryName(name).outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name)
+        ix))
   }
 
   /** The declared `q_hybrid_serve_stream` runner — HYBRID retrieval
@@ -594,11 +561,8 @@ object CorpusStream {
         graft.Tables.documentsStream(spark, sfDir), "doc_id", "text")
       .join(emb.select(col("vec_id").as("query_id"), col("embedding")),
         Seq("query_id"))
-    val name = s"__graft_hybrid_${runSeq.incrementAndGet()}"
-    val q = graft.operators.Retrieval.hybridServeRows(stream, ix, shard)
-      .writeStream.format("memory").queryName(name).outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name)
+    Drain.toTable(spark, "hybrid",
+      graft.operators.Retrieval.hybridServeRows(stream, ix, shard))
   }
 
   /** The declared `q_kmeans_stream` runner — the k-means SERVE twin
@@ -612,13 +576,10 @@ object CorpusStream {
                            sfDir: String): DataFrame = {
     val cent = graft.operators.Cluster.fitKmeans(
       graft.Tables.embeddings(spark, sfDir), "vec_id", "embedding")
-    val name = s"__graft_kmeans_${runSeq.incrementAndGet()}"
-    val q = graft.operators.Cluster.assignClusters(
+    Drain.toTable(spark, "kmeans",
+      graft.operators.Cluster.assignClusters(
         graft.Tables.embeddingsStream(spark, sfDir), "vec_id", "embedding",
-        cent)
-      .writeStream.format("memory").queryName(name).outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name)
+        cent))
   }
 
   /** The declared `q_parse_jsonl_stream` runner: the documents stream
@@ -629,14 +590,11 @@ object CorpusStream {
     * `q_parse_jsonl` row-for-row, so its oracle applies verbatim. */
   def parseJsonlOverFile(spark: org.apache.spark.sql.SparkSession,
                          sfDir: String): DataFrame = {
-    val name = s"__graft_jsonl_${runSeq.incrementAndGet()}"
-    val q = graft.operators.Ingest.parseJsonl(
+    Drain.toTable(spark, "jsonl",
+      graft.operators.Ingest.parseJsonl(
         graft.operators.Ingest.jsonlWrapped(
           graft.Tables.documentsStream(spark, sfDir),
-          "doc_id", "text", "source", "lang"))
-      .writeStream.format("memory").queryName(name).outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name)
+          "doc_id", "text", "source", "lang")))
   }
 
   /** The declared `q_parse_warc_stream` runner — the WARC front
@@ -654,8 +612,7 @@ object CorpusStream {
     val files = graft.operators.Warc.warcFiles(graft.operators.Warc
       .warcRecords(graft.Tables.documents(spark, sfDir),
         "doc_id", "text", "source"))
-    val root = java.nio.file.Files.createTempDirectory("graft_warc").toString
-    try {
+    Drain.withTempRoot("warc") { root =>
       val in = s"$root/in"
       files.coalesce(2).write.mode("overwrite").parquet(in)
       val stream = spark.readStream.schema(files.schema)
@@ -663,19 +620,12 @@ object CorpusStream {
       val parsed = graft.operators.Warc.parseWarc(stream)
       val resp = graft.operators.Warc.responses(parsed)
         .withColumn("body_md5", md5(col("body").cast("binary")))
-      val out = graft.operators.Extract.extractHtml(resp, "doc_id", "body",
-          carry = Seq("gid", "ridx", "uri", "domain", "wdate", "clen",
-            "body_md5", "n_recs", "n_bad"))
-        .drop("content")
-      val name = s"__graft_warc_${runSeq.incrementAndGet()}"
-      val q = out.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
-      spark.table(name).localCheckpoint()
-    } finally VersionedState.deleteRecursively(root)
+      Drain.toTable(spark, "warc",
+        graft.operators.Extract.extractHtml(resp, "doc_id", "body",
+            carry = Seq("gid", "ridx", "uri", "domain", "wdate", "clen",
+              "body_md5", "n_recs", "n_bad"))
+          .drop("content"))
+    }
   }
 
   /** Streaming model-based quality gate — the Bernoulli-NB serve half
@@ -697,11 +647,8 @@ object CorpusStream {
     val m = graft.operators.Corpus.fitNbQuality(
       docs.filter(col("lang") === "en"), docs.filter(col("lang") =!= "en"),
       "doc_id", "text", nBuckets)
-    val name = s"__graft_nbq_${runSeq.incrementAndGet()}"
-    val q = nbScored(graft.Tables.documentsStream(spark, sfDir), m)
-      .writeStream.format("memory").queryName(name).outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name)
+    Drain.toTable(spark, "nbq",
+      nbScored(graft.Tables.documentsStream(spark, sfDir), m))
   }
 
   /** Streaming ANN serve — a live query-vector feed answered against a
@@ -723,13 +670,10 @@ object CorpusStream {
                        sfDir: String, k: Int = 10): DataFrame = {
     val shard = graft.operators.AnnServe.fitShard(
       graft.Tables.embeddings(spark, sfDir))
-    val name = s"__graft_annserve_${runSeq.incrementAndGet()}"
-    val q = annTopk(
+    Drain.toTable(spark, "annserve",
+      annTopk(
         graft.Tables.embeddingsStream(spark, sfDir).filter(col("vec_id") < 10),
-        shard, k)
-      .writeStream.format("memory").queryName(name).outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name)
+        shard, k))
   }
 
   /** The declared `q_lang_classifier_stream` runner: fit the trained
@@ -742,12 +686,9 @@ object CorpusStream {
                              sfDir: String, nBuckets: Int = 1024): DataFrame = {
     val m = graft.operators.Corpus.fitLangModel(
       graft.Tables.documents(spark, sfDir), "doc_id", "text", "lang", nBuckets)
-    val name = s"__graft_langcls_${runSeq.incrementAndGet()}"
-    val q = graft.operators.Corpus.langScoreRows(
-        graft.Tables.documentsStream(spark, sfDir), m, "doc_id", "text", "lang")
-      .writeStream.format("memory").queryName(name).outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name)
+    Drain.toTable(spark, "langcls",
+      graft.operators.Corpus.langScoreRows(
+        graft.Tables.documentsStream(spark, sfDir), m, "doc_id", "text", "lang"))
   }
 
   /** The declared `media_video_int_stream` runner — the MEDIA family's
@@ -765,12 +706,9 @@ object CorpusStream {
                             sfDir: String): DataFrame = {
     val docs = graft.Tables.documentsStream(spark, sfDir)
       .withColumn("text", regexp_replace(col("text"), "[^ -~]", ""))
-    val name = s"__graft_mediavint_${runSeq.incrementAndGet()}"
-    val q = graft.multimodal.Media.videoIntStats(
-        graft.multimodal.Media.videosFromDocuments(docs, "doc_id", "text"))
-      .writeStream.format("memory").queryName(name).outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name)
+    Drain.toTable(spark, "mediavint",
+      graft.multimodal.Media.videoIntStats(
+        graft.multimodal.Media.videosFromDocuments(docs, "doc_id", "text")))
   }
 
   /** The declared `q_sq_distortion_stream` runner — the distortion
@@ -796,13 +734,10 @@ object CorpusStream {
     val stepl = array(mm.getSeq[Double](1).map(lit): _*)
     val (l2, fid) = graft.operators.Embeddings.sqDistortionCols(
       col("f"), minl, stepl)
-    val name = s"__graft_sqdist_${runSeq.incrementAndGet()}"
-    val q = graft.Tables.embeddingsStream(spark, sfDir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("f"))
-      .select(col("vec_id"), l2.as("l2_err"), fid.as("cos_fid"))
-      .writeStream.format("memory").queryName(name).outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name)
+    Drain.toTable(spark, "sqdist",
+      graft.Tables.embeddingsStream(spark, sfDir)
+        .select(col("vec_id"), col("embedding").cast("array<double>").as("f"))
+        .select(col("vec_id"), l2.as("l2_err"), fid.as("cos_fid")))
   }
 
   /** The declared `sim_sq_serve_stream` runner — the SQ8 tier's
@@ -816,13 +751,10 @@ object CorpusStream {
                       sfDir: String, k: Int = 10): DataFrame = {
     val shard = graft.operators.AnnServe.fitSqShard(
       graft.Tables.embeddings(spark, sfDir))
-    val name = s"__graft_sqserve_${runSeq.incrementAndGet()}"
-    val q = graft.operators.AnnServe.sqTopkRows(
+    Drain.toTable(spark, "sqserve",
+      graft.operators.AnnServe.sqTopkRows(
         graft.Tables.embeddingsStream(spark, sfDir).filter(col("vec_id") < 10),
-        shard, k)
-      .writeStream.format("memory").queryName(name).outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name)
+        shard, k))
   }
 
   /** The declared `sim_graph_topk_stream` runner — the graph-beam
@@ -840,13 +772,10 @@ object CorpusStream {
     val e = graft.Tables.embeddings(spark, sfDir)
     val graph = graft.operators.Ivf.knnGraph(e, "vec_id", "embedding", 8)
     val shard = graft.operators.AnnServe.fitGraphShard(e, graph)
-    val name = s"__graft_gserve_${runSeq.incrementAndGet()}"
-    val q = graft.operators.AnnServe.graphTopkRows(
+    Drain.toTable(spark, "gserve",
+      graft.operators.AnnServe.graphTopkRows(
         graft.Tables.embeddingsStream(spark, sfDir).filter(col("vec_id") < 10),
-        shard, k, ef)
-      .writeStream.format("memory").queryName(name).outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name)
+        shard, k, ef))
   }
 
   /** The declared `q_bitext_mine_stream` runner — bitext mining's
@@ -863,14 +792,11 @@ object CorpusStream {
     val e = graft.Tables.embeddings(spark, sfDir).filter(col("vec_id") < 400)
     val shard = graft.operators.Mining.fitBitextServe(
       e.filter(col("vec_id") % 2 === 0), e.filter(col("vec_id") % 2 =!= 0), k)
-    val name = s"__graft_bitext_${runSeq.incrementAndGet()}"
-    val q = graft.operators.Mining.bitextMineServe(
+    Drain.toTable(spark, "bitext",
+      graft.operators.Mining.bitextMineServe(
         graft.Tables.embeddingsStream(spark, sfDir)
           .filter(col("vec_id") < 400 && col("vec_id") % 2 === 0),
-        shard, k)
-      .writeStream.format("memory").queryName(name).outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name)
+        shard, k))
   }
 
   /** The declared `q_hard_negatives_stream` runner — the MINING
@@ -889,13 +815,10 @@ object CorpusStream {
                       sfDir: String, k: Int = 20, m: Int = 5): DataFrame = {
     val e = graft.Tables.embeddings(spark, sfDir)
     val shard = graft.operators.AnnServe.fitLabeledShard(e, e)
-    val name = s"__graft_hardneg_${runSeq.incrementAndGet()}"
-    val q = graft.operators.AnnServe.hardNegRows(
+    Drain.toTable(spark, "hardneg",
+      graft.operators.AnnServe.hardNegRows(
         graft.Tables.embeddingsStream(spark, sfDir).filter(col("vec_id") < 50),
-        shard, k, m)
-      .writeStream.format("memory").queryName(name).outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name)
+        shard, k, m))
   }
 
   // =====================================================================
@@ -921,37 +844,6 @@ object CorpusStream {
       .withColumn("ts",
         timestamp_micros((lit(1704067200L) + col("doc_id")) * lit(1000000L)))
 
-  /** Drain a finite-input stream to a memory-sink table. Starts the
-    * query under 8 shuffle partitions (`ScoreStream
-    * .withShufflePartitions` — the stream pins the value into its
-    * offset log at start): the four dedup twins chain 1–2 stateful
-    * operators, and each state-store partition pays a fixed init +
-    * commit + offset-log cost per micro-batch, so 32 stores over one
-    * data batch of test-scale input is pure scheduler overhead. The
-    * deployable transforms take the session default untouched. */
-  /** `noDataBatch = false` (r16, guide §1.2 remove work outright):
-    * a stateless-EMISSION drain (rows land in the sink during the
-    * data batch itself — the dropDuplicates twins) reads nothing from
-    * the trailing no-data micro-batch; it existed only to advance
-    * state cleanup this finite harness never observes, yet cost a
-    * full planning + 8-state-store-commit round per drain (measured
-    * 1.62 → 1.16 s for q_canonical_dedup_stream at sf0.1). The
-    * WATERMARK-emission twins (span/substr/line: final windows emit
-    * ONLY in the no-data batch — verified: their drains return zero
-    * rows without it) keep the default. */
-  private def drainToTable(spark: org.apache.spark.sql.SparkSession,
-                           prefix: String, df: DataFrame,
-                           noDataBatch: Boolean = true): DataFrame = {
-    val name = s"__graft_${prefix}_${runSeq.incrementAndGet()}"
-    ScoreStream.withConfs(spark, "spark.sql.shuffle.partitions" -> "8",
-        "spark.sql.streaming.noDataMicroBatches.enabled" -> noDataBatch.toString) {
-      val q = df.writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.table(name)
-  }
-
   /** Declared `q_span_dedup_stream`: the span-dedup stream drained to
     * its end state. Watermark 0 s + per-doc 1 s tumbling windows ⇒
     * after the single data micro-batch the no-data batch closes every
@@ -962,7 +854,7 @@ object CorpusStream {
     * so it can only lose spans to emitted docs, never claim one. */
   def spanDedupOverFile(spark: org.apache.spark.sql.SparkSession,
                         sfDir: String, spanLen: Int = 5): DataFrame =
-    drainToTable(spark, "spanstream",
+    Drain.toTable(spark, "spanstream",
       dedupSpansStream(orderedDocStream(spark, sfDir), "ts", "doc_id", "text",
         spanLen, watermark = "0 seconds", window = "1 second"))
 
@@ -971,7 +863,7 @@ object CorpusStream {
     * scheme as `spanDedupOverFile`). */
   def substringsDedupOverFile(spark: org.apache.spark.sql.SparkSession,
                               sfDir: String, gramLen: Int = 20): DataFrame =
-    drainToTable(spark, "substrstream",
+    Drain.toTable(spark, "substrstream",
       dedupSubstringsStream(orderedDocStream(spark, sfDir), "ts", "doc_id",
         "text", gramLen, watermark = "0 seconds", window = "1 second"))
 
@@ -982,7 +874,7 @@ object CorpusStream {
     * batch rule (min doc_id per normalized digest). */
   def canonicalDedupOverFile(spark: org.apache.spark.sql.SparkSession,
                              sfDir: String): DataFrame =
-    drainToTable(spark, "canonstream",
+    Drain.toTable(spark, "canonstream",
       dedupCanonical(orderedDocStream(spark, sfDir), "ts", "text")
         .select(col("doc_id"), col("source"), col("n_chars")),
       noDataBatch = false)
@@ -1357,31 +1249,16 @@ object CorpusStream {
     val emb = graft.Tables.embeddings(spark, sfDir).select(col("vec_id"), col("embedding"))
     val feed = docs.join(emb, col("doc_id") === col("vec_id"), "full")
       .select(col("doc_id"), col("text"), col("vec_id"), col("embedding"))
-    val root = java.nio.file.Files.createTempDirectory("graft_xmodal").toString
-    val in = s"$root/in"
-    val cm = new MaintainedCrossmodal()
-    ScoreStream.withConfs(spark, "spark.sql.shuffle.partitions" -> "8",
-                          "spark.sql.adaptive.enabled" -> "false") {
-      // materialize the full-outer feed once — the per-slice writes
-      // below then scan memory blocks instead of re-running the join
-      val fed = feed.localCheckpoint()
-      (0 until nSlices).foreach { s =>
-        fed.filter(pmod(xxhash64(coalesce(col("doc_id"), col("vec_id"))),
-            lit(nSlices)) === s)
-          .coalesce(1).write.mode("append").parquet(in)
-      }
-      val q = spark.readStream.schema(feed.schema)
-        .option("maxFilesPerTrigger", 1).parquet(in)
-        .writeStream
+    Drain.sliced(spark, "xmodal", feed, coalesce(col("doc_id"), col("vec_id")),
+        nSlices) { (root, stream) =>
+      val cm = new MaintainedCrossmodal()
+      val q = stream.writeStream
         .foreachBatch { (batch: DataFrame, _: Long) => cm.advance(batch): Unit }
         .option("checkpointLocation", s"$root/ckpt")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
-      q.awaitTermination()
+      (q, () => cm.verdict.orderBy("doc_id"))
     }
-    val out = cm.verdict.orderBy("doc_id").localCheckpoint()
-    VersionedState.deleteRecursively(root)
-    out
   }
 
   /** Declared `q_simhash_dedup_stream`: first-occurrence keep per
@@ -1391,7 +1268,7 @@ object CorpusStream {
     * carries the oracle for the signature semantics). */
   def simhashDedupOverFile(spark: org.apache.spark.sql.SparkSession,
                            sfDir: String): DataFrame =
-    drainToTable(spark, "simhashstream",
+    Drain.toTable(spark, "simhashstream",
       dedupBySimhash(orderedDocStream(spark, sfDir), "ts", "text")
         .select(col("doc_id"), col("source"), col("n_chars")),
       noDataBatch = false)

@@ -427,32 +427,11 @@ object GraphStream {
                        compactEvery: Int = 1): DataFrame = {
     val e = graft.Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-    val root = java.nio.file.Files.createTempDirectory("graft_graphstream").toString
-    val in = s"$root/in"
-    val graph = new MaintainedGraph(spark, s"$root/state", k,
-      compactEvery = compactEvery)
-    // test-scale runner tuning only (the drainToTable rule): the
-    // per-batch state jobs are tiny here, so 32-partition shuffles and
-    // per-stage AQE re-planning are pure scheduler overhead
-    ScoreStream.withConfs(spark, "spark.sql.shuffle.partitions" -> "8",
-                          "spark.sql.adaptive.enabled" -> "false") {
-      // slice writes stay SEQUENTIAL: they append to one directory,
-      // and concurrent jobs would race on its shared _temporary
-      // staging dir
-      (0 until nSlices).foreach { s =>
-        e.filter(pmod(xxhash64(col("vec_id")), lit(nSlices)) === s)
-          .coalesce(1).write.mode("append").parquet(in)
-      }
-      val q = start(graph,
-        spark.readStream.schema(e.schema).option("maxFilesPerTrigger", 1).parquet(in),
-        s"$root/ckpt")
-      q.awaitTermination()
+    Drain.sliced(spark, "graphstream", e, col("vec_id"), nSlices) { (root, stream) =>
+      val graph = new MaintainedGraph(spark, s"$root/state", k,
+        compactEvery = compactEvery)
+      (start(graph, stream, s"$root/ckpt"),
+       () => graph.edges.orderBy("query_id", "neighbor_id"))
     }
-    // pin the result into hot blocks, then reclaim the temp root —
-    // state snapshots there can hold multiple full-corpus copies and
-    // repeated declared-query runs would otherwise accumulate them
-    val out = graph.edges.orderBy("query_id", "neighbor_id").localCheckpoint()
-    VersionedState.deleteRecursively(root)
-    out
   }
 }

@@ -153,39 +153,6 @@ object ScoreStream {
                   checkpointDir: String): StreamingQuery =
     run(scored(socketSource(spark, host, port), custProfile), outDir, checkpointDir, None)
 
-  private val runSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Run `body` with `spark.sql.shuffle.partitions` temporarily set to
-    * `n`, restoring the previous value after. For the FINITE-INPUT
-    * streaming twins: their stateful operators pay a fixed per-batch
-    * cost per state-store partition (init + commit + offset-log entry),
-    * and with one data micro-batch over test-scale input, 32 stores is
-    * pure scheduler overhead — the verify/bench twins run 8. Streaming
-    * queries pin this conf into the offset-log metadata at query start,
-    * so the restore cannot affect a stream already running; shuffle
-    * partition COUNT never changes query results, so a concurrent batch
-    * plan observing the temporary value stays correct (it may just
-    * shuffle into fewer partitions; AQE re-coalesces anyway). At
-    * production scale the deployable `start` runners use the session
-    * default untouched. */
-  private[streaming] def withShufflePartitions[T](spark: SparkSession, n: Int)(body: => T): T =
-    withConfs(spark, "spark.sql.shuffle.partitions" -> n.toString)(body)
-
-  /** Generalized conf scoping for the finite-input runners. Only confs
-    * that can never change query RESULTS belong here (shuffle partition
-    * count, adaptive execution on/off): a concurrent batch plan in the
-    * same session observing the temporary value stays correct — it may
-    * just shuffle differently. The maintained-state runners also turn
-    * AQE off: their micro-batches chain dozens of KB-sized stages, and
-    * per-stage adaptive re-planning is pure latency at that size (the
-    * deployable `start` runners take the session default untouched). */
-  private[streaming] def withConfs[T](spark: SparkSession,
-                                      kvs: (String, String)*)(body: => T): T = {
-    val olds = kvs.map { case (k, _) => k -> spark.conf.get(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally olds.foreach { case (k, v) => spark.conf.set(k, v) }
-  }
-
   /** Finite-input form for oracle verification of the AS-BUILT
     * streaming scoring path: the events parquet streamed through
     * `scored` (watermark → within-watermark dedup → stream-static
@@ -199,13 +166,8 @@ object ScoreStream {
                        Pipelines.EventScoringConfig()): DataFrame = {
     val ev = graft.Tables.events(spark, sfDir)
     val prof = ev.groupBy("user_id").agg(avg("value").as("cust_avg"))
-    val name = s"__graft_scored_${runSeq.incrementAndGet()}"
-    withShufflePartitions(spark, 8) {
-      val q = scored(graft.Tables.eventsStream(spark, sfDir), prof, cfg)
-        .writeStream.format("memory").queryName(name).outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.table(name)
+    Drain.toTable(spark, "scored",
+      scored(graft.Tables.eventsStream(spark, sfDir), prof, cfg))
   }
 
   /** File-source convenience form of `start`. `maxFilesPerTrigger`

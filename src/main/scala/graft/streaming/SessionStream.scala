@@ -97,8 +97,6 @@ object SessionStream {
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(update(gapSeconds))
   }
 
-  private val runSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** Finite-input form, for oracle verification of the AS-BUILT stream:
     * stream the events parquet through `closedSessions` and return the
     * emitted rows as a batch frame. `processAllAvailable` covers the
@@ -116,15 +114,7 @@ object SessionStream {
     val events = graft.Tables.eventsStream(spark, sfDir)
       .select(col("event_id"), col("ts"), col("user_id"), col("value"))
       .as[EventIn]
-    val name = s"__graft_sessions_${runSeq.incrementAndGet()}"
-    // 8 state-store partitions: the finite-input run's cost is fixed
-    // per-partition store overhead, not data (see
-    // ScoreStream.withShufflePartitions)
-    ScoreStream.withShufflePartitions(spark, 8) {
-      val q = closedSessions(events, gapSeconds, watermarkDelay)
-        .writeStream.format("memory").queryName(name).outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.table(name)
+    Drain.toTable(spark, "sessions",
+      closedSessions(events, gapSeconds, watermarkDelay).toDF())
   }
 }

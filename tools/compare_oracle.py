@@ -17,8 +17,12 @@ driver's canonicalizer cannot even hash):
     unhashable -> TypeError), so a driver-incompatible output schema
     now fails HERE first instead of at round adjudication.
 
+A query whose compare takes over 10 s prints one `SLOW` line to stderr
+with the seconds of its four phases: the DuckDB oracle, the fetch of
+the Spark result, the row compare and the canonical hash.
+
 Usage: compare_oracle.py <sfDir> <verifyOut>"""
-import sys, json, math
+import sys, json, math, time
 import duckdb
 import pandas as pd
 
@@ -39,50 +43,77 @@ def canon_hash(tbl, cols):
     return int(pd.util.hash_pandas_object(df, index=False).sum() & ((1 << 64) - 1))
 
 
-oracle = json.load(open(f"{vout}/oracle_sql.json"))
-fail = 0
-for name, sql in sorted(oracle.items()):
+def compare(name, sql, t):
+    """One query's two-layer compare; returns its stdout line. Records
+    the seconds of each phase in `t` (oracle, fetch, compare, hash) as
+    the phase ends."""
+    clock = [time.perf_counter()]
+
+    def lap(phase):
+        now = time.perf_counter()
+        t[phase] = now - clock[0]
+        clock[0] = now
+
     try:
         exp = con.execute(sql).fetch_arrow_table()
     except Exception as e:
-        print(f"FAIL {name}: oracle SQL error: {e}"); fail += 1; continue
+        return f"FAIL {name}: oracle SQL error: {e}"
+    finally:
+        lap("oracle")
     try:
         got = con.execute(
             f"SELECT * FROM parquet_scan('{vout}/{name}/*.parquet')").fetch_arrow_table()
     except Exception as e:
-        print(f"FAIL {name}: spark result missing: {e}"); fail += 1; continue
+        return f"FAIL {name}: spark result missing: {e}"
+    finally:
+        lap("fetch")
     ecols, gcols = sorted(exp.column_names), sorted(got.column_names)
     if ecols != gcols:
-        print(f"FAIL {name}: columns {gcols} != oracle {ecols}"); fail += 1; continue
-    e = exp.select(ecols).to_pylist()
-    g = got.select(gcols).to_pylist()
-    if len(e) != len(g):
-        print(f"FAIL {name}: rows {len(g)} != oracle {len(e)}"); fail += 1; continue
-    bad = None
-    for i, (re_, rg) in enumerate(zip(e, g)):
-        for c in ecols:
-            a, b = re_[c], rg[c]
-            eq = (a == b) or (isinstance(a, float) and isinstance(b, float)
-                             and (a == b or (math.isnan(a) and math.isnan(b))))
-            if not eq:
-                bad = (i, c, a, b); break
-        if bad: break
-    if bad:
-        i, c, a, b = bad
-        print(f"FAIL {name}: row {i} col {c}: spark={b!r} oracle={a!r}"); fail += 1
-        continue
+        return f"FAIL {name}: columns {gcols} != oracle {ecols}"
+    try:
+        e = exp.select(ecols).to_pylist()
+        g = got.select(gcols).to_pylist()
+        if len(e) != len(g):
+            return f"FAIL {name}: rows {len(g)} != oracle {len(e)}"
+        bad = None
+        for i, (re_, rg) in enumerate(zip(e, g)):
+            for c in ecols:
+                a, b = re_[c], rg[c]
+                eq = (a == b) or (isinstance(a, float) and isinstance(b, float)
+                                 and (a == b or (math.isnan(a) and math.isnan(b))))
+                if not eq:
+                    bad = (i, c, a, b); break
+            if bad: break
+        if bad:
+            i, c, a, b = bad
+            return f"FAIL {name}: row {i} col {c}: spark={b!r} oracle={a!r}"
+    finally:
+        lap("compare")
     # Layer 2: the driver's canonicalizer must be able to adjudicate
     # this schema, and its hashes must agree — builder-green must
     # imply driver-green.
     try:
         he, hg = canon_hash(exp, ecols), canon_hash(got, gcols)
     except Exception as ex:
-        print(f"FAIL {name}: driver canonicalizer rejects schema: "
-              f"{type(ex).__name__}: {ex}"); fail += 1; continue
+        return (f"FAIL {name}: driver canonicalizer rejects schema: "
+                f"{type(ex).__name__}: {ex}")
+    finally:
+        lap("hash")
     if he != hg:
-        print(f"FAIL {name}: canonical hash mismatch (spark={hg:#x} "
-              f"oracle={he:#x}) despite exact row equality — dtype skew?")
-        fail += 1; continue
-    print(f"OK   {name}: {len(e)} rows")
+        return (f"FAIL {name}: canonical hash mismatch (spark={hg:#x} "
+                f"oracle={he:#x}) despite exact row equality — dtype skew?")
+    return f"OK   {name}: {len(e)} rows"
+
+
+oracle = json.load(open(f"{vout}/oracle_sql.json"))
+fail = 0
+for name, sql in sorted(oracle.items()):
+    t = {}
+    line = compare(name, sql, t)
+    if sum(t.values()) > 10:
+        print(f"SLOW {name}: " + " ".join(f"{k} {v:.1f} s" for k, v in t.items()),
+              file=sys.stderr, flush=True)
+    print(line)
+    fail += line.startswith("FAIL")
 print(f"{'ALL OK' if fail == 0 else f'{fail} FAILURES'} / {len(oracle)} queries")
 sys.exit(1 if fail else 0)
