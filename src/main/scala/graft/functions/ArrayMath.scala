@@ -1,9 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** Native Catalyst expressions for dense-vector math over
@@ -659,6 +660,136 @@ case class PcaReconScore(child: Expression, flatComponents: Array[Double],
     copy(child = newChild)
 }
 
+/** What every serve scan shares outside its own per-candidate loop:
+  * the query check and the norm. Loud, like the shard-side fit-time
+  * guard (`AnnServe.buildShard`): a longer query vector would be
+  * silently truncated, and a NaN/Inf component would make every score
+  * non-finite, silently emptying the serve answer while the batch
+  * window plan ranks NaN first — the bit-parity contract only holds
+  * for finite inputs, so a contaminated query fails here instead of
+  * diverging. */
+private[graft] object ServeQuery {
+  /** The query as a fresh double array: exactly `dim` components, all
+    * finite. `name` is the calling expression's SQL name. */
+  def vector(name: String, qid: Long, qv: ArrayData, dim: Int): Array[Double] = {
+    if (qv.numElements() != dim)
+      throw new IllegalArgumentException(
+        s"$name: query vector has ${qv.numElements()} elements, need exactly $dim " +
+          "— index shard does not match the data (a longer vector would be " +
+          "silently truncated, diverging from the full-vector batch plan)")
+    val q = new Array[Double](dim)
+    var j = 0
+    while (j < dim) {
+      val x = qv.getDouble(j)
+      if (!java.lang.Double.isFinite(x))
+        throw new IllegalArgumentException(
+          s"$name: non-finite query component $x at id $qid dim $j — " +
+            "clean the query feed before serving")
+      q(j) = x; j += 1
+    }
+    q
+  }
+
+  /** Euclidean norm of `v(off until off + len)`, accumulated left to
+    * right — the `VectorOps.cosine` algebra, for queries at serve time
+    * and for shard rows at fit time alike. */
+  def norm(v: Array[Double], off: Int, len: Int): Double = {
+    var s = 0.0
+    var j = off
+    while (j < off + len) { s += v(j) * v(j); j += 1 }
+    math.sqrt(s)
+  }
+}
+
+/** The serve family's rounded top-k window, one per query row: scores
+  * are rounded HALF_UP to 6 dp and ranked on the ROUNDED value, ties
+  * broken by id ascending — the batch window's exact order, which is
+  * what makes every serve answer bit-identical to its join+window plan
+  * and its DuckDB oracle. `descending` ranks high to low (cosine,
+  * BM25), otherwise low to high (ADC distance). Each slot also keeps
+  * the caller's shard index `ix`, for scans that read per-row side
+  * arrays (bitext means, labels) after the cut. */
+private[graft] final class RoundedTopK(k: Int, descending: Boolean) {
+  val score = new Array[Double](k)
+  val id = new Array[Long](k)
+  val ix = new Array[Int](k)
+  var filled = 0
+
+  /** Offer a raw score. HALF_UP rounding is BigDecimal work (~µs), far
+    * costlier than a dot product at shard scale; rounding moves a value
+    * by at most 5e-7, so a raw score more than 1e-6 behind the current
+    * k-th cannot reach the rounded window and is skipped before the
+    * rounding. Conservative only: every possible entrant is still
+    * rounded. Non-finite scores never enter: BigDecimal.valueOf(NaN)
+    * would throw, and NaN comparisons would corrupt the order
+    * silently. */
+  def offer(raw: Double, rowId: Long, rowIx: Int): Unit =
+    if (java.lang.Double.isFinite(raw) && (filled < k ||
+        (if (descending) raw >= score(k - 1) - 1e-6 else raw <= score(k - 1) + 1e-6)))
+      add(raw, rowId, rowIx)
+
+  /** Round `raw` and insert it at its rank, with no skip test. */
+  def add(raw: Double, rowId: Long, rowIx: Int): Unit = {
+    val c = RoundedTopK.round6(raw)
+    var p = filled
+    while (p > 0 && {
+        val s = score(p - 1)
+        (if (descending) s < c else s > c) || (s == c && id(p - 1) > rowId)
+      }) p -= 1
+    if (p < k) {
+      var m = math.min(filled, k - 1)
+      while (m > p) {
+        score(m) = score(m - 1); id(m) = id(m - 1); ix(m) = ix(m - 1); m -= 1
+      }
+      score(p) = c; id(p) = rowId; ix(p) = rowIx
+      if (filled < k) filled += 1
+    }
+  }
+
+  /** The window as `array<struct<id, score>>` in rank order. */
+  def pairs: ArrayData = {
+    val rows = new Array[Any](filled)
+    var t = 0
+    while (t < filled) { rows(t) = InternalRow(id(t), score(t)); t += 1 }
+    new GenericArrayData(rows)
+  }
+}
+
+private[graft] object RoundedTopK {
+  def round6(x: Double): Double =
+    java.math.BigDecimal.valueOf(x)
+      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+
+  /** `pairs`' type: `array<struct<neighbor_id: long, <scoreName>: double>>`. */
+  def pairsType(scoreName: String): DataType =
+    org.apache.spark.sql.types.ArrayType(
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("neighbor_id",
+          org.apache.spark.sql.types.LongType, nullable = false),
+        org.apache.spark.sql.types.StructField(scoreName, DoubleType,
+          nullable = false))),
+      containsNull = false)
+}
+
+/** A row-local serve scan over a broadcast shard: `serve(qid, query)`
+  * computes the whole answer in the expression's class. Codegen stays
+  * inside the enclosing whole-stage span and calls it through one
+  * reference object — the per-row work is the scan loop, not
+  * expression dispatch, so generating Janino for it would buy
+  * nothing. */
+private[graft] trait ShardScan extends BinaryExpression {
+  def serve(qid: Long, query: ArrayData): ArrayData
+
+  override def nullSafeEval(l: Any, r: Any): Any =
+    serve(l.asInstanceOf[Long], r.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (qid, query) => {
+      val ref = ctx.addReferenceObj(prettyName, this, getClass.getName)
+      s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.serve($qid, $query);"
+    })
+}
+
 /** Row-local brute-force top-k cosine against a fixed index shard —
   * the SERVE half of the similarity family (`AnnServe`): the shard
   * (ids + row-major vectors, norms precomputed once at construction)
@@ -667,18 +798,14 @@ case class PcaReconScore(child: Expression, flatComponents: Array[Double],
   * `array<struct<neighbor_id, cos>>` in (cos desc, neighbor_id asc)
   * rank order with the query's own id excluded. Cosine is the exact
   * `VectorOps.cosine` algebra (left-to-right double accumulation,
-  * 0 on zero norm) rounded HALF_UP to 6 dp BEFORE ranking — ranking
-  * on rounded values is what makes the output bit-identical to the
-  * batch `q_sim_bruteforce` window ranking and its DuckDB oracle.
-  * Codegen stays inside the enclosing whole-stage span; the scan loop
-  * itself runs in this class via a reference object (the per-row work
-  * is the loop body, not expression dispatch, so generating Janino
-  * for it would buy nothing). Loud dimension guard like every model
-  * expression here. */
+  * 0 on zero norm) ranked by `RoundedTopK` — ranking on rounded values
+  * is what makes the output bit-identical to the batch
+  * `q_sim_bruteforce` window ranking and its DuckDB oracle. Loud
+  * dimension guard (`ServeQuery`) like every model expression here. */
 case class CosineTopK(left: Expression, right: Expression,
                       shard: org.apache.spark.broadcast.Broadcast[(Array[Long], Array[Double], Array[Double])],
                       dim: Int, k: Int,
-                      includeSelf: Boolean = false) extends BinaryExpression {
+                      includeSelf: Boolean = false) extends ShardScan {
   // includeSelf = true keeps the query's own corpus row in the ranking
   // (self-retrieval) — the hybrid-fusion batch plan ranks the full
   // corpus including the query doc, so its serve twin must too; every
@@ -690,110 +817,37 @@ case class CosineTopK(left: Expression, right: Expression,
   // at the x96 soak scale vs 1.4 s of actual scan work); a broadcast
   // value deserializes once per executor JVM and is shared by
   // reference after that. Norms are fitted once at shard build, never
-  // per task, and `topk` binds every shared array to a local before
+  // per task, and `serve` binds every shared array to a local before
   // its scan loops — a lazy-val accessor (volatile check + call) per
   // element would otherwise dominate the 13M-element/query scan
   // (stack-sampled: tasks sat in norms$lzycompute for seconds).
   require(dim > 0 && k >= 1, s"cosine_topk: bad dim=$dim k=$k")
 
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("neighbor_id",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("cos", DoubleType,
-          nullable = false))),
-      containsNull = false)
+  override def dataType: DataType = RoundedTopK.pairsType("cos")
 
-  /** The whole per-row computation; called from both eval and the
-    * generated code. */
-  def topk(qid: Long, qv: ArrayData): ArrayData = {
+  def serve(qid: Long, qv: ArrayData): ArrayData = {
     val (ids, flatVecs, norms) = shard.value
     val n = flatVecs.length / dim
     if (flatVecs.length != n * dim || ids.length != n || norms.length != n)
       throw new IllegalArgumentException(
         s"cosine_topk: ragged shard (${ids.length} ids, ${flatVecs.length} " +
           s"values, ${norms.length} norms at dim $dim)")
-    if (qv.numElements() != dim)
-      throw new IllegalArgumentException(
-        s"cosine_topk: query vector has ${qv.numElements()} elements, need exactly $dim " +
-          "— index shard does not match the data (a longer vector would be " +
-          "silently truncated, diverging from the full-vector batch plan)")
-    val q = new Array[Double](dim)
-    var j = 0
-    while (j < dim) {
-      val x = qv.getDouble(j)
-      // loud, like the shard-side fit-time guard (AnnServe.buildShard):
-      // a NaN/Inf query component would make every cosine non-finite,
-      // silently emptying the serve answer while the batch window plan
-      // ranks NaN first — the bit-parity contract only holds for finite
-      // inputs, so contaminated queries fail here instead of diverging
-      if (!java.lang.Double.isFinite(x))
-        throw new IllegalArgumentException(
-          s"cosine_topk: non-finite query component $x at id $qid dim $j — " +
-            "clean the query feed before serving")
-      q(j) = x; j += 1
-    }
-    var qq = 0.0
-    j = 0
-    while (j < dim) { qq += q(j) * q(j); j += 1 }
-    val qn = math.sqrt(qq)
-    val topCos = new Array[Double](k); val topId = new Array[Long](k)
-    var filled = 0
+    val q = ServeQuery.vector(prettyName, qid, qv, dim)
+    val qn = ServeQuery.norm(q, 0, dim)
+    val top = new RoundedTopK(k, descending = true)
     var i = 0
     while (i < n) {
       if (includeSelf || ids(i) != qid) {
         var dp = 0.0
-        j = 0
+        var j = 0
         while (j < dim) { dp += q(j) * flatVecs(i * dim + j); j += 1 }
         val denom = qn * norms(i)
-        val raw = if (denom > 0) dp / denom else 0.0
-        // HALF_UP rounding is BigDecimal work (~µs) — far costlier than
-        // the dot product at shard scale. Rounding moves a value by at
-        // most 5e-7, so a candidate with raw < worst − 1e-6 cannot
-        // reach the rounded top-k; skip it before paying BigDecimal.
-        // Conservative-only: every possible entrant is still rounded.
-        // Non-finite scores (NaN/Inf components in shard or query)
-        // never enter: BigDecimal.valueOf(NaN) would throw, and NaN
-        // comparisons would corrupt the insertion order silently.
-        if (java.lang.Double.isFinite(raw) &&
-            (filled < k || raw >= topCos(k - 1) - 1e-6)) {
-          val c = java.math.BigDecimal.valueOf(raw)
-            .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-          val id = ids(i)
-          // insertion position among the current top slots: ranked by
-          // (cos desc, neighbor_id asc), the batch window's exact order
-          var p = filled
-          while (p > 0 && (topCos(p - 1) < c ||
-                   (topCos(p - 1) == c && topId(p - 1) > id))) p -= 1
-          if (p < k) {
-            val last = math.min(filled, k - 1)
-            var m = last
-            while (m > p) { topCos(m) = topCos(m - 1); topId(m) = topId(m - 1); m -= 1 }
-            topCos(p) = c; topId(p) = id
-            if (filled < k) filled += 1
-          }
-        }
+        top.offer(if (denom > 0) dp / denom else 0.0, ids(i), i)
       }
       i += 1
     }
-    val rows = new Array[Any](filled)
-    var t = 0
-    while (t < filled) {
-      rows(t) = org.apache.spark.sql.catalyst.InternalRow(topId(t), topCos(t))
-      t += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(rows)
+    top.pairs
   }
-
-  override def nullSafeEval(l: Any, r: Any): Any =
-    topk(l.asInstanceOf[Long], r.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (qid, qv) => {
-      val ref = ctx.addReferenceObj("annShardTopk", this, classOf[CosineTopK].getName)
-      s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.topk($qid, $qv);"
-    })
 
   override def prettyName: String = "cosine_topk"
   override protected def withNewChildrenInternal(
@@ -813,13 +867,12 @@ case class CosineTopK(left: Expression, right: Expression,
   * full scan, the asymptotic gap that decides billion-vector serve
   * latency.
   *
-  * Contract vs the exact tier: ranking and emission use the same
-  * HALF_UP-6dp rounding and (cos desc, neighbor_id asc) tie-break as
-  * `CosineTopK`, and the query's own id never surfaces (it still
-  * ROUTES — its neighbor list is expanded — because a query that
-  * exists in the corpus is the best possible hub toward its own
-  * neighborhood). Search is deterministic: the frontier orders by
-  * (raw cos desc, node index asc). Recall is the index's contract,
+  * Contract vs the exact tier: the ≤ef survivors are cut to k by the
+  * same `RoundedTopK` as `CosineTopK`, and the query's own id never
+  * surfaces (it still ROUTES — its neighbor list is expanded — because
+  * a query that exists in the corpus is the best possible hub toward
+  * its own neighborhood). Search is deterministic: the frontier orders
+  * by (raw cos desc, node index asc). Recall is the index's contract,
   * gated in SimilaritySpec (≥ 0.9 @10 at default parameters vs brute
   * force; exact when ef ≥ n over a connected graph).
   *
@@ -830,20 +883,13 @@ case class CosineTopK(left: Expression, right: Expression,
 case class GraphBeamTopK(left: Expression, right: Expression,
                          shard: org.apache.spark.broadcast.Broadcast[(Array[Long], Array[Double], Array[Double], Array[Int], Array[Int], Array[Int])],
                          dim: Int, k: Int, ef: Int, maxVisit: Int)
-    extends BinaryExpression {
+    extends ShardScan {
   require(dim > 0 && k >= 1 && ef >= k && maxVisit >= ef,
     s"graph_beam_topk: bad dim=$dim k=$k ef=$ef maxVisit=$maxVisit")
 
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("neighbor_id",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("cos", DoubleType,
-          nullable = false))),
-      containsNull = false)
+  override def dataType: DataType = RoundedTopK.pairsType("cos")
 
-  def topk(qid: Long, qv: ArrayData): ArrayData = {
+  def serve(qid: Long, qv: ArrayData): ArrayData = {
     val (ids, flatVecs, norms, nbrOff, nbrIdx, entries) = shard.value
     val n = ids.length
     if (flatVecs.length != n * dim || norms.length != n ||
@@ -852,24 +898,8 @@ case class GraphBeamTopK(left: Expression, right: Expression,
         s"graph_beam_topk: ragged shard ($n ids, ${flatVecs.length} values, " +
           s"${norms.length} norms, ${nbrOff.length} offsets, " +
           s"${entries.length} entries at dim $dim)")
-    if (qv.numElements() != dim)
-      throw new IllegalArgumentException(
-        s"graph_beam_topk: query vector has ${qv.numElements()} elements, " +
-          s"need exactly $dim — index shard does not match the data")
-    val q = new Array[Double](dim)
-    var j = 0
-    while (j < dim) {
-      val x = qv.getDouble(j)
-      if (!java.lang.Double.isFinite(x))
-        throw new IllegalArgumentException(
-          s"graph_beam_topk: non-finite query component $x at id $qid dim $j " +
-            "— clean the query feed before serving")
-      q(j) = x; j += 1
-    }
-    var qq = 0.0
-    j = 0
-    while (j < dim) { qq += q(j) * q(j); j += 1 }
-    val qn = math.sqrt(qq)
+    val q = ServeQuery.vector(prettyName, qid, qv, dim)
+    val qn = ServeQuery.norm(q, 0, dim)
 
     @inline def rawCos(i: Int): Double = {
       var dp = 0.0; var t = 0; val base = i * dim
@@ -945,37 +975,14 @@ case class GraphBeamTopK(left: Expression, right: Expression,
       }
     }
 
-    // emit: round HALF_UP 6dp like the exact tier, re-rank the ≤ef
-    // survivors on the ROUNDED value (rounding can reorder near-ties;
-    // ranking on rounded cos is what aligns with the batch window), cut
-    // to k
-    val m = math.min(k, resFilled)
-    val outCos = new Array[Double](resFilled); val outId = new Array[Long](resFilled)
+    // emit: re-rank the ≤ef survivors on the ROUNDED value (rounding
+    // can reorder near-ties; ranking on rounded cos is what aligns
+    // with the batch window) and cut to k
+    val out = new RoundedTopK(k, descending = true)
     var t = 0
-    while (t < resFilled) {
-      outCos(t) = java.math.BigDecimal.valueOf(resCos(t))
-        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-      outId(t) = ids(resIdx(t)); t += 1
-    }
-    val order = (0 until resFilled).sortBy(t => (-outCos(t), outId(t)))
-    val rows = new Array[Any](m)
-    t = 0
-    while (t < m) {
-      val o = order(t)
-      rows(t) = org.apache.spark.sql.catalyst.InternalRow(outId(o), outCos(o))
-      t += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(rows)
+    while (t < resFilled) { out.add(resCos(t), ids(resIdx(t)), resIdx(t)); t += 1 }
+    out.pairs
   }
-
-  override def nullSafeEval(l: Any, r: Any): Any =
-    topk(l.asInstanceOf[Long], r.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (qid, qv) => {
-      val ref = ctx.addReferenceObj("graphShardTopk", this, classOf[GraphBeamTopK].getName)
-      s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.topk($qid, $qv);"
-    })
 
   override def prettyName: String = "graph_beam_topk"
   override protected def withNewChildrenInternal(
@@ -989,19 +996,19 @@ case class GraphBeamTopK(left: Expression, right: Expression,
   * expression, which is what makes bitext mining streaming-legal: the
   * batch spelling needs two aggregation joins and a ranking window
   * (illegal in append mode), this needs no join, no shuffle, no state.
-  * The forward top-k phase is `CosineTopK`'s loop verbatim; avg_src is
-  * the window's rank-order mean (the same left-to-right accumulation
-  * Spark's single-partition `avg` performs on the exploded batch
-  * frame); avg_tgt rides the shard broadcast aligned by index, FITTED
-  * batch-side from the same backward serve the batch operator runs —
-  * so every double matches the batch join bit for bit. Margin is
-  * HALF_UP-6dp of cos/((avg_src+avg_tgt)/2), 0 on a non-positive
-  * denominator, argmax by (margin desc, tgt_id asc) — the batch
-  * window's exact order. Emits a single-element array (the mined
-  * pair), ids still in the caller's disjoint remap space. */
+  * The forward top-k phase is `CosineTopK`'s scan into the shared
+  * `RoundedTopK`; avg_src is the window's rank-order mean (the same
+  * left-to-right accumulation Spark's single-partition `avg` performs
+  * on the exploded batch frame); avg_tgt rides the shard broadcast
+  * aligned by index, FITTED batch-side from the same backward serve
+  * the batch operator runs — so every double matches the batch join
+  * bit for bit. Margin is HALF_UP-6dp of cos/((avg_src+avg_tgt)/2), 0
+  * on a non-positive denominator, argmax by (margin desc, tgt_id asc)
+  * — the batch window's exact order. Emits a single-element array (the
+  * mined pair), ids still in the caller's disjoint remap space. */
 case class BitextTopMargin(left: Expression, right: Expression,
                            shard: org.apache.spark.broadcast.Broadcast[(Array[Long], Array[Double], Array[Double], Array[Double])],
-                           dim: Int, k: Int) extends BinaryExpression {
+                           dim: Int, k: Int) extends ShardScan {
   require(dim > 0 && k >= 1, s"bitext_top_margin: bad dim=$dim k=$k")
 
   override def dataType: DataType =
@@ -1015,7 +1022,7 @@ case class BitextTopMargin(left: Expression, right: Expression,
           nullable = false))),
       containsNull = false)
 
-  def top(qid: Long, qv: ArrayData): ArrayData = {
+  def serve(qid: Long, qv: ArrayData): ArrayData = {
     val (ids, flatVecs, norms, avgTgt) = shard.value
     val n = flatVecs.length / dim
     if (flatVecs.length != n * dim || ids.length != n || norms.length != n ||
@@ -1024,95 +1031,43 @@ case class BitextTopMargin(left: Expression, right: Expression,
         s"bitext_top_margin: ragged shard (${ids.length} ids, " +
           s"${flatVecs.length} values, ${norms.length} norms, " +
           s"${avgTgt.length} avgs at dim $dim)")
-    if (qv.numElements() != dim)
-      throw new IllegalArgumentException(
-        s"bitext_top_margin: query vector has ${qv.numElements()} elements, " +
-          s"need exactly $dim — index shard does not match the data")
-    val q = new Array[Double](dim)
-    var j = 0
-    while (j < dim) {
-      val x = qv.getDouble(j)
-      if (!java.lang.Double.isFinite(x))
-        throw new IllegalArgumentException(
-          s"bitext_top_margin: non-finite query component $x at id $qid " +
-            s"dim $j — clean the src feed before serving")
-      q(j) = x; j += 1
-    }
-    var qq = 0.0
-    j = 0
-    while (j < dim) { qq += q(j) * q(j); j += 1 }
-    val qn = math.sqrt(qq)
-    // phase 1: CosineTopK's exact rounded forward window
-    val topCos = new Array[Double](k); val topId = new Array[Long](k)
-    val topIx = new Array[Int](k)
-    var filled = 0
+    val q = ServeQuery.vector(prettyName, qid, qv, dim)
+    val qn = ServeQuery.norm(q, 0, dim)
+    // phase 1: the rounded forward window
+    val top = new RoundedTopK(k, descending = true)
     var i = 0
     while (i < n) {
       if (ids(i) != qid) {
         var dp = 0.0
-        j = 0
+        var j = 0
         while (j < dim) { dp += q(j) * flatVecs(i * dim + j); j += 1 }
         val denom = qn * norms(i)
-        val raw = if (denom > 0) dp / denom else 0.0
-        if (java.lang.Double.isFinite(raw) &&
-            (filled < k || raw >= topCos(k - 1) - 1e-6)) {
-          val c = java.math.BigDecimal.valueOf(raw)
-            .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-          val id = ids(i)
-          var p = filled
-          while (p > 0 && (topCos(p - 1) < c ||
-                   (topCos(p - 1) == c && topId(p - 1) > id))) p -= 1
-          if (p < k) {
-            val last = math.min(filled, k - 1)
-            var w = last
-            while (w > p) {
-              topCos(w) = topCos(w - 1); topId(w) = topId(w - 1)
-              topIx(w) = topIx(w - 1); w -= 1
-            }
-            topCos(p) = c; topId(p) = id; topIx(p) = i
-            if (filled < k) filled += 1
-          }
-        }
+        top.offer(if (denom > 0) dp / denom else 0.0, ids(i), i)
       }
       i += 1
     }
-    if (filled == 0)
-      return new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        Array.empty[Any])
+    val filled = top.filled
+    if (filled == 0) return new GenericArrayData(Array.empty[Any])
     // phase 2: rank-order mean (= the batch frame's single-partition
     // avg), per-candidate ratio margin, argmax (margin desc, id asc)
     var sum = 0.0
     var t = 0
-    while (t < filled) { sum += topCos(t); t += 1 }
+    while (t < filled) { sum += top.score(t); t += 1 }
     val avgSrc = sum / filled
     var bestT = -1; var bestMargin = 0.0
     t = 0
     while (t < filled) {
-      val den = (avgSrc + avgTgt(topIx(t))) / 2.0
-      val m =
-        if (den > 0.0)
-          java.math.BigDecimal.valueOf(topCos(t) / den)
-            .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-        else 0.0
+      val den = (avgSrc + avgTgt(top.ix(t))) / 2.0
+      val m = if (den > 0.0) RoundedTopK.round6(top.score(t) / den) else 0.0
       if (bestT < 0 || m > bestMargin ||
-          (m == bestMargin && topId(t) < topId(bestT))) {
+          (m == bestMargin && top.id(t) < top.id(bestT))) {
         bestT = t; bestMargin = m
       }
       t += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(Array[Any](
-      org.apache.spark.sql.catalyst.InternalRow(
-        topId(bestT), topCos(bestT), bestMargin)))
+    new GenericArrayData(Array[Any](
+      InternalRow(top.id(bestT), top.score(bestT), bestMargin)))
   }
-
-  override def nullSafeEval(l: Any, r: Any): Any =
-    top(l.asInstanceOf[Long], r.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (qid, qv) => {
-      val ref = ctx.addReferenceObj("bitextShardTop", this, classOf[BitextTopMargin].getName)
-      s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.top($qid, $qv);"
-    })
 
   override def prettyName: String = "bitext_top_margin"
   override protected def withNewChildrenInternal(
@@ -1126,14 +1081,14 @@ case class BitextTopMargin(left: Expression, right: Expression,
   * makes the mining family streaming-legal: the batch spelling needs
   * two label joins and a ranking window (illegal in append mode), this
   * needs no join, no shuffle, no state. The top-k phase is
-  * `CosineTopK`'s loop verbatim (HALF_UP-6dp-rounded ranking,
-  * (cos desc, id asc) tie-break, own id excluded); the label phase
-  * keeps a window member unless BOTH labels are non-null and equal
-  * (the batch filter's null-safe semantics — an unlabeled anchor keeps
-  * all neighbors); survivors emit with rank 1..m. Labels ride the same
-  * broadcast as the vectors, aligned by shard index. The anchor's own
-  * label arrives as the third child and MAY be null — eval/codegen
-  * handle that explicitly (null label ≠ null row). */
+  * `CosineTopK`'s scan into the shared `RoundedTopK` (own id
+  * excluded); the label phase keeps a window member unless BOTH labels
+  * are non-null and equal (the batch filter's null-safe semantics — an
+  * unlabeled anchor keeps all neighbors); survivors emit with rank
+  * 1..m. Labels ride the same broadcast as the vectors, aligned by
+  * shard index. The anchor's own label arrives as the third child and
+  * MAY be null — eval/codegen handle that explicitly (null label ≠
+  * null row). */
 case class HardNegTopK(first: Expression, second: Expression,
                        third: Expression,
                        shard: org.apache.spark.broadcast.Broadcast[(Array[Long], Array[Double], Array[Double], Array[String])],
@@ -1163,55 +1118,18 @@ case class HardNegTopK(first: Expression, second: Expression,
       throw new IllegalArgumentException(
         s"hardneg_topk: ragged shard (${ids.length} ids, ${flatVecs.length} " +
           s"values, ${norms.length} norms, ${labels.length} labels at dim $dim)")
-    if (qv.numElements() != dim)
-      throw new IllegalArgumentException(
-        s"hardneg_topk: query vector has ${qv.numElements()} elements, need " +
-          s"exactly $dim — index shard does not match the data")
-    val q = new Array[Double](dim)
-    var j = 0
-    while (j < dim) {
-      val x = qv.getDouble(j)
-      if (!java.lang.Double.isFinite(x))
-        throw new IllegalArgumentException(
-          s"hardneg_topk: non-finite query component $x at id $qid dim $j — " +
-            "clean the anchor feed before serving")
-      q(j) = x; j += 1
-    }
-    var qq = 0.0
-    j = 0
-    while (j < dim) { qq += q(j) * q(j); j += 1 }
-    val qn = math.sqrt(qq)
-    // phase 1: CosineTopK's exact rounded top-k window
-    val topCos = new Array[Double](k); val topId = new Array[Long](k)
-    val topIx = new Array[Int](k)
-    var filled = 0
+    val q = ServeQuery.vector(prettyName, qid, qv, dim)
+    val qn = ServeQuery.norm(q, 0, dim)
+    // phase 1: the rounded top-k window
+    val top = new RoundedTopK(k, descending = true)
     var i = 0
     while (i < n) {
       if (ids(i) != qid) {
         var dp = 0.0
-        j = 0
+        var j = 0
         while (j < dim) { dp += q(j) * flatVecs(i * dim + j); j += 1 }
         val denom = qn * norms(i)
-        val raw = if (denom > 0) dp / denom else 0.0
-        if (java.lang.Double.isFinite(raw) &&
-            (filled < k || raw >= topCos(k - 1) - 1e-6)) {
-          val c = java.math.BigDecimal.valueOf(raw)
-            .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-          val id = ids(i)
-          var p = filled
-          while (p > 0 && (topCos(p - 1) < c ||
-                   (topCos(p - 1) == c && topId(p - 1) > id))) p -= 1
-          if (p < k) {
-            val last = math.min(filled, k - 1)
-            var w = last
-            while (w > p) {
-              topCos(w) = topCos(w - 1); topId(w) = topId(w - 1)
-              topIx(w) = topIx(w - 1); w -= 1
-            }
-            topCos(p) = c; topId(p) = id; topIx(p) = i
-            if (filled < k) filled += 1
-          }
-        }
+        top.offer(if (denom > 0) dp / denom else 0.0, ids(i), i)
       }
       i += 1
     }
@@ -1219,17 +1137,16 @@ case class HardNegTopK(first: Expression, second: Expression,
     val rows = new scala.collection.mutable.ArrayBuffer[Any](m)
     var rank = 0
     var t = 0
-    while (t < filled && rank < m) {
-      val nlab = labels(topIx(t))
+    while (t < top.filled && rank < m) {
+      val nlab = labels(top.ix(t))
       val drop = anchorLab != null && nlab != null && anchorLab == nlab
       if (!drop) {
         rank += 1
-        rows += org.apache.spark.sql.catalyst.InternalRow(
-          topId(t), topCos(t), rank)
+        rows += InternalRow(top.id(t), top.score(t), rank)
       }
       t += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(rows.toArray)
+    new GenericArrayData(rows.toArray)
   }
 
   override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
@@ -1277,18 +1194,16 @@ case class HardNegTopK(first: Expression, second: Expression,
   * at 64-dim float is a 32× RAM cut, which is what actually bounds a
   * serving tier), each query row builds its m×ksub LUT once
   * (m·ksub·dsub multiplies) and then pays m table lookups per corpus
-  * vector. Ranking is by HALF_UP-6dp-rounded approximate squared
-  * distance with the (dist asc, neighbor_id asc) tie-break and the
-  * query's own id excluded — the exact algebra of the batch `Pq.topk`
-  * join+window plan (LUT entries and the ADC sum accumulate in the
-  * same left-to-right order), so serve output is bit-identical to it
-  * (SimilaritySpec pins this). Same codegen shape as `CosineTopK`:
-  * the scan loop runs in this class via a reference object inside the
-  * enclosing whole-stage span. */
+  * vector. Ranking is the shared `RoundedTopK` run ascending — rounded
+  * approximate squared distance with the (dist asc, neighbor_id asc)
+  * tie-break and the query's own id excluded — the exact algebra of
+  * the batch `Pq.topk` join+window plan (LUT entries and the ADC sum
+  * accumulate in the same left-to-right order), so serve output is
+  * bit-identical to it (SimilaritySpec pins this). */
 case class AdcTopK(left: Expression, right: Expression,
                    shard: org.apache.spark.broadcast.Broadcast[(Array[Long], Array[Byte])],
                    flatBooks: Array[Double], m: Int, ksub: Int, dsub: Int,
-                   k: Int) extends BinaryExpression {
+                   k: Int) extends ShardScan {
   // codes ride a broadcast like CosineTopK's vectors (same per-task
   // deserialization hazard); the codebooks are m·ksub·dsub doubles
   // (~32 KB at the defaults) and stay plain expression state
@@ -1298,17 +1213,9 @@ case class AdcTopK(left: Expression, right: Expression,
   require(k >= 1, s"adc_topk: need k >= 1, got $k")
   require(ksub <= 256, s"adc_topk: byte codes need ksub <= 256, got $ksub")
 
+  override def dataType: DataType = RoundedTopK.pairsType("approx_sqdist")
 
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("neighbor_id",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("approx_sqdist", DoubleType,
-          nullable = false))),
-      containsNull = false)
-
-  def topk(qid: Long, qv: ArrayData): ArrayData = {
+  def serve(qid: Long, qv: ArrayData): ArrayData = {
     // bind broadcast arrays to locals before the loops (per-task lazy
     // or accessor indirection in a 13M-element scan dominated the scan
     // itself — see CosineTopK's note)
@@ -1317,26 +1224,9 @@ case class AdcTopK(left: Expression, right: Expression,
     if (flatCodes.length != n * m || ids.length != n)
       throw new IllegalArgumentException(
         s"adc_topk: ragged shard (${ids.length} ids, ${flatCodes.length} codes at m=$m)")
-    val dim = m * dsub
-    if (qv.numElements() != dim)
-      throw new IllegalArgumentException(
-        s"adc_topk: query vector has ${qv.numElements()} elements, need exactly $dim " +
-          "— index shard does not match the data (a longer vector would be " +
-          "silently truncated, diverging from the full-vector batch plan)")
+    val q = ServeQuery.vector(prettyName, qid, qv, m * dsub)
     // per-query LUT: lut(s*ksub + c) = ||query_sub_s - book_s(c)||²,
     // accumulated left-to-right like the batch sqDiffSum expression
-    var qj = 0
-    while (qj < dim) {
-      val x = qv.getDouble(qj)
-      // same loud finite-input contract as cosine_topk: a NaN query
-      // component poisons every LUT entry and silently empties the
-      // serve answer instead of matching the batch plan
-      if (!java.lang.Double.isFinite(x))
-        throw new IllegalArgumentException(
-          s"adc_topk: non-finite query component $x at id $qid dim $qj — " +
-            "clean the query feed before serving")
-      qj += 1
-    }
     val lut = new Array[Double](m * ksub)
     var s = 0
     while (s < m) {
@@ -1344,15 +1234,14 @@ case class AdcTopK(left: Expression, right: Expression,
       while (c < ksub) {
         var d2 = 0.0; var j = 0
         while (j < dsub) {
-          val d = qv.getDouble(s * dsub + j) - flatBooks((s * ksub + c) * dsub + j)
+          val d = q(s * dsub + j) - flatBooks((s * ksub + c) * dsub + j)
           d2 += d * d; j += 1
         }
         lut(s * ksub + c) = d2; c += 1
       }
       s += 1
     }
-    val topD = new Array[Double](k); val topId = new Array[Long](k)
-    var filled = 0
+    val top = new RoundedTopK(k, descending = false)
     var i = 0
     while (i < n) {
       if (ids(i) != qid) {
@@ -1361,45 +1250,12 @@ case class AdcTopK(left: Expression, right: Expression,
         while (t < m) {
           dist += lut(t * ksub + (flatCodes(i * m + t) & 0xff)); t += 1
         }
-        // same BigDecimal-avoidance and non-finite guards as CosineTopK
-        // (mirrored for ascending distance): a candidate with raw >
-        // worst + 1e-6 cannot reach the rounded top-k
-        if (java.lang.Double.isFinite(dist) &&
-            (filled < k || dist <= topD(k - 1) + 1e-6)) {
-          val d = java.math.BigDecimal.valueOf(dist)
-            .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-          val id = ids(i)
-          var p = filled
-          while (p > 0 && (topD(p - 1) > d ||
-                   (topD(p - 1) == d && topId(p - 1) > id))) p -= 1
-          if (p < k) {
-            val last = math.min(filled, k - 1)
-            var w = last
-            while (w > p) { topD(w) = topD(w - 1); topId(w) = topId(w - 1); w -= 1 }
-            topD(p) = d; topId(p) = id
-            if (filled < k) filled += 1
-          }
-        }
+        top.offer(dist, ids(i), i)
       }
       i += 1
     }
-    val rows = new Array[Any](filled)
-    var t = 0
-    while (t < filled) {
-      rows(t) = org.apache.spark.sql.catalyst.InternalRow(topId(t), topD(t))
-      t += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(rows)
+    top.pairs
   }
-
-  override def nullSafeEval(l: Any, r: Any): Any =
-    topk(l.asInstanceOf[Long], r.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (qid, qv) => {
-      val ref = ctx.addReferenceObj("pqShardTopk", this, classOf[AdcTopK].getName)
-      s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.topk($qid, $qv);"
-    })
 
   override def prettyName: String = "adc_topk"
   override protected def withNewChildrenInternal(
@@ -1415,20 +1271,18 @@ case class AdcTopK(left: Expression, right: Expression,
   * raw at near-exact ranking quality — and the scan dequantizes on the
   * fly, dq_j = min_j + code_j·step_j, trading two extra flops per
   * component for the 8× RAM cut (the SQ8 layout vector stores ship as
-  * their default compression). Ranking is by HALF_UP-6dp-rounded
-  * cosine of (RAW query, dequantized candidate) — asymmetric, like
-  * ADC: only the stored side pays quantization error — with the
-  * (cos desc, neighbor_id asc) tie-break and the query's own id
+  * their default compression). Ranking is the shared `RoundedTopK` over
+  * the cosine of (RAW query, dequantized candidate) — asymmetric, like
+  * ADC: only the stored side pays quantization error — with the own id
   * excluded. The dequantization line, clamp, and accumulation order
   * are the EXACT algebra of the batch `sim_sq_topk` join+window plan
   * and its full-SQL DuckDB oracle, so serve output is bit-identical to
-  * both (SimilaritySpec pins it). Same broadcast + codegen shape as
-  * `CosineTopK`; norms of the dequantized vectors are fitted once at
-  * shard build, never per task. */
+  * both (SimilaritySpec pins it). Norms of the dequantized vectors are
+  * fitted once at shard build, never per task. */
 case class SqTopK(left: Expression, right: Expression,
                   shard: org.apache.spark.broadcast.Broadcast[(Array[Long], Array[Byte], Array[Double])],
                   minl: Array[Double], stepl: Array[Double], k: Int)
-    extends BinaryExpression {
+    extends ShardScan {
   // codes + norms ride a broadcast like CosineTopK's vectors (same
   // per-task deserialization hazard); the dequantization line is
   // 2·dim doubles (~1 KB at 64-dim) and stays plain expression state
@@ -1438,16 +1292,9 @@ case class SqTopK(left: Expression, right: Expression,
 
   private def dim: Int = minl.length
 
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("neighbor_id",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("cos", DoubleType,
-          nullable = false))),
-      containsNull = false)
+  override def dataType: DataType = RoundedTopK.pairsType("cos")
 
-  def topk(qid: Long, qv: ArrayData): ArrayData = {
+  def serve(qid: Long, qv: ArrayData): ArrayData = {
     // bind broadcast arrays to locals before the loops (see
     // CosineTopK's note on per-task accessor indirection)
     val (ids, codes, norms) = shard.value
@@ -1457,76 +1304,25 @@ case class SqTopK(left: Expression, right: Expression,
       throw new IllegalArgumentException(
         s"sq_topk: ragged shard (${ids.length} ids, ${codes.length} " +
           s"codes, ${norms.length} norms at dim $d)")
-    if (qv.numElements() != d)
-      throw new IllegalArgumentException(
-        s"sq_topk: query vector has ${qv.numElements()} elements, need exactly $d " +
-          "— index shard does not match the data (a longer vector would be " +
-          "silently truncated, diverging from the full-vector batch plan)")
-    val q = new Array[Double](d)
-    var j = 0
-    while (j < d) {
-      val x = qv.getDouble(j)
-      // same loud finite-input contract as cosine_topk
-      if (!java.lang.Double.isFinite(x))
-        throw new IllegalArgumentException(
-          s"sq_topk: non-finite query component $x at id $qid dim $j — " +
-            "clean the query feed before serving")
-      q(j) = x; j += 1
-    }
-    var qq = 0.0
-    j = 0
-    while (j < d) { qq += q(j) * q(j); j += 1 }
-    val qn = math.sqrt(qq)
+    val q = ServeQuery.vector(prettyName, qid, qv, d)
+    val qn = ServeQuery.norm(q, 0, d)
     val mn = minl; val st = stepl
-    val topCos = new Array[Double](k); val topId = new Array[Long](k)
-    var filled = 0
+    val top = new RoundedTopK(k, descending = true)
     var i = 0
     while (i < n) {
       if (ids(i) != qid) {
         var dp = 0.0
-        j = 0
+        var j = 0
         while (j < d) {
           dp += q(j) * (mn(j) + (codes(i * d + j) & 0xff) * st(j)); j += 1
         }
         val denom = qn * norms(i)
-        val raw = if (denom > 0) dp / denom else 0.0
-        // same BigDecimal-avoidance + non-finite guard as CosineTopK
-        if (java.lang.Double.isFinite(raw) &&
-            (filled < k || raw >= topCos(k - 1) - 1e-6)) {
-          val c = java.math.BigDecimal.valueOf(raw)
-            .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-          val id = ids(i)
-          var p = filled
-          while (p > 0 && (topCos(p - 1) < c ||
-                   (topCos(p - 1) == c && topId(p - 1) > id))) p -= 1
-          if (p < k) {
-            val last = math.min(filled, k - 1)
-            var m = last
-            while (m > p) { topCos(m) = topCos(m - 1); topId(m) = topId(m - 1); m -= 1 }
-            topCos(p) = c; topId(p) = id
-            if (filled < k) filled += 1
-          }
-        }
+        top.offer(if (denom > 0) dp / denom else 0.0, ids(i), i)
       }
       i += 1
     }
-    val rows = new Array[Any](filled)
-    var t = 0
-    while (t < filled) {
-      rows(t) = org.apache.spark.sql.catalyst.InternalRow(topId(t), topCos(t))
-      t += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(rows)
+    top.pairs
   }
-
-  override def nullSafeEval(l: Any, r: Any): Any =
-    topk(l.asInstanceOf[Long], r.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (qid, qv) => {
-      val ref = ctx.addReferenceObj("sqShardTopk", this, classOf[SqTopK].getName)
-      s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.topk($qid, $qv);"
-    })
 
   override def prettyName: String = "sq_topk"
   override protected def withNewChildrenInternal(

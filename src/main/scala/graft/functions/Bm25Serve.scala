@@ -2,8 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
@@ -44,8 +43,8 @@ final case class Bm25Index(terms: Array[String], df: Array[Long],
   * deduped in-expression) term binary-searches the sorted vocabulary
   * and walks its posting list accumulating the Okapi contribution
   * `idf · (tf · 2.2) / (tf + 1.2 · (0.25 + 0.75 · dl / avgdl))`
-  * per doc; ranking is by HALF_UP-6dp-rounded score with the
-  * (score desc, doc_id asc) tie-break — the exact algebra of the
+  * per doc; ranking is the shared `RoundedTopK` (HALF_UP-6dp-rounded
+  * score, (score desc, doc_id asc) tie-break) — the exact algebra of the
   * batch `Retrieval.bm25TopK` join+window plan, so drained serve
   * output matches the batch query row-for-row and its full oracle
   * applies verbatim. No join, no shuffle, no state: a live query feed
@@ -53,7 +52,7 @@ final case class Bm25Index(terms: Array[String], df: Array[Long],
   * Emits array<struct<rank, doc_id, score>> (k-bounded). */
 case class Bm25TopK(left: Expression, right: Expression,
                     index: org.apache.spark.broadcast.Broadcast[Bm25Index],
-                    k: Int) extends BinaryExpression {
+                    k: Int) extends ShardScan {
   require(k >= 1, s"bm25_topk: bad k=$k")
 
   override def dataType: DataType =
@@ -67,7 +66,7 @@ case class Bm25TopK(left: Expression, right: Expression,
           nullable = false))),
       containsNull = false)
 
-  def top(qid: Long, termsArr: ArrayData): ArrayData = {
+  def serve(qid: Long, termsArr: ArrayData): ArrayData = {
     val ix = index.value
     // distinct terms, sorted — dedup defensively so a caller passing
     // repeats cannot double-count a term's contribution (the batch
@@ -103,61 +102,21 @@ case class Bm25TopK(left: Expression, right: Expression,
       }
       t += 1
     }
-    // exact top-k by (rounded score desc, doc_id asc) — insertion
-    // order over the map is irrelevant: the comparator total-orders
-    // (score, id) and each doc appears once
-    val topScore = new Array[Double](k); val topId = new Array[Long](k)
-    var filled = 0
+    // the serve family's rounded top-k, every doc rounded (no skip
+    // test) — insertion order over the map is irrelevant: the window
+    // total-orders (score, id) and each doc appears once
+    val top = new RoundedTopK(k, descending = true)
     val it = acc.entrySet().iterator()
     while (it.hasNext) {
       val e = it.next()
-      val s = java.math.BigDecimal.valueOf(e.getValue.doubleValue())
-        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-      val id = e.getKey.longValue()
-      var p = filled
-      while (p > 0 && (topScore(p - 1) < s ||
-               (topScore(p - 1) == s && topId(p - 1) > id))) p -= 1
-      if (p < k) {
-        val last = math.min(filled, k - 1)
-        var w = last
-        while (w > p) {
-          topScore(w) = topScore(w - 1); topId(w) = topId(w - 1); w -= 1
-        }
-        topScore(p) = s; topId(p) = id
-        if (filled < k) filled += 1
-      }
+      top.add(e.getValue.doubleValue(), e.getKey.longValue(), 0)
     }
-    val rows = new Array[Any](filled)
+    val rows = new Array[Any](top.filled)
     i = 0
-    while (i < filled) {
-      rows(i) = InternalRow(i + 1, topId(i), topScore(i)); i += 1
+    while (i < top.filled) {
+      rows(i) = InternalRow(i + 1, top.id(i), top.score(i)); i += 1
     }
     new GenericArrayData(rows)
-  }
-
-  override def eval(input: InternalRow): Any = {
-    val l = left.eval(input)
-    val r = right.eval(input)
-    if (l == null || r == null) null
-    else top(l.asInstanceOf[Long], r.asInstanceOf[ArrayData])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val le = left.genCode(ctx)
-    val re = right.genCode(ctx)
-    val ref = ctx.addReferenceObj("bm25Shard", this, classOf[Bm25TopK].getName)
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    ev.copy(code =
-      code"""
-        ${le.code}
-        ${re.code}
-        boolean ${ev.isNull} = ${le.isNull} || ${re.isNull};
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.top(
-            ${le.value}, ${re.value});
-        }
-      """)
   }
 
   override def prettyName: String = "bm25_topk"

@@ -1,6 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.SparkContext
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The SERVE half of the similarity family: a query-vector FEED scored
@@ -23,104 +26,126 @@ import org.apache.spark.sql.functions._
   * expression ranks on HALF_UP-6dp-rounded cosine with the same
   * tie-break), so the same DuckDB oracle hash-checks both, and the
   * streaming twin's drained end state equals the batch answer
-  * row-for-row. */
+  * row-for-row.
+  *
+  * Every shard type shares one contract, written once here: the
+  * owner-checked broadcast (`ShardBroadcast`), the per-shard row cap
+  * (`ShardRows`/`PqShardRows` behind `capped`), the vector build
+  * (`buildShard`), the hash split (`hashSplit`) and the cross-shard
+  * merge (`mergeShards`/`cutPerQuery`). Every serve expression shares
+  * the query check (`functions.ServeQuery`), the rounded top-k
+  * (`functions.RoundedTopK`) and the reference-object codegen
+  * (`functions.ShardScan`). */
 object AnnServe {
 
-  /** One in-memory index shard: ids + row-major vectors (doubles, the
-    * same float→double cast the batch plan applies). Constant-size per
-    * SHARD by deployment contract — see the class doc; the driver-side
-    * collect here is the shard build, bounded by the same executor-
-    * memory sizing that bounds every broadcast model in this repo. */
-  final case class AnnShard(ids: Array[Long], flatVecs: Array[Double], dim: Int) {
-    require(dim > 0 && flatVecs.length == ids.length * dim,
-      s"AnnShard: ${flatVecs.length} values for ${ids.length} ids at dim $dim")
-    // cached broadcast handle (one serialization per shard per session;
-    // transient so the persisted artifact stays plain arrays). The
-    // broadcast carries the precomputed norms too — fitted once here,
-    // never per task. The owning SparkContext is remembered alongside:
-    // a shard reused after a context restart (or from another session)
-    // must re-broadcast rather than hand back a handle whose driver
-    // state is gone — that failure mode surfaces as an obscure
-    // task-time "Failed to get broadcast_N" instead of a rebuild.
-    @transient private var bc:
-        org.apache.spark.broadcast.Broadcast[(Array[Long], Array[Double], Array[Double])] = _
-    @transient private var bcOwner: org.apache.spark.SparkContext = _
-    private[graft] def broadcastWith(sc: org.apache.spark.SparkContext):
-        org.apache.spark.broadcast.Broadcast[(Array[Long], Array[Double], Array[Double])] =
+  /** Rows one serve shard may hold: a float64×64-dim shard at this cap
+    * is ~0.5 GB. */
+  private[graft] val ShardRows: Int = 1 << 20
+
+  /** The PQ shard's cap, set by what the collect step ACTUALLY
+    * sustains, not by the final shard's footprint: each collected Row
+    * carries a boxed Seq[Int] of m codes (~150 B of object overhead at
+    * m=16 vs the 16 B the shard keeps), so 8M rows is ~1.5 GB of
+    * transient driver heap — a cap of 2^26 would OOM the collect long
+    * before the guard it exists to pre-empt could matter. */
+  private[graft] val PqShardRows: Int = 1 << 23
+
+  /** The one owner-checked cached broadcast every shard type serves
+    * through: one serialization per shard per session (transient, so a
+    * shard stays plain arrays). The owning SparkContext is remembered
+    * alongside: a shard reused after a context restart (or from
+    * another session) must re-broadcast rather than hand back a handle
+    * whose driver state is gone — that failure mode surfaces as an
+    * obscure task-time "Failed to get broadcast_N" instead of a
+    * rebuild. `payload` is built once per broadcast, so fit-time
+    * derived arrays (the norms) are computed there, never per task. */
+  abstract class ShardBroadcast[T: scala.reflect.ClassTag](shardType: String)
+      extends Serializable {
+    protected def payload: T
+    @transient private var bc: Broadcast[T] = _
+    @transient private var bcOwner: SparkContext = _
+    private[graft] final def broadcastWith(sc: SparkContext): Broadcast[T] =
       synchronized {
         if (bc == null || (bcOwner ne sc) || sc.isStopped) {
-          require(!sc.isStopped, "AnnShard: cannot broadcast on a stopped SparkContext")
-          val n = ids.length
-          val norms = new Array[Double](n)
-          var i = 0
-          while (i < n) {
-            var s = 0.0; var j = 0
-            while (j < dim) { val v = flatVecs(i * dim + j); s += v * v; j += 1 }
-            norms(i) = math.sqrt(s); i += 1
-          }
-          bc = sc.broadcast((ids, flatVecs, norms))
+          require(!sc.isStopped, s"$shardType: cannot broadcast on a stopped SparkContext")
+          bc = sc.broadcast(payload)
           bcOwner = sc
         }
         bc
       }
   }
 
-  /** Build the shard from an embeddings frame. `rowCap` is the loud
-    * scale guard: a shard is memory-resident by design, so exceeding
-    * the cap is a deployment error (shard the corpus and merge
-    * per-query answers), never something to let `collect()` discover
-    * as an executor OOM. The default bounds a float64×64-dim shard at
-    * ~0.5 GB. */
-  def fitShard(embeddings: DataFrame, idCol: String = "vec_id",
-               vecCol: String = "embedding",
-               rowCap: Int = 1 << 20): AnnShard = {
-    // bounded probe (scans at most rowCap+1 rows), so the guard fires
-    // before any corpus-sized driver materialization is attempted
-    require(embeddings.limit(rowCap + 1).count() <= rowCap,
-      s"AnnShard: embeddings exceed the per-shard cap $rowCap — an ANN " +
-        "serve shard must fit serving-node memory; use fitShards + " +
-        "topkRowsSharded to partition the corpus and merge per-query " +
-        "top-k answers instead")
-    buildShard(embeddings
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
-      .collect())
+  /** Per-row norms of a row-major shard, fitted once per broadcast. */
+  private def rowNorms(flat: Array[Double], dim: Int): Array[Double] =
+    Array.tabulate(flat.length / dim)(i =>
+      graft.functions.ServeQuery.norm(flat, i * dim, dim))
+
+  /** One in-memory index shard: ids + row-major vectors (doubles, the
+    * same float→double cast the batch plan applies). Constant-size per
+    * SHARD by deployment contract — see the class doc; the driver-side
+    * collect here is the shard build, bounded by the same executor-
+    * memory sizing that bounds every broadcast model in this repo. */
+  final case class AnnShard(ids: Array[Long], flatVecs: Array[Double], dim: Int)
+      extends ShardBroadcast[(Array[Long], Array[Double], Array[Double])]("AnnShard") {
+    require(dim > 0 && flatVecs.length == ids.length * dim,
+      s"AnnShard: ${flatVecs.length} values for ${ids.length} ids at dim $dim")
+    protected def payload = (ids, flatVecs, rowNorms(flatVecs, dim))
   }
 
-  /** `fitShard` when the caller needs the row count anyway (a
-    * maintained-state advance decides empty-batch/no-op from it): ONE
-    * collect replaces the separate count + collect. The cap check
-    * runs AFTER the collect (there is no pre-collect bound in the
-    * one-job path — a `limit(rowCap+1)` CollectLimit scans partitions
-    * incrementally, 1 then 4×…, which is MORE jobs per micro-batch,
-    * not fewer), so the caller must assert the bound:
-    * `callerBoundsRows = true` states the input is bounded by
-    * construction (a trigger-bounded micro-batch frame) and skips the
-    * probe; `false` pays the bounded pre-collect probe (`fitShard`'s
-    * spelling) before collecting. Either way the post-collect require
-    * still fires on a cap breach, and `spark.driver.maxResultSize`
-    * (default 1g ≈ the rowCap's own ~0.5 GB design point) aborts a
-    * runaway collect before the driver heap dies. Returns None when
-    * the frame is empty (nothing to shard). */
+  /** The one per-shard row cap in front of every shard fit's collect.
+    * A shard is memory-resident by design, so a frame bigger than
+    * `nShards` shards of `cap` rows is a deployment error (partition
+    * the corpus — `fitShards` + `topkRowsSharded` — and merge
+    * per-query top-k answers), never something to let `collect()`
+    * discover as an executor OOM. The probe is bounded (it scans at
+    * most nShards·cap + 1 rows), so it fires before `collect` — the
+    * shard's driver-side materialization — is evaluated at all. */
+  private[graft] def capped[T](shardType: String, frame: DataFrame,
+                               nShards: Int = 1, cap: Int = ShardRows)
+                              (collect: => T): T = {
+    val total = nShards.toLong * cap
+    require(total <= Int.MaxValue,
+      s"$shardType: $nShards shards x cap $cap = $total exceeds a collectable row count")
+    requireCap(shardType, frame.limit(total.toInt + 1).count(), nShards, cap)
+    collect
+  }
+
+  /** The cap check itself, for a row count already known. */
+  private[graft] def requireCap(shardType: String, rows: Long,
+                                nShards: Int, cap: Int): Unit =
+    require(rows <= nShards.toLong * cap,
+      s"$shardType: rows exceed $nShards shard(s) x cap $cap — a serve shard " +
+        "must fit serving-node memory; raise nShards (fitShards + " +
+        "topkRowsSharded partition the corpus and merge per-query top-k " +
+        "answers)")
+
+  /** The (id, vector) projection every raw and SQ8 shard fit collects. */
+  private def vectorRows(frame: DataFrame, idCol: String, vecCol: String): DataFrame =
+    frame.select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
+
+  /** Build the shard from an embeddings frame, behind the `ShardRows`
+    * cap. */
+  def fitShard(embeddings: DataFrame, idCol: String = "vec_id",
+               vecCol: String = "embedding"): AnnShard =
+    capped("AnnShard", embeddings)(
+      buildShard("AnnShard", vectorRows(embeddings, idCol, vecCol).collect()))
+
+  /** `fitShard` for a maintained-state advance that needs the row
+    * count anyway (it decides empty-batch/no-op from it): ONE collect
+    * replaces the separate count + collect. The input must be bounded
+    * by construction (a trigger-bounded micro-batch frame), so there is
+    * no pre-collect probe — a `limit(cap+1)` CollectLimit scans
+    * partitions incrementally, 1 then 4×…, which is MORE jobs per
+    * micro-batch, not fewer. The cap check runs AFTER the collect, and
+    * `spark.driver.maxResultSize` (default 1g ≈ the cap's own ~0.5 GB
+    * design point) aborts a runaway collect before the driver heap
+    * dies. Returns None when the frame is empty (nothing to shard). */
   private[graft] def fitShardBounded(embeddings: DataFrame,
                                      idCol: String = "vec_id",
-                                     vecCol: String = "embedding",
-                                     rowCap: Int = 1 << 20,
-                                     callerBoundsRows: Boolean = false): (Option[AnnShard], Long) = {
-    if (!callerBoundsRows)
-      require(embeddings.limit(rowCap + 1).count() <= rowCap,
-        s"AnnShard: embeddings exceed the per-shard cap $rowCap — an ANN " +
-          "serve shard must fit serving-node memory; use fitShards + " +
-          "topkRowsSharded to partition the corpus and merge per-query " +
-          "top-k answers instead")
-    val rows = embeddings
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
-      .collect()
-    require(rows.length <= rowCap,
-      s"AnnShard: embeddings exceed the per-shard cap $rowCap — an ANN " +
-        "serve shard must fit serving-node memory; use fitShards + " +
-        "topkRowsSharded to partition the corpus and merge per-query " +
-        "top-k answers instead")
-    (if (rows.isEmpty) None else Some(buildShard(rows)), rows.length.toLong)
+                                     vecCol: String = "embedding"): (Option[AnnShard], Long) = {
+    val rows = vectorRows(embeddings, idCol, vecCol).collect()
+    requireCap("AnnShard", rows.length, 1, ShardRows)
+    (if (rows.isEmpty) None else Some(buildShard("AnnShard", rows)), rows.length.toLong)
   }
 
   /** Driver-side shard UNION for a long-lived maintained index
@@ -130,13 +155,9 @@ object AnnServe {
     * the shard `fitShard` would build over the union (row order is
     * irrelevant: every consumer ranks over ALL shard rows). Ids must
     * be disjoint and the union must still fit the per-shard cap. */
-  def concatShards(a: AnnShard, b: AnnShard,
-                   rowCap: Int = 1 << 20): AnnShard = {
+  def concatShards(a: AnnShard, b: AnnShard): AnnShard = {
     require(a.dim == b.dim, s"concatShards: dim ${a.dim} vs ${b.dim}")
-    require(a.ids.length.toLong + b.ids.length <= rowCap,
-      s"concatShards: union of ${a.ids.length} + ${b.ids.length} ids " +
-        s"exceeds the per-shard cap $rowCap — hand off to fitShards + " +
-        "topkRowsSharded (the multi-node serve tier) before this point")
+    requireCap("AnnShard", a.ids.length.toLong + b.ids.length, 1, ShardRows)
     val overlap = a.ids.toSet.intersect(b.ids.toSet)
     require(overlap.isEmpty,
       s"concatShards: ${overlap.size} overlapping ids (e.g. " +
@@ -168,28 +189,38 @@ object AnnServe {
     AnnShard(ids, flat, s.dim)
   }
 
-  /** The shared array build behind `fitShard`/`fitShards`. Rejects
-    * non-finite components AT FIT TIME: the serve expressions rank on
-    * rounded finite scores while the batch join+window plan ranks NaN
-    * cosines FIRST under Spark's descending NaN ordering — so a
+  /** The one vector build behind every raw, graph, bitext, labeled and
+    * SQ8 shard fit: rows carry (id, vector) in columns 0/1 (extra
+    * columns ignored) and the output keeps row order. Rejects a null
+    * id, a null or ragged vector and a non-finite component AT FIT
+    * TIME, naming `shardType` and the row: the serve expressions rank
+    * on rounded finite scores while the batch join+window plan ranks
+    * NaN cosines FIRST under Spark's descending NaN ordering — so a
     * contaminated corpus would silently diverge between the two
     * "bit-identical" paths instead of failing loudly here. */
-  private def buildShard(rows: Array[org.apache.spark.sql.Row]): AnnShard = {
-    require(rows.nonEmpty, "AnnShard: empty embeddings frame")
-    val dim = rows(0).getSeq[Double](1).length
+  private def buildShard(shardType: String, rows: Array[Row]): AnnShard = {
+    require(rows.nonEmpty, s"$shardType: empty embeddings frame")
+    def vector(i: Int): collection.Seq[Double] = {
+      require(!rows(i).isNullAt(0), s"$shardType: null id at row $i")
+      require(!rows(i).isNullAt(1),
+        s"$shardType: null vector at id ${rows(i).getLong(0)} (row $i)")
+      rows(i).getSeq[Double](1)
+    }
+    val dim = vector(0).length
+    require(dim > 0, s"$shardType: zero-length vector at id ${rows(0).getLong(0)}")
     val ids = new Array[Long](rows.length)
     val flat = new Array[Double](rows.length * dim)
     var i = 0
     while (i < rows.length) {
+      val v = vector(i)
       ids(i) = rows(i).getLong(0)
-      val v = rows(i).getSeq[Double](1)
       require(v.length == dim,
-        s"AnnShard: ragged vector at ${ids(i)} (${v.length} vs $dim)")
+        s"$shardType: ragged vector at ${ids(i)} (${v.length} vs $dim)")
       var j = 0
       while (j < dim) {
         val x = v(j)
         require(java.lang.Double.isFinite(x),
-          s"AnnShard: non-finite component $x at id ${ids(i)} dim $j — " +
+          s"$shardType: non-finite component $x at id ${ids(i)} dim $j — " +
             "the serve/batch bit-parity contract only holds for finite " +
             "embeddings; clean the corpus before fitting")
         flat(i * dim + j) = x; j += 1
@@ -199,75 +230,90 @@ object AnnServe {
     AnnShard(ids, flat, dim)
   }
 
+  /** The one hash split behind `fitShards`, `fitPqShards` and
+    * `fitSqShards`: `fitRows` (id in column 0) gains the shard key
+    * `pmod(xxhash64(id), nShards)` computed IN SPARK (never a
+    * driver-side re-hash that could drift from the engine's) and is
+    * collected ONCE behind the `nShards × cap` probe of `frame` — one
+    * corpus scan, not nShards filtered re-scans; a second scan of a
+    * non-deterministic frame (sample, limit, streaming snapshot) could
+    * yield a different id set. Rows keep their collect order within a
+    * shard; every shard must be non-empty (an empty serving shard is a
+    * deployment mistake, not a state to serve from) and within `cap`
+    * (skewed ids). */
+  private def hashSplit(shardType: String, frame: DataFrame, fitRows: DataFrame,
+                        nShards: Int, cap: Int): IndexedSeq[Array[Row]] = {
+    require(nShards >= 1, s"$shardType: need nShards >= 1, got $nShards")
+    val key = fitRows.columns.length
+    val rows = capped(shardType, frame, nShards, cap)(fitRows
+      .withColumn("__shard",
+        pmod(xxhash64(col(fitRows.columns.head).cast("long")), lit(nShards)).cast("int"))
+      .collect())
+    val byShard = rows.groupBy(_.getInt(key))
+    (0 until nShards).map { s =>
+      val part = byShard.getOrElse(s, Array.empty[Row])
+      requireCap(s"$shardType (shard $s)", part.length, 1, cap)
+      require(part.nonEmpty,
+        s"$shardType: shard $s is empty — nShards=$nShards is oversized " +
+          "for this corpus; lower it (an empty serving shard is a " +
+          "deployment mistake, not a state to serve from)")
+      part
+    }
+  }
+
   /** Partition the corpus into `nShards` hash shards — the 100 TB
     * deployment shape where one `fitShard` cap is exceeded: each shard
     * is an independent exact index sized to one serving node, and
-    * `topkRowsSharded` merges per-query answers across them. The shard
-    * key is `pmod(xxhash64(id), nShards)` computed IN SPARK (never a
-    * driver-side re-hash that could drift from the engine's), and the
-    * split is one corpus scan — not nShards filtered re-scans. On a
+    * `topkRowsSharded` merges per-query answers across them. On a
     * real cluster each shard's build would run on its serving node;
     * in one JVM they coexist, which is the same total memory the
     * serving tier holds anyway. */
   def fitShards(embeddings: DataFrame, nShards: Int,
-                idCol: String = "vec_id", vecCol: String = "embedding",
-                rowCap: Int = 1 << 20): IndexedSeq[AnnShard] = {
-    require(nShards >= 1, s"fitShards: need nShards >= 1, got $nShards")
-    val totalCap = nShards.toLong * rowCap
-    require(totalCap <= Int.MaxValue,
-      s"fitShards: nShards * rowCap = $totalCap exceeds a collectable row count")
-    require(embeddings.limit(totalCap.toInt + 1).count() <= totalCap,
-      s"fitShards: embeddings exceed $nShards shards x cap $rowCap — " +
-        "raise nShards so every shard fits serving-node memory")
-    val rows = embeddings
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"),
-        pmod(xxhash64(col(idCol).cast("long")), lit(nShards)).cast("int"))
-      .collect()
-    val byShard = rows.groupBy(_.getInt(2))
-    (0 until nShards).map { s =>
-      val part = byShard.getOrElse(s, Array.empty[org.apache.spark.sql.Row])
-      require(part.length <= rowCap,
-        s"fitShards: shard $s holds ${part.length} rows > cap $rowCap " +
-          "(skewed ids?) — raise nShards")
-      require(part.nonEmpty,
-        s"fitShards: shard $s is empty — nShards=$nShards is oversized " +
-          "for this corpus; lower it (an empty serving shard is a " +
-          "deployment mistake, not a state to serve from)")
-      buildShard(part)
-    }
+                idCol: String = "vec_id", vecCol: String = "embedding"): IndexedSeq[AnnShard] =
+    hashSplit("AnnShard", embeddings, vectorRows(embeddings, idCol, vecCol),
+      nShards, ShardRows).map(buildShard("AnnShard", _))
+
+  /** The per-query `row_number` cut: the first k rows of each
+    * `query_id` in `order`. */
+  private def cutPerQuery(rows: DataFrame, k: Int, order: Seq[Column]): DataFrame =
+    rows.withColumn("__rn", row_number().over(
+        Window.partitionBy("query_id").orderBy(order: _*)))
+      .filter(col("__rn") <= k).drop("__rn")
+
+  /** The serve family's (cos desc, neighbor_id asc) order. */
+  private val byCos = Seq(col("cos").desc, col("neighbor_id").asc)
+
+  /** The one cross-shard merge: per-shard serve answers unioned, then
+    * cut to k per query on the SAME order the in-shard expression
+    * ranks by. Correct because each shard's answer is exact over its
+    * subset: every global top-k neighbor wins its own shard's top-k
+    * (per-shard competition is a subset of global), so the union of
+    * per-shard top-ks contains the global top-k, and the cut re-ranks
+    * on the same rounded scores — output is therefore bit-identical to
+    * the single-shard serve for ANY shard count. Shards must be
+    * `compatible` with the first (same dim, same quantizer). Cost
+    * shape: the query feed scans each shard once (the serve fan-out
+    * every distributed vector store pays); the cut shuffles only
+    * |queries| × k × nShards answer rows, never vectors. */
+  private def mergeShards[S](fn: String, shards: Seq[S], k: Int, order: Seq[Column])
+                            (compatible: S => Boolean, incompatible: => String)
+                            (serve: S => DataFrame): DataFrame = {
+    require(shards.nonEmpty, s"$fn: no shards")
+    require(shards.forall(compatible), s"$fn: $incompatible")
+    val unioned = shards.map(serve).reduce(_ unionAll _)
+    if (shards.size == 1) unioned else cutPerQuery(unioned, k, order)
   }
 
   /** Exact top-k across a SHARDED corpus: per-shard row-local serve
-    * (`topkRows`) unioned, then a per-query top-k merge — the cross-
-    * shard half of the serve tier's 100 TB contract. Correct because
-    * each shard's answer is exact over its subset: every global top-k
-    * neighbor wins its own shard's top-k (per-shard competition is a
-    * subset of global), so the union of per-shard top-ks contains the
-    * global top-k, and the merge window re-ranks on the SAME
-    * HALF_UP-6dp-rounded cosine and (cos desc, neighbor_id asc)
-    * tie-break the in-shard expression used — output is therefore
-    * bit-identical to the single-shard serve and to the batch
-    * brute-force oracle, for ANY shard count. Cost shape: the query
-    * feed scans each shard once (the serve fan-out every distributed
-    * vector store pays); the merge window shuffles only
-    * |queries| x k x nShards answer rows, never vectors. */
+    * (`topkRows`) through the shared merge — the cross-shard half of
+    * the serve tier's 100 TB contract, bit-identical to the
+    * single-shard serve and to the batch brute-force oracle. */
   def topkRowsSharded(queries: DataFrame, shards: Seq[AnnShard], k: Int = 10,
                       idCol: String = "vec_id",
-                      vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(shards.nonEmpty, "topkRowsSharded: no shards")
-    require(shards.map(_.dim).distinct.size == 1,
-      s"topkRowsSharded: mixed shard dims ${shards.map(_.dim).distinct}")
-    val unioned = shards.map(sh => topkRows(queries, sh, k, idCol, vecCol))
-      .reduce(_ unionAll _)
-    if (shards.size == 1) unioned
-    else {
-      val w = Window.partitionBy("query_id")
-        .orderBy(col("cos").desc, col("neighbor_id").asc)
-      unioned.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") <= k).drop("__rn")
-    }
-  }
+                      vecCol: String = "embedding"): DataFrame =
+    mergeShards("topkRowsSharded", shards, k, byCos)(
+      _.dim == shards.head.dim, s"mixed shard dims ${shards.map(_.dim).distinct}")(
+      topkRows(queries, _, k, idCol, vecCol))
 
   /** Exact top-k cosine per query row against the shard — one native
     * codegen expression (`functions.CosineTopK`), exploded to
@@ -298,32 +344,14 @@ object AnnServe {
     * so the cap posture is `AnnShard`'s. */
   final case class GraphShard(ids: Array[Long], flatVecs: Array[Double],
                               dim: Int, nbrOff: Array[Int],
-                              nbrIdx: Array[Int], entryIdx: Array[Int]) {
+                              nbrIdx: Array[Int], entryIdx: Array[Int])
+      extends ShardBroadcast[(Array[Long], Array[Double], Array[Double], Array[Int], Array[Int], Array[Int])]("GraphShard") {
     require(dim > 0 && flatVecs.length == ids.length * dim &&
         nbrOff.length == ids.length + 1 && entryIdx.nonEmpty,
       s"GraphShard: ragged (${ids.length} ids, ${flatVecs.length} values, " +
         s"${nbrOff.length} offsets, ${entryIdx.length} entries at dim $dim)")
-    @transient private var bc:
-        org.apache.spark.broadcast.Broadcast[(Array[Long], Array[Double], Array[Double], Array[Int], Array[Int], Array[Int])] = _
-    @transient private var bcOwner: org.apache.spark.SparkContext = _
-    private[graft] def broadcastWith(sc: org.apache.spark.SparkContext):
-        org.apache.spark.broadcast.Broadcast[(Array[Long], Array[Double], Array[Double], Array[Int], Array[Int], Array[Int])] =
-      synchronized {
-        if (bc == null || (bcOwner ne sc) || sc.isStopped) {
-          require(!sc.isStopped, "GraphShard: cannot broadcast on a stopped SparkContext")
-          val n = ids.length
-          val norms = new Array[Double](n)
-          var i = 0
-          while (i < n) {
-            var s = 0.0; var j = 0
-            while (j < dim) { val v = flatVecs(i * dim + j); s += v * v; j += 1 }
-            norms(i) = math.sqrt(s); i += 1
-          }
-          bc = sc.broadcast((ids, flatVecs, norms, nbrOff, nbrIdx, entryIdx))
-          bcOwner = sc
-        }
-        bc
-      }
+    protected def payload =
+      (ids, flatVecs, rowNorms(flatVecs, dim), nbrOff, nbrIdx, entryIdx)
   }
 
   /** Build the graph serve shard from the embeddings frame and a kNN
@@ -341,14 +369,9 @@ object AnnServe {
     * n·k-bounded (the graph frame is already the per-node top-k). */
   def fitGraphShard(embeddings: DataFrame, edges: DataFrame,
                     idCol: String = "vec_id", vecCol: String = "embedding",
-                    nEntries: Int = 16, degreeCap: Int = 32,
-                    rowCap: Int = 1 << 20): GraphShard = {
-    require(embeddings.limit(rowCap + 1).count() <= rowCap,
-      s"GraphShard: embeddings exceed the per-shard cap $rowCap — shard " +
-        "the corpus (fitShards posture) and merge per-query answers")
-    val base = buildShard(embeddings
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
-      .collect())
+                    nEntries: Int = 16, degreeCap: Int = 32): GraphShard = {
+    val base = capped("GraphShard", embeddings)(
+      buildShard("GraphShard", vectorRows(embeddings, idCol, vecCol).collect()))
     val n = base.ids.length
     val idx = new java.util.HashMap[Long, Int](n * 2)
     var i = 0
@@ -451,8 +474,8 @@ object AnnServe {
     * per-partition — exactly what each serving node would do. */
   def fitGraphShards(embeddings: DataFrame, nShards: Int,
                      idCol: String = "vec_id", vecCol: String = "embedding",
-                     k: Int = 8, nEntries: Int = 16, degreeCap: Int = 32,
-                     rowCap: Int = 1 << 20): IndexedSeq[GraphShard] = {
+                     k: Int = 8, nEntries: Int = 16,
+                     degreeCap: Int = 32): IndexedSeq[GraphShard] = {
     require(nShards >= 1, s"fitGraphShards: need nShards >= 1, got $nShards")
     val tagged = embeddings
       .select(col(idCol).cast("long").as(idCol),
@@ -466,35 +489,21 @@ object AnnServe {
         s"fitGraphShards: shard $s is empty — nShards=$nShards is " +
           "oversized for this corpus; lower it")
       val graph = graft.operators.Ivf.knnGraph(part, idCol, vecCol, k)
-      fitGraphShard(part, graph, idCol, vecCol, nEntries, degreeCap, rowCap)
+      fitGraphShard(part, graph, idCol, vecCol, nEntries, degreeCap)
     }
   }
 
-  /** Cross-shard merge for the beam tier: per-shard beam answers
-    * unioned and re-cut to k per query on the serve family's
-    * (cos desc, neighbor_id asc) order — `topkRowsSharded`'s merge
-    * applied to `GraphShard`s. Exact over the union of per-shard BEAM
-    * answers (the approximation lives inside each shard's walk, the
-    * merge adds none); recall is gated in SimilaritySpec. */
+  /** Cross-shard merge for the beam tier: the shared merge applied to
+    * `GraphShard`s. Exact over the union of per-shard BEAM answers (the
+    * approximation lives inside each shard's walk, the merge adds
+    * none); recall is gated in SimilaritySpec. */
   def graphTopkRowsSharded(queries: DataFrame, shards: Seq[GraphShard],
                            k: Int = 10, ef: Int = 64, maxVisit: Int = 4096,
                            idCol: String = "vec_id",
-                           vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(shards.nonEmpty, "graphTopkRowsSharded: no shards")
-    require(shards.map(_.dim).distinct.size == 1,
-      s"graphTopkRowsSharded: mixed shard dims ${shards.map(_.dim).distinct}")
-    val unioned = shards
-      .map(sh => graphTopkRows(queries, sh, k, ef, maxVisit, idCol, vecCol))
-      .reduce(_ unionAll _)
-    if (shards.size == 1) unioned
-    else {
-      val w = Window.partitionBy("query_id")
-        .orderBy(col("cos").desc, col("neighbor_id").asc)
-      unioned.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") <= k).drop("__rn")
-    }
-  }
+                           vecCol: String = "embedding"): DataFrame =
+    mergeShards("graphTopkRowsSharded", shards, k, byCos)(
+      _.dim == shards.head.dim, s"mixed shard dims ${shards.map(_.dim).distinct}")(
+      graphTopkRows(queries, _, k, ef, maxVisit, idCol, vecCol))
 
   /** The raw serve shard plus each target row's backward-neighborhood
     * mean (avg cos of its top-k in the SOURCE collection), aligned by
@@ -503,32 +512,13 @@ object AnnServe {
     * same backward serve the batch operator runs, so the margin
     * denominators match it bit for bit. */
   final case class BitextShard(ids: Array[Long], flatVecs: Array[Double],
-                               dim: Int, avgTgt: Array[Double]) {
+                               dim: Int, avgTgt: Array[Double])
+      extends ShardBroadcast[(Array[Long], Array[Double], Array[Double], Array[Double])]("BitextShard") {
     require(dim > 0 && flatVecs.length == ids.length * dim &&
         avgTgt.length == ids.length,
       s"BitextShard: ragged (${ids.length} ids, ${flatVecs.length} values, " +
         s"${avgTgt.length} avgs at dim $dim)")
-    @transient private var bc:
-        org.apache.spark.broadcast.Broadcast[(Array[Long], Array[Double], Array[Double], Array[Double])] = _
-    @transient private var bcOwner: org.apache.spark.SparkContext = _
-    private[graft] def broadcastWith(sc: org.apache.spark.SparkContext):
-        org.apache.spark.broadcast.Broadcast[(Array[Long], Array[Double], Array[Double], Array[Double])] =
-      synchronized {
-        if (bc == null || (bcOwner ne sc) || sc.isStopped) {
-          require(!sc.isStopped, "BitextShard: cannot broadcast on a stopped SparkContext")
-          val n = ids.length
-          val norms = new Array[Double](n)
-          var i = 0
-          while (i < n) {
-            var s = 0.0; var j = 0
-            while (j < dim) { val v = flatVecs(i * dim + j); s += v * v; j += 1 }
-            norms(i) = math.sqrt(s); i += 1
-          }
-          bc = sc.broadcast((ids, flatVecs, norms, avgTgt))
-          bcOwner = sc
-        }
-        bc
-      }
+    protected def payload = (ids, flatVecs, rowNorms(flatVecs, dim), avgTgt)
   }
 
   /** Fit the bitext serve shard over the (already id-remapped) target
@@ -540,16 +530,9 @@ object AnnServe {
     * query, so the mean exists for every row (loudly required). */
   def fitBitextShard(tgt: DataFrame, srcShard: AnnShard, k: Int,
                      idCol: String = "vec_id",
-                     vecCol: String = "embedding",
-                     rowCap: Int = 1 << 20): BitextShard = {
-    val base = {
-      require(tgt.limit(rowCap + 1).count() <= rowCap,
-        s"BitextShard: targets exceed the per-shard cap $rowCap — shard " +
-          "the collection and merge per-src answers")
-      buildShard(tgt
-        .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
-        .collect())
-    }
+                     vecCol: String = "embedding"): BitextShard = {
+    val base = capped("BitextShard", tgt)(
+      buildShard("BitextShard", vectorRows(tgt, idCol, vecCol).collect()))
     val avgRows = topkRows(tgt, srcShard, k, idCol, vecCol)
       .groupBy(col("query_id")).agg(avg(col("cos")).as("avg_tgt"))
       .collect()
@@ -585,32 +568,13 @@ object AnnServe {
     * hard-negative mining at serve tier. Missing labels stay null
     * (the null-safe batch-filter semantics survive verbatim). */
   final case class LabeledShard(ids: Array[Long], flatVecs: Array[Double],
-                                dim: Int, labels: Array[String]) {
+                                dim: Int, labels: Array[String])
+      extends ShardBroadcast[(Array[Long], Array[Double], Array[Double], Array[String])]("LabeledShard") {
     require(dim > 0 && flatVecs.length == ids.length * dim &&
         labels.length == ids.length,
       s"LabeledShard: ragged (${ids.length} ids, ${flatVecs.length} values, " +
         s"${labels.length} labels at dim $dim)")
-    @transient private var bc:
-        org.apache.spark.broadcast.Broadcast[(Array[Long], Array[Double], Array[Double], Array[String])] = _
-    @transient private var bcOwner: org.apache.spark.SparkContext = _
-    private[graft] def broadcastWith(sc: org.apache.spark.SparkContext):
-        org.apache.spark.broadcast.Broadcast[(Array[Long], Array[Double], Array[Double], Array[String])] =
-      synchronized {
-        if (bc == null || (bcOwner ne sc) || sc.isStopped) {
-          require(!sc.isStopped, "LabeledShard: cannot broadcast on a stopped SparkContext")
-          val n = ids.length
-          val norms = new Array[Double](n)
-          var i = 0
-          while (i < n) {
-            var s = 0.0; var j = 0
-            while (j < dim) { val v = flatVecs(i * dim + j); s += v * v; j += 1 }
-            norms(i) = math.sqrt(s); i += 1
-          }
-          bc = sc.broadcast((ids, flatVecs, norms, labels))
-          bcOwner = sc
-        }
-        bc
-      }
+    protected def payload = (ids, flatVecs, rowNorms(flatVecs, dim), labels)
   }
 
   /** Build the labeled serve shard: the corpus vectors plus each row's
@@ -620,41 +584,18 @@ object AnnServe {
     * the cap posture is unchanged. */
   def fitLabeledShard(corpus: DataFrame, labels: DataFrame,
                       idCol: String = "vec_id", vecCol: String = "embedding",
-                      labelCol: String = "label",
-                      rowCap: Int = 1 << 20): LabeledShard = {
-    require(corpus.limit(rowCap + 1).count() <= rowCap,
-      s"LabeledShard: corpus exceeds the per-shard cap $rowCap — shard " +
-        "the corpus and merge per-anchor answers")
+                      labelCol: String = "label"): LabeledShard = {
     val lab = labels.select(col(idCol).cast("long").as("__lid"),
                             col(labelCol).cast("string").as("__lab"))
-    val rows = corpus
+    val rows = capped("LabeledShard", corpus)(corpus
       .select(col(idCol).cast("long").as("__id"),
               col(vecCol).cast("array<double>").as("__v"))
       .join(broadcast(lab), col("__id") === col("__lid"), "left")
       .select(col("__id"), col("__v"), col("__lab"))
-      .collect()
-    require(rows.nonEmpty, "LabeledShard: empty corpus frame")
-    val dim = rows(0).getSeq[Double](1).length
-    val ids = new Array[Long](rows.length)
-    val flat = new Array[Double](rows.length * dim)
-    val labs = new Array[String](rows.length)
-    var i = 0
-    while (i < rows.length) {
-      ids(i) = rows(i).getLong(0)
-      val v = rows(i).getSeq[Double](1)
-      require(v.length == dim,
-        s"LabeledShard: ragged vector at ${ids(i)} (${v.length} vs $dim)")
-      var j = 0
-      while (j < dim) {
-        val x = v(j)
-        require(java.lang.Double.isFinite(x),
-          s"LabeledShard: non-finite component $x at id ${ids(i)} dim $j")
-        flat(i * dim + j) = x; j += 1
-      }
-      labs(i) = if (rows(i).isNullAt(2)) null else rows(i).getString(2)
-      i += 1
-    }
-    LabeledShard(ids, flat, dim, labs)
+      .collect())
+    val base = buildShard("LabeledShard", rows)
+    LabeledShard(base.ids, base.flatVecs, base.dim,
+      rows.map(r => if (r.isNullAt(2)) null else r.getString(2)))
   }
 
   /** Label-safe hard negatives at SERVE tier — `Mining.hardNegatives`'
@@ -685,45 +626,22 @@ object AnnServe {
     * holds (Jégou 2011). Codes come from `Pq.encode` itself, so shard
     * contents are definitionally the batch index's codes. */
   final case class PqShard(ids: Array[Long], flatCodes: Array[Byte],
-                           model: Pq.Model) {
+                           model: Pq.Model)
+      extends ShardBroadcast[(Array[Long], Array[Byte])]("PqShard") {
     require(flatCodes.length == ids.length * model.m,
       s"PqShard: ${flatCodes.length} codes for ${ids.length} ids at m=${model.m}")
-    // same owner-validated caching as AnnShard.broadcastWith: a handle
-    // from a stopped/replaced SparkContext must trigger a re-broadcast
-    @transient private var bc:
-        org.apache.spark.broadcast.Broadcast[(Array[Long], Array[Byte])] = _
-    @transient private var bcOwner: org.apache.spark.SparkContext = _
-    private[graft] def broadcastWith(sc: org.apache.spark.SparkContext):
-        org.apache.spark.broadcast.Broadcast[(Array[Long], Array[Byte])] =
-      synchronized {
-        if (bc == null || (bcOwner ne sc) || sc.isStopped) {
-          require(!sc.isStopped, "PqShard: cannot broadcast on a stopped SparkContext")
-          bc = sc.broadcast((ids, flatCodes))
-          bcOwner = sc
-        }
-        bc
-      }
+    protected def payload = (ids, flatCodes)
   }
 
   /** Encode the corpus with the fitted PQ model and collect the
-    * (id, codes) table as a flat byte shard. Same `rowCap` contract as
-    * `fitShard`. The default cap is set by what the collect step
-    * ACTUALLY sustains, not by the final shard's footprint: each
-    * collected Row carries a boxed Seq[Int] of m codes (~150 B of
-    * object overhead at m=16 vs the 16 B the shard keeps), so 8M rows
-    * is ~1.5 GB of transient driver heap — a cap of 2^26 would OOM the
-    * collect long before the guard it exists to pre-empt could matter. */
+    * (id, codes) table as a flat byte shard, behind the `PqShardRows`
+    * cap. */
   def fitPqShard(embeddings: DataFrame, model: Pq.Model,
-                 idCol: String = "vec_id", vecCol: String = "embedding",
-                 rowCap: Int = 1 << 23): PqShard = {
-    require(embeddings.limit(rowCap + 1).count() <= rowCap,
-      s"PqShard: embeddings exceed the per-shard cap $rowCap — use " +
-        "fitPqShards + pqTopkRowsSharded to partition the corpus and " +
-        "merge per-query top-k answers instead")
-    buildPqShard(Pq.encode(embeddings, idCol, vecCol, model).collect(), model)
-  }
+                 idCol: String = "vec_id", vecCol: String = "embedding"): PqShard =
+    capped("PqShard", embeddings, cap = PqShardRows)(
+      buildPqShard(Pq.encode(embeddings, idCol, vecCol, model).collect(), model))
 
-  private def buildPqShard(rows: Array[org.apache.spark.sql.Row],
+  private def buildPqShard(rows: Array[Row],
                            model: Pq.Model): PqShard = {
     require(model.ksub <= 256,
       s"PqShard: byte codes need ksub <= 256, got ${model.ksub}")
@@ -743,61 +661,29 @@ object AnnServe {
     PqShard(ids, codes, model)
   }
 
-  /** PQ twin of `fitShards`: hash-partition the encoded corpus into
-    * `nShards` byte-code shards (same Spark-computed
-    * `pmod(xxhash64(id), nShards)` key, same one-scan split). All
-    * shards share the one fitted model — shard-local codebooks would
-    * make ADC distances incomparable across shards at merge time. */
+  /** PQ twin of `fitShards`: the shared hash split over the encoded
+    * corpus. All shards share the one fitted model — shard-local
+    * codebooks would make ADC distances incomparable across shards at
+    * merge time. */
   def fitPqShards(embeddings: DataFrame, model: Pq.Model, nShards: Int,
-                  idCol: String = "vec_id", vecCol: String = "embedding",
-                  rowCap: Int = 1 << 23): IndexedSeq[PqShard] = {
-    require(nShards >= 1, s"fitPqShards: need nShards >= 1, got $nShards")
-    val totalCap = nShards.toLong * rowCap
-    require(totalCap <= Int.MaxValue,
-      s"fitPqShards: nShards * rowCap = $totalCap exceeds a collectable row count")
-    require(embeddings.limit(totalCap.toInt + 1).count() <= totalCap,
-      s"fitPqShards: embeddings exceed $nShards shards x cap $rowCap — raise nShards")
-    val rows = Pq.encode(embeddings, idCol, vecCol, model)
-      .withColumn("__shard",
-        pmod(xxhash64(col("nid").cast("long")), lit(nShards)).cast("int"))
-      .collect()
-    val byShard = rows.groupBy(_.getInt(2))
-    (0 until nShards).map { s =>
-      val part = byShard.getOrElse(s, Array.empty[org.apache.spark.sql.Row])
-      require(part.length <= rowCap,
-        s"fitPqShards: shard $s holds ${part.length} rows > cap $rowCap — raise nShards")
-      require(part.nonEmpty,
-        s"fitPqShards: shard $s is empty — nShards=$nShards is oversized " +
-          "for this corpus; lower it")
-      buildPqShard(part, model)
-    }
-  }
+                  idCol: String = "vec_id", vecCol: String = "embedding"): IndexedSeq[PqShard] =
+    hashSplit("PqShard", embeddings, Pq.encode(embeddings, idCol, vecCol, model),
+      nShards, PqShardRows).map(buildPqShard(_, model))
 
-  /** ADC top-k across sharded byte-code shards — `topkRowsSharded` for
-    * the PQ tier: per-shard serve unioned, per-query merge on the same
-    * rounded (approx_sqdist asc, neighbor_id asc) order the in-shard
-    * expression ranks by. Exact-over-union like the raw merge, so the
-    * answer is bit-identical to one whole-corpus PqShard for any shard
-    * count (all shards must come from one `fitPqShards` fit — asserted
-    * via the shared model reference). */
+  /** ADC top-k across sharded byte-code shards — the shared merge on
+    * the PQ tier's rounded (approx_sqdist asc, neighbor_id asc) order,
+    * bit-identical to one whole-corpus PqShard for any shard count
+    * (all shards must come from one `fitPqShards` fit — asserted via
+    * the shared model reference). */
   def pqTopkRowsSharded(queries: DataFrame, shards: Seq[PqShard], k: Int = 10,
                         idCol: String = "vec_id",
-                        vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(shards.nonEmpty, "pqTopkRowsSharded: no shards")
-    require(shards.forall(_.model eq shards.head.model),
-      "pqTopkRowsSharded: shards must share one fitted Pq.Model — " +
-        "per-shard models make ADC distances incomparable at merge time")
-    val unioned = shards.map(sh => pqTopkRows(queries, sh, k, idCol, vecCol))
-      .reduce(_ unionAll _)
-    if (shards.size == 1) unioned
-    else {
-      val w = Window.partitionBy("query_id")
-        .orderBy(col("approx_sqdist").asc, col("neighbor_id").asc)
-      unioned.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") <= k).drop("__rn")
-    }
-  }
+                        vecCol: String = "embedding"): DataFrame =
+    mergeShards("pqTopkRowsSharded", shards, k,
+        Seq(col("approx_sqdist").asc, col("neighbor_id").asc))(
+      _.model eq shards.head.model,
+      "shards must share one fitted Pq.Model — per-shard models make ADC " +
+        "distances incomparable at merge time")(
+      pqTopkRows(queries, _, k, idCol, vecCol))
 
   /** ADC top-k per query row against the PQ shard — one native codegen
     * expression (`functions.AdcTopK`): per-query LUT build + m table
@@ -844,27 +730,15 @@ object AnnServe {
     * DEQUANTIZED vectors, fitted once at build. */
   final case class SqShard(ids: Array[Long], codes: Array[Byte],
                            minl: Array[Double], stepl: Array[Double],
-                           norms: Array[Double]) {
+                           norms: Array[Double])
+      extends ShardBroadcast[(Array[Long], Array[Byte], Array[Double])]("SqShard") {
     val dim: Int = minl.length
     require(dim > 0 && stepl.length == dim,
       s"SqShard: dequantization line ${minl.length}/${stepl.length}")
     require(codes.length == ids.length * dim && norms.length == ids.length,
       s"SqShard: ${codes.length} codes / ${norms.length} norms for " +
         s"${ids.length} ids at dim $dim")
-    // same owner-validated broadcast caching as AnnShard/PqShard
-    @transient private var bc:
-        org.apache.spark.broadcast.Broadcast[(Array[Long], Array[Byte], Array[Double])] = _
-    @transient private var bcOwner: org.apache.spark.SparkContext = _
-    private[graft] def broadcastWith(sc: org.apache.spark.SparkContext):
-        org.apache.spark.broadcast.Broadcast[(Array[Long], Array[Byte], Array[Double])] =
-      synchronized {
-        if (bc == null || (bcOwner ne sc) || sc.isStopped) {
-          require(!sc.isStopped, "SqShard: cannot broadcast on a stopped SparkContext")
-          bc = sc.broadcast((ids, codes, norms))
-          bcOwner = sc
-        }
-        bc
-      }
+    protected def payload = (ids, codes, norms)
   }
 
   /** Fit the SQ8 shard: per-dimension (min, step=(max−min)/255) line
@@ -874,64 +748,44 @@ object AnnServe {
     * state identically (the batch twin and the oracle use the same
     * expression, making the codes engine-portable). A constant
     * dimension (step 0) stores code 0 and dequantizes to its min.
-    * Same `rowCap` contract and loud non-finite rejection as
-    * `fitShard` (quantizing a NaN would silently clamp; the serve/
-    * batch parity contract only holds for finite corpora). */
+    * Same cap and loud non-finite rejection as `fitShard` (quantizing
+    * a NaN would silently clamp; the serve/batch parity contract only
+    * holds for finite corpora). */
   def fitSqShard(embeddings: DataFrame,
-                 idCol: String = "vec_id", vecCol: String = "embedding",
-                 rowCap: Int = 1 << 20): SqShard = {
-    require(embeddings.limit(rowCap + 1).count() <= rowCap,
-      s"SqShard: embeddings exceed the per-shard cap $rowCap — " +
-        "partition the corpus and merge per-query top-k answers instead")
-    fitSqFromRows(embeddings
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
-      .collect())
+                 idCol: String = "vec_id", vecCol: String = "embedding"): SqShard = {
+    val raw = capped("SqShard", embeddings)(
+      buildShard("SqShard", vectorRows(embeddings, idCol, vecCol).collect()))
+    quantize(raw, sqLine(raw))
   }
 
-  /** The shared fit behind `fitSqShard`/`fitSqShards`: rows carry
-    * (id, vector) in columns 0/1 (extra columns ignored) and the
-    * OUTPUT PRESERVES ROW ORDER — `fitSqShards` relies on index i of
-    * the returned arrays lining up with rows(i) so shard assignment
-    * can ride the same single collect as the fit. */
-  private def fitSqFromRows(rows: Array[org.apache.spark.sql.Row]): SqShard = {
-    require(rows.nonEmpty, "SqShard: empty embeddings frame")
-    val dim = rows(0).getSeq[Double](1).length
-    val n = rows.length
-    val ids = new Array[Long](n)
-    val raw = new Array[Double](n * dim)
-    var i = 0
-    while (i < n) {
-      ids(i) = rows(i).getLong(0)
-      val v = rows(i).getSeq[Double](1)
-      require(v.length == dim,
-        s"SqShard: ragged vector at ${ids(i)} (${v.length} vs $dim)")
-      var j = 0
-      while (j < dim) {
-        val x = v(j)
-        require(java.lang.Double.isFinite(x),
-          s"SqShard: non-finite component $x at id ${ids(i)} dim $j — " +
-            "clean the corpus before fitting")
-        raw(i * dim + j) = x; j += 1
-      }
-      i += 1
-    }
+  /** The per-dimension (min, step) dequantization line over `raw`. */
+  private def sqLine(raw: AnnShard): (Array[Double], Array[Double]) = {
+    val dim = raw.dim
     val minl = Array.fill(dim)(Double.MaxValue)
     val maxl = Array.fill(dim)(Double.MinValue)
-    i = 0
-    while (i < n) {
+    var i = 0
+    while (i < raw.ids.length) {
       var j = 0
       while (j < dim) {
-        val x = raw(i * dim + j)
+        val x = raw.flatVecs(i * dim + j)
         if (x < minl(j)) minl(j) = x
         if (x > maxl(j)) maxl(j) = x
         j += 1
       }
       i += 1
     }
-    val stepl = Array.tabulate(dim)(j => (maxl(j) - minl(j)) / 255.0)
+    (minl, Array.tabulate(dim)(j => (maxl(j) - minl(j)) / 255.0))
+  }
+
+  /** Quantize `raw` on a fitted line, row order kept; norms are of the
+    * DEQUANTIZED vectors. */
+  private def quantize(raw: AnnShard, line: (Array[Double], Array[Double])): SqShard = {
+    val (minl, stepl) = line
+    val dim = raw.dim
+    val n = raw.ids.length
     val codes = new Array[Byte](n * dim)
     val norms = new Array[Double](n)
-    i = 0
+    var i = 0
     while (i < n) {
       var s = 0.0
       var j = 0
@@ -940,7 +794,7 @@ object AnnServe {
         val c =
           if (st == 0) 0
           else math.min(255.0,
-            math.max(0.0, math.floor((raw(i * dim + j) - minl(j)) / st + 0.5))).toInt
+            math.max(0.0, math.floor((raw.flatVecs(i * dim + j) - minl(j)) / st + 0.5))).toInt
         codes(i * dim + j) = c.toByte
         val dq = minl(j) + c * st
         s += dq * dq
@@ -949,7 +803,7 @@ object AnnServe {
       norms(i) = math.sqrt(s)
       i += 1
     }
-    SqShard(ids, codes, minl, stepl, norms)
+    SqShard(raw.ids, codes, minl, stepl, norms)
   }
 
   /** INCREMENTAL kNN-graph maintenance — the continuous-refresh shape
@@ -993,7 +847,6 @@ object AnnServe {
                           newShard: AnnShard, k: Int,
                           idCol: String, vecCol: String,
                           preverifiedEdges: Boolean): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val shardNew = newShard
     val shardOld = oldShard
     require(shardOld.ids.toSet.intersect(shardNew.ids.toSet).isEmpty,
@@ -1025,12 +878,8 @@ object AnnServe {
     val challenged = topkRows(oldEmb, shardNew, k, idCol, vecCol)
     val newVsOld = topkRows(newEmb, shardOld, k, idCol, vecCol)
     val newVsNew = topkRows(newEmb, shardNew, k, idCol, vecCol)
-    val unioned = oldEdges.select("query_id", "neighbor_id", "cos")
-      .unionAll(challenged).unionAll(newVsOld).unionAll(newVsNew)
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    unioned.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= k).drop("__rn")
+    cutPerQuery(oldEdges.select("query_id", "neighbor_id", "cos")
+      .unionAll(challenged).unionAll(newVsOld).unionAll(newVsNew), k, byCos)
   }
 
   /** The DELETE half of incremental graph maintenance: removing
@@ -1110,76 +959,35 @@ object AnnServe {
   /** SQ8 twin of `fitShards`: ONE global dequantization line (per-dim
     * min/max over the WHOLE corpus — per-shard lines would make
     * dequantized cosines incomparable at merge time, the same rule as
-    * the PQ shards' shared model), codes hash-partitioned by the same
-    * Spark-computed `pmod(xxhash64(id), nShards)` key. */
+    * the PQ shards' shared model), codes split by the shared hash
+    * split. The line is fitted over the union of the split's rows, so
+    * it comes from the same single collect as the shard assignment. */
   def fitSqShards(embeddings: DataFrame, nShards: Int,
-                  idCol: String = "vec_id", vecCol: String = "embedding",
-                  rowCap: Int = 1 << 20): IndexedSeq[SqShard] = {
-    require(nShards >= 1, s"fitSqShards: need nShards >= 1, got $nShards")
-    val totalCap = nShards.toLong * rowCap
-    require(totalCap <= Int.MaxValue,
-      s"fitSqShards: nShards * rowCap = $totalCap exceeds a collectable row count")
-    require(embeddings.limit(totalCap.toInt + 1).count() <= totalCap,
-      s"fitSqShards: embeddings exceed $nShards shards x cap $rowCap — raise nShards")
-    // ONE corpus scan carries both the fit rows AND the Spark-computed
-    // shard key (pmod(xxhash64(id), n) — never a driver re-hash that
-    // could drift from the engine's): a second scan of a
-    // non-deterministic frame (sample, limit, streaming snapshot)
-    // could yield a DIFFERENT id set than the fit saw, turning shard
-    // assignment into a silent miss (ADVICE r8). fitSqFromRows
-    // preserves row order, so rows(i) is whole.ids(i).
-    val rows = embeddings
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"),
-        pmod(xxhash64(col(idCol).cast("long")), lit(nShards)).cast("int"))
-      .collect()
-    val whole = fitSqFromRows(rows)
-    val shardOf = rows.map(_.getInt(2))
-    val dim = whole.dim
-    (0 until nShards).map { s =>
-      val idx = whole.ids.indices.filter(i => shardOf(i) == s)
-      require(idx.nonEmpty,
-        s"fitSqShards: shard $s is empty — nShards=$nShards is oversized " +
-          "for this corpus; lower it")
-      val codes = new Array[Byte](idx.length * dim)
-      idx.zipWithIndex.foreach { case (i, j) =>
-        System.arraycopy(whole.codes, i * dim, codes, j * dim, dim)
-      }
-      SqShard(idx.map(whole.ids).toArray, codes,
-        whole.minl, whole.stepl, idx.map(whole.norms).toArray)
-    }
+                  idCol: String = "vec_id", vecCol: String = "embedding"): IndexedSeq[SqShard] = {
+    val parts = hashSplit("SqShard", embeddings, vectorRows(embeddings, idCol, vecCol),
+      nShards, ShardRows)
+    val line = sqLine(buildShard("SqShard", parts.flatten.toArray))
+    parts.map(p => quantize(buildShard("SqShard", p), line))
   }
 
-  /** SQ8 top-k across sharded byte shards — the `topkRowsSharded`
-    * merge for the middle tier: per-shard serve unioned, per-query
-    * merge on the same rounded (cos desc, neighbor_id asc) order.
-    * Exact-over-union under the SHARED dequantization line, so the
-    * answer is bit-identical to one whole-corpus SqShard for any
-    * shard count (all shards must come from one `fitSqShards` fit —
-    * asserted by comparing their lines by value). */
+  /** SQ8 top-k across sharded byte shards — the shared merge on the
+    * middle tier's rounded (cos desc, neighbor_id asc) order. Exact over
+    * the union under the SHARED dequantization line, so the answer is
+    * bit-identical to one whole-corpus SqShard for any shard count (all
+    * shards must come from one `fitSqShards` fit — asserted by
+    * comparing their lines by VALUE, not reference: shards of one fit
+    * that were serialized or copied on their way to serving nodes carry
+    * value-equal but reference-distinct line arrays, and such a
+    * deployment must stay mergeable). */
   def sqTopkRowsSharded(queries: DataFrame, shards: Seq[SqShard], k: Int = 10,
                         idCol: String = "vec_id",
-                        vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(shards.nonEmpty, "sqTopkRowsSharded: no shards")
-    // VALUE equality, not reference: shards of one fit that were
-    // serialized or copied on their way to serving nodes carry
-    // value-equal but reference-distinct line arrays, and such a
-    // deployment must stay mergeable.
-    require(shards.forall(sh =>
-        java.util.Arrays.equals(sh.minl, shards.head.minl) &&
-        java.util.Arrays.equals(sh.stepl, shards.head.stepl)),
-      "sqTopkRowsSharded: shards must share one fitted dequantization " +
-        "line — per-shard lines make dequantized cosines incomparable")
-    val unioned = shards.map(sh => sqTopkRows(queries, sh, k, idCol, vecCol))
-      .reduce(_ unionAll _)
-    if (shards.size == 1) unioned
-    else {
-      val w = Window.partitionBy("query_id")
-        .orderBy(col("cos").desc, col("neighbor_id").asc)
-      unioned.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") <= k).drop("__rn")
-    }
-  }
+                        vecCol: String = "embedding"): DataFrame =
+    mergeShards("sqTopkRowsSharded", shards, k, byCos)(
+      sh => java.util.Arrays.equals(sh.minl, shards.head.minl) &&
+        java.util.Arrays.equals(sh.stepl, shards.head.stepl),
+      "shards must share one fitted dequantization line — per-shard " +
+        "lines make dequantized cosines incomparable")(
+      sqTopkRows(queries, _, k, idCol, vecCol))
 
   /** SQ8 top-k per query row — one native codegen expression
     * (`functions.SqTopK`): O(n·dim) dequantize-and-dot scan, ranked on

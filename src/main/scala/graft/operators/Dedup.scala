@@ -79,24 +79,6 @@ object Dedup {
           col("shingles"), numHashes, bands, portableMd5)))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bh")
 
-  /** MinHash-LSH candidate pairs + exact Jaccard verification.
-    * Bands of `rowsPerBand` signature values hash to a band key;
-    * docs sharing any band key become candidates (shuffle carries
-    * (band, hash) keys — tiny); candidates are verified with exact
-    * shingle-set Jaccard and filtered at `threshold`.
-    *
-    * `bandBucketCap` bounds the per-band-bucket quadratic term for
-    * dup-HEAVY corpora: a band value shared by f docs contributes f²
-    * all-pairs candidates, and at 100 TB the common case — a boilerplate
-    * page mirrored 100k× — would alone emit 10¹⁰ pairs. Buckets hotter
-    * than the cap switch to STAR expansion: each member pairs only with
-    * the bucket's min doc id (f−1 rows). Connectivity through the
-    * bucket is preserved exactly — `connectedComponents` still places
-    * every member in one cluster — so dedup-clustering recall is
-    * unchanged for identical docs; only non-transitive borderline pairs
-    * inside a hot bucket can be missed (graceful, like the simhash
-    * cap). The default (MaxValue) keeps the historical all-pairs plan
-    * with no extra aggregate. */
   /** Candidate-quality evaluation harness for the minhash-LSH pipeline:
     * recall of `minhashPairs` against EXACT all-pairs Jaccard over the
     * same corpus — the number a dedup operator tunes (numHashes, bands)
@@ -182,7 +164,26 @@ object Dedup {
       .filter(size(col("shingles")) >= 1)
   }
 
-  /** PRODUCTION DEFAULTS (what the declared `dedup_minhash` /
+  /** MinHash-LSH candidate pairs + exact Jaccard verification.
+    * Bands of `rowsPerBand` signature values hash to a band key;
+    * docs sharing any band key become candidates (shuffle carries
+    * (band, hash) keys — tiny); candidates are verified with exact
+    * shingle-set Jaccard and filtered at `threshold`.
+    *
+    * `bandBucketCap` bounds the per-band-bucket quadratic term for
+    * dup-HEAVY corpora: a band value shared by f docs contributes f²
+    * all-pairs candidates, and at 100 TB the common case — a boilerplate
+    * page mirrored 100k× — would alone emit 10¹⁰ pairs. Buckets hotter
+    * than the cap switch to STAR expansion: each member pairs only with
+    * the bucket's min doc id (f−1 rows). Connectivity through the
+    * bucket is preserved exactly — `connectedComponents` still places
+    * every member in one cluster — so dedup-clustering recall is
+    * unchanged for identical docs; only non-transitive borderline pairs
+    * inside a hot bucket can be missed (graceful, like the simhash
+    * cap). The default (MaxValue) keeps the historical all-pairs plan
+    * with no extra aggregate.
+    *
+    * PRODUCTION DEFAULTS (what the declared `dedup_minhash` /
     * `q_corpus_dedup` run, decided r6): `bandBucketCap = 512` and
     * `stopShingleDfFrac = Some(0.5)`. The parameter defaults below stay
     * permissive (∞ / None) because the proof twins and the eval harness

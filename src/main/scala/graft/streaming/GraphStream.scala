@@ -236,11 +236,10 @@ object GraphStream {
       // count (r15: the separate count + fitShardPrecounted collect
       // executed the insert frame twice per micro-batch)
       val (shardNew, nIns) = graft.Phases.phase(spark, "graph:fit")(
-        // callerBoundsRows: `ins` is one trigger-bounded micro-batch
-        // (maxFilesPerTrigger-sized), never a corpus-sized frame — the
-        // asserted bound that lets the fit skip the pre-collect probe
-        AnnServe.fitShardBounded(ins, idCol, vecCol,
-          callerBoundsRows = true))
+        // `ins` is one trigger-bounded micro-batch (maxFilesPerTrigger-
+        // sized), never a corpus-sized frame — the bound that lets the
+        // fit skip the pre-collect probe
+        AnnServe.fitShardBounded(ins, idCol, vecCol))
       // removed ids come to the driver ANYWAY (every downstream use is
       // a broadcast build), so ONE collect replaces the count and also
       // feeds the driver-side shard filter

@@ -609,6 +609,53 @@ class SimilaritySpec extends AnyFunSuite {
       s"expected the loud query-side finite guard, got: $serveErr")
   }
 
+  test("shard fits reject a null id or a null vector loudly, naming the " +
+       "shard type and the row") {
+    import spark.implicits._
+    val nullId = Seq((Some(1L), Array(1.0, 2.0)), (None, Array(2.0, 1.0)))
+      .toDF("vec_id", "embedding")
+    val nullVec = Seq((1L, Some(Array(1.0, 2.0))), (2L, None))
+      .toDF("vec_id", "embedding")
+    val fits = Seq[(String, org.apache.spark.sql.DataFrame => Any)](
+      "AnnShard" -> (graft.operators.AnnServe.fitShard(_)),
+      "SqShard" -> (graft.operators.AnnServe.fitSqShard(_)),
+      "LabeledShard" -> (e => graft.operators.AnnServe.fitLabeledShard(e,
+        e.select(e("vec_id"), org.apache.spark.sql.functions.lit("a").as("label")))))
+    for ((shardType, fit) <- fits) {
+      val idErr = intercept[IllegalArgumentException](fit(nullId))
+      assert(idErr.getMessage.contains(s"$shardType: null id at row 1"),
+        idErr.getMessage)
+      val vecErr = intercept[IllegalArgumentException](fit(nullVec))
+      assert(vecErr.getMessage.contains(s"$shardType: null vector at id 2"),
+        vecErr.getMessage)
+    }
+  }
+
+  test("shard cap guard: one shard over its cap, and a corpus over " +
+       "nShards x cap, both fail before any collect") {
+    import spark.implicits._
+    val e = (1L to 10L).map(i => (i, Array(i.toDouble, 1.0)))
+      .toDF("vec_id", "embedding")
+    var collects = 0
+    def fit(nShards: Int, cap: Int = 4) =
+      graft.operators.AnnServe.capped("AnnShard", e, nShards, cap) {
+        collects += 1; e.collect()
+      }
+    val single = intercept[IllegalArgumentException](fit(1))
+    assert(single.getMessage.contains("exceed 1 shard(s) x cap 4"), single.getMessage)
+    val total = intercept[IllegalArgumentException](fit(2))
+    assert(total.getMessage.contains("exceed 2 shard(s) x cap 4"), total.getMessage)
+    // nShards x cap past a collectable row count fails before the probe
+    val huge = intercept[IllegalArgumentException](fit(4096, 1 << 20))
+    assert(huge.getMessage.contains("exceeds a collectable row count"))
+    assert(collects == 0, "the cap guard must throw before the collect runs")
+    assert(fit(3).length == 10 && collects == 1)
+    // the post-collect form (a hash-split shard, a maintained-shard union)
+    intercept[IllegalArgumentException](
+      graft.operators.AnnServe.requireCap("AnnShard", 5, 1, 4))
+    graft.operators.AnnServe.requireCap("AnnShard", 4, 1, 4)
+  }
+
   test("serve family edges: k larger than the corpus truncates, an empty " +
        "query feed yields empty answers, a single-vector shard serves") {
     import spark.implicits._

@@ -17,12 +17,17 @@ driver's canonicalizer cannot even hash):
     unhashable -> TypeError), so a driver-incompatible output schema
     now fails HERE first instead of at round adjudication.
 
+Each distinct oracle SQL text runs once per run: a streaming twin that
+reuses its batch query's oracle is compared against the result its
+first user fetched, which is kept only until its last user is done.
+
 A query whose compare takes over 10 s prints one `SLOW` line to stderr
 with the seconds of its four phases: the DuckDB oracle, the fetch of
 the Spark result, the row compare and the canonical hash.
 
 Usage: compare_oracle.py <sfDir> <verifyOut>"""
 import sys, json, math, time
+from collections import Counter
 import duckdb
 import pandas as pd
 
@@ -43,6 +48,18 @@ def canon_hash(tbl, cols):
     return int(pd.util.hash_pandas_object(df, index=False).sum() & ((1 << 64) - 1))
 
 
+def oracle_result(sql):
+    """The DuckDB result of `sql`, or the exception it raised, fetched
+    once per distinct text and dropped after its last user."""
+    if sql not in results:
+        try:
+            results[sql] = con.execute(sql).fetch_arrow_table()
+        except Exception as e:
+            results[sql] = e
+    users[sql] -= 1
+    return results[sql] if users[sql] else results.pop(sql)
+
+
 def compare(name, sql, t):
     """One query's two-layer compare; returns its stdout line. Records
     the seconds of each phase in `t` (oracle, fetch, compare, hash) as
@@ -54,12 +71,10 @@ def compare(name, sql, t):
         t[phase] = now - clock[0]
         clock[0] = now
 
-    try:
-        exp = con.execute(sql).fetch_arrow_table()
-    except Exception as e:
-        return f"FAIL {name}: oracle SQL error: {e}"
-    finally:
-        lap("oracle")
+    exp = oracle_result(sql)
+    lap("oracle")
+    if isinstance(exp, Exception):
+        return f"FAIL {name}: oracle SQL error: {exp}"
     try:
         got = con.execute(
             f"SELECT * FROM parquet_scan('{vout}/{name}/*.parquet')").fetch_arrow_table()
@@ -106,6 +121,8 @@ def compare(name, sql, t):
 
 
 oracle = json.load(open(f"{vout}/oracle_sql.json"))
+users = Counter(oracle.values())
+results = {}
 fail = 0
 for name, sql in sorted(oracle.items()):
     t = {}
