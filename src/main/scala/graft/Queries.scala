@@ -588,7 +588,7 @@ object Queries {
     * sorts output columns, and an array<double> column is unsortable in
     * its pandas harness (the r1 red row). Every dimension is still
     * checked, one per row — and the whole fit+transform (enrichment,
-    * profile joins, population-σ scaling, sorted-vocab one-hot) is now
+    * profile lookups, population-σ scaling, sorted-vocab one-hot) is now
     * ORACLE-CHECKED: the SQL below rebuilds the identical pipeline,
     * deriving each one-hot dimension index from a row_number over the
     * distinct sorted vocabulary (numerics are dims 0-7, channel vocab

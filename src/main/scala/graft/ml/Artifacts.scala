@@ -65,8 +65,10 @@ object Artifacts {
     * the two profile tables as parquet. This is the production
     * train→serve handoff — `Ensemble.fit` once on the cluster, ship the
     * directory, `loadEnsemble` in the (possibly streaming) scorer.
-    * Profiles are parquet because they scale with |entities|, unlike
-    * the constant-size model state. */
+    * The profiles are fitted state like the models (scoring looks them
+    * up per row); parquet keeps their key and value types, and
+    * `loadEnsemble` collects them again behind the same
+    * `Profiles.ProfileRows` cap as the fit. */
   def saveEnsemble(f: Ensemble.Fitted, dir: String): Unit = {
     savePreproc(f.preproc, s"$dir/preproc.json")
     savePca(f.pca, s"$dir/pca.json")
@@ -81,8 +83,8 @@ object Artifacts {
         s""""bigAmount":${jNum(c.bigAmount)},""" +
         s""""suspiciousChannel":${jStr(c.suspiciousChannel)},""" +
         s""""propsKeyThreshold":${c.propsKeyThreshold}}""")
-    f.custProfile.write.mode("overwrite").parquet(s"$dir/cust_profile.parquet")
-    f.merchProfile.write.mode("overwrite").parquet(s"$dir/merch_profile.parquet")
+    for ((name, p) <- Seq("cust_profile" -> f.profiles.cust, "merch_profile" -> f.profiles.merch))
+      p.toDF.write.mode("overwrite").parquet(s"$dir/$name.parquet")
   }
 
   def loadEnsemble(spark: org.apache.spark.sql.SparkSession, dir: String): Ensemble.Fitted = {
@@ -101,14 +103,15 @@ object Artifacts {
     p.objField("propsKeyThreshold"); val propsKeyThreshold = p.num().toInt
     val cfg = Ensemble.Config(nTrees, subsample, contamination, pcaK, lofK,
       lofRefPoints, seed, largeAmount, bigAmount, suspiciousChannel, propsKeyThreshold)
+    def profile(name: String) = graft.operators.Profiles.collectProfile(
+      name, spark.read.parquet(s"$dir/$name.parquet"))
     Ensemble.Fitted(
       loadPreproc(s"$dir/preproc.json"),
       loadForest(s"$dir/forest.json"),
       loadPca(s"$dir/pca.json"),
       aeThr,
       loadLofNovelty(s"$dir/lof.json"),
-      spark.read.parquet(s"$dir/cust_profile.parquet"),
-      spark.read.parquet(s"$dir/merch_profile.parquet"),
+      Features.EventProfiles(profile("cust_profile"), profile("merch_profile")),
       cfg)
   }
 

@@ -11,16 +11,17 @@ import graft.operators.Scoring
   *   fit:   preproc fit → 80/20 split (seed 42, `train.py:83`) →
   *          iForest + PCA-recon (AE substitute) + LOF-novelty fits →
   *          P97.5 AE threshold — all state constant-size.
-  *   score: bind → enrich → features → 3 native-expression model
-  *          scores (`functions.ArrayMath` kernels) →
+  *   score: bind → enrich (profile lookups) → features → 3 native-
+  *          expression model scores (`functions.ArrayMath` kernels) →
   *          worker normalization (`python_scoring/app.py:188-196`) →
   *          rules + deviation → gateway fusion → risk level.
   *
   * `scoreBatch` is a pure DataFrame transform — the SAME code scores
   * batch tables and Structured Streaming micro-batches
-  * (`streaming.ScoreStream.scoredWithModels`). Scoring shuffles
-  * nothing; the only exchanges live in the profile aggregates at fit
-  * time.
+  * (`streaming.ScoreStream.scoredWithModels`). Scoring plans no join
+  * and no exchange: the profiles are fitted state, collected once by
+  * the fit's own enrichment and looked up per row, so a micro-batch
+  * runs one job.
   */
 object Ensemble {
 
@@ -36,12 +37,13 @@ object Ensemble {
       suspiciousChannel = suspiciousChannel, propsKeyThreshold = propsKeyThreshold)
   }
 
-  /** Everything scoring needs, all broadcast-safe constant-size state
-    * plus the two small profile tables (broadcast at join time). */
+  /** Everything scoring needs, all constant fitted state: the models
+    * and the two profile tables, collected behind the
+    * `Profiles.ProfileRows` cap. */
   final case class Fitted(
       preproc: PreprocModel, ifModel: IForestModel, pca: PcaReconModel,
       aeThreshold: Double, lofNovelty: LofNoveltyModel,
-      custProfile: DataFrame, merchProfile: DataFrame, cfg: Config)
+      profiles: Features.EventProfiles, cfg: Config)
 
   /** The three anomaly models + AE threshold, fit on an already-
     * preprocessed features frame (domain-agnostic — events binding and
@@ -87,24 +89,19 @@ object Ensemble {
 
   /** Fit all models on the events binding (seeded, deterministic). */
   def fit(spark: SparkSession, sfDir: String, cfg: Config = Config()): Fitted = {
-    val (preproc, feats) = Features.preprocessedEvents(spark, sfDir)
+    val (preproc, feats, profiles) = Features.preprocessedEventsWithProfiles(spark, sfDir)
     val (ifModel, pca, aeThr, lofNov) = fitModels(feats, "event_id", cfg)
-    // profile aggs over the memoized enriched frame (feats carries all
-    // enrichment columns) — no extra pass over the source
-    val custProf = graft.operators.Profiles.customerProfileFull(feats, "user_id", "amount")
-    val merchProf = graft.operators.Profiles.merchantProfile(feats, "channel", "amount")
-    Fitted(preproc, ifModel, pca, aeThr, lofNov, custProf, merchProf, cfg)
+    Fitted(preproc, ifModel, pca, aeThr, lofNov, profiles, cfg)
   }
 
   /** Score a raw events frame (batch OR streaming): requires the
     * events schema (`event_id, ts, user_id, event_type, value,
-    * props`). Pure transform — broadcast profile joins + native
-    * expressions (the model kernels are `functions.ArrayMath`
-    * expressions, no UDFs), no aggregation over the scored frame
-    * itself. */
+    * props`). Pure transform — native expressions only (the profile
+    * lookups and the model kernels, no UDFs), no join and no
+    * aggregation over the scored frame itself. */
   def scoreBatch(events: DataFrame, m: Fitted): DataFrame = {
-    val feats = m.preproc.transform(Features.enrichEvents(
-      Features.bindEvents(events), m.custProfile, m.merchProfile))
+    val feats = m.preproc.transform(
+      Features.enrichEvents(Features.bindEvents(events), m.profiles))
     val (r1, r2, r3) = graft.Pipelines.eventRules(m.cfg.rules,
       col("amount"), col("channel"), col("props"), col("hour"))
 

@@ -8,8 +8,9 @@ import graft.operators.{Profiles, TimeFeatures}
 /** Model-input feature assembly for the events binding of the
   * transactions domain (FIXTURES.md §B1): the reference's 8 numeric +
   * 2 categorical model inputs (`train.py:56-62`) rebuilt as one
-  * declarative plan — profile aggregates (broadcast-joined), calendar
-  * features, and a JSON-derived bucket standing in for `location`. */
+  * declarative plan — profile values (looked up from profiles collected
+  * once at fit), calendar features, and a JSON-derived bucket standing
+  * in for `location`. */
 object Features {
 
   val NumericCols: Seq[String] = Seq(
@@ -17,12 +18,27 @@ object Features {
     "cust_avg_amount", "cust_txn_count", "merch_avg_amount")
   val CatCols: Seq[String] = Seq("channel", "location")
 
+  /** The customer (`user_id`) and merchant (`channel`) profiles of the
+    * fit history, collected once: the state `enrichEvents` looks up. */
+  final case class EventProfiles(cust: Profiles.ProfileTable,
+                                 merch: Profiles.ProfileTable)
+
   /** events → enriched modeling frame with the reference's column
-    * names; the profiles are computed over the bound frame. */
-  def eventFeatures(spark: SparkSession, sfDir: String): DataFrame = {
+    * names, plus the profiles it was enriched with. The two profile
+    * aggregates over the bound frame are collected here, concurrently
+    * under one `ml:profiles` label — the jobs the enrichment's two
+    * broadcast sides used to run — and the fitted model keeps them. */
+  def eventFeatures(spark: SparkSession, sfDir: String): (DataFrame, EventProfiles) = {
     val ev = bindEvents(Tables.events(spark, sfDir))
-    enrichEvents(ev, Profiles.customerProfileFull(ev, "user_id", "amount"),
-                 Profiles.merchantProfile(ev, "channel", "amount"))
+    var cust: Profiles.ProfileTable = null
+    var merch: Profiles.ProfileTable = null
+    graft.Phases.inParallel(spark, "ml:profiles")(
+      () => cust = Profiles.collectProfile("cust_profile",
+        Profiles.customerProfileFull(ev, "user_id", "amount")),
+      () => merch = Profiles.collectProfile("merch_profile",
+        Profiles.merchantProfile(ev, "channel", "amount")))
+    val profiles = EventProfiles(cust, merch)
+    (enrichEvents(ev, profiles), profiles)
   }
 
   /** Raw events → the reference's `amount`/`channel`/`location`
@@ -37,13 +53,21 @@ object Features {
                (get_json_object(col("props"), "$.k").cast("int") / lit(25)).cast("int")))
 
   /** Bound events → calendar features + the customer (`user_id`) and
-    * merchant (`channel`) profiles, broadcast-joined. Batch fit and
-    * `Ensemble.scoreBatch` (fitted profiles) share it. */
-  def enrichEvents(bound: DataFrame, custProfile: DataFrame,
-                   merchProfile: DataFrame): DataFrame =
-    Profiles.joinProfiles(TimeFeatures.withTimeFeatures(bound, "ts"),
-        custProfile, "user_id", Some((merchProfile, "channel")))
-      .withColumn("cust_txn_count", col("cust_txn_count").cast("double"))
+    * merchant (`channel`) profile values, looked up per row
+    * (`ProfileTable.lookup`). The batch fit and `Ensemble.scoreBatch`
+    * share it. The columns come in the order the two USING left joins
+    * this replaces gave them — `channel, user_id`, the other bound
+    * columns, then `cust_avg_amount, cust_txn_count, merch_avg_amount`
+    * — because `randomSplit` sorts each partition by every column in
+    * schema order, so the order reaches the fitted models. An unknown
+    * or null key gives null values, as the joins' unmatched rows did;
+    * `cust_txn_count` comes out as a double. */
+  def enrichEvents(bound: DataFrame, profiles: EventProfiles): DataFrame = {
+    val t = TimeFeatures.withTimeFeatures(bound, "ts")
+    val rest = t.columns.filterNot(c => c == "channel" || c == "user_id").map(t.col)
+    t.select(Seq(t.col("channel"), t.col("user_id")) ++ rest ++
+      profiles.cust.lookup(t.col("user_id")) ++ profiles.merch.lookup(t.col("channel")): _*)
+  }
 
   /** The SAME feature assembly over the reference's own transactions
     * schema (`Sources.transactionsCsvSchema` — the shape of
@@ -60,7 +84,8 @@ object Features {
       .withColumn("cust_txn_count", col("cust_txn_count").cast("double"))
   }
 
-  /** Fit preproc on the event features and return (model, transformed).
+  /** Fit preproc on the event features and return (model, transformed,
+    * profiles).
     * The fit runs INSIDE the caller's own execution, every call, from
     * the parquet inputs — the old per-(session, sfDir) memo excluded
     * the preproc fit's aggregate jobs from every timed run of the ML
@@ -68,12 +93,20 @@ object Features {
     * shaped, and it was: the bench's numbers were partially fit-free).
     * Within one call the enriched frame is LAZILY localCheckpoint'ed
     * so the fit aggregate, the transform and the caller's model-fit
-    * actions share one materialization of the profile joins; the
+    * actions share one materialization of the enrichment; the
     * blocks are ContextCleaner-owned (no CacheManager entry), so
     * nothing survives the call as a reusable cross-run result. */
-  def preprocessedEvents(spark: SparkSession, sfDir: String): (PreprocModel, DataFrame) = {
-    val feats = eventFeatures(spark, sfDir).localCheckpoint(eager = false)
+  def preprocessedEventsWithProfiles(spark: SparkSession, sfDir: String)
+      : (PreprocModel, DataFrame, EventProfiles) = {
+    val (enriched, profiles) = eventFeatures(spark, sfDir)
+    val feats = enriched.localCheckpoint(eager = false)
     val m = Preproc.fit(feats, NumericCols, CatCols)
-    (m, m.transform(feats))
+    (m, m.transform(feats), profiles)
+  }
+
+  /** `preprocessedEventsWithProfiles` for callers that fit no scorer. */
+  def preprocessedEvents(spark: SparkSession, sfDir: String): (PreprocModel, DataFrame) = {
+    val (m, feats, _) = preprocessedEventsWithProfiles(spark, sfDir)
+    (m, feats)
   }
 }

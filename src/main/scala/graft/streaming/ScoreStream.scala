@@ -13,14 +13,18 @@ import graft.operators.Profiles
   * (`python_scoring/app.py:239-270`); here:
   *
   *   file/Kafka/memory source → watermark → exactly-once dedup on
-  *   transaction id → stream-static broadcast join to the profile →
-  *   the SAME batch scoring transform (`Pipelines.applyScoring`) →
-  *   foreachBatch parquet append (idempotent by checkpoint).
+  *   transaction id → profile enrichment → the SAME batch scoring
+  *   transform → foreachBatch parquet append (idempotent by
+  *   checkpoint).
   *
-  * The profile side is a static DataFrame refreshed per restart (the
-  * stream-static join re-executes the static plan per micro-batch);
-  * a fully stateful variant keeps running {sum,count} per customer in
-  * `flatMapGroupsWithState` — see `StatefulProfiles`.
+  * The two scoring paths enrich differently. The rules path (`scored`)
+  * takes a static profile DataFrame from its caller and joins it
+  * stream-static, which re-executes the static plan every micro-batch.
+  * The ensemble path (`scoredWithModels`) looks its profiles up from
+  * the fitted model's collected tables, so a micro-batch plans no join
+  * and runs one job. A fully stateful variant keeps running
+  * {sum,count} per customer in `flatMapGroupsWithState` — see
+  * `StatefulProfiles`.
   */
 object ScoreStream {
 
@@ -41,9 +45,11 @@ object ScoreStream {
       Profiles.joinProfiles(dedup(events, watermark), custProfile, "user_id"), cfg)
 
   /** FULL real-time inference (the north-star surface): watermarked,
-    * deduped stream scored by the fitted ML ensemble — broadcast
-    * models (forest/PCA/LOF-novelty/scaler) + stream-static profile
-    * joins, the SAME `Ensemble.scoreBatch` transform as batch. */
+    * deduped stream scored by the fitted ML ensemble — the SAME
+    * `Ensemble.scoreBatch` transform as batch, whose models
+    * (forest/PCA/LOF-novelty/scaler) and profiles are all fitted state
+    * in native expressions: no stream-static join, one job per
+    * micro-batch. */
   def scoredWithModels(events: DataFrame, fitted: graft.ml.Ensemble.Fitted,
                        watermark: String = "1 day"): DataFrame =
     graft.ml.Ensemble.scoreBatch(dedup(events, watermark), fitted)

@@ -548,4 +548,67 @@ class NativeExprSpec extends AnyFunSuite {
       s"a\\uD83D\\uDE00b... has 5 code points -> 3 grams, got ${native(1L).length}")
     assert(native(3L).isEmpty, "2 code points -> below the trigram floor")
   }
+
+  // Hand rows in the events schema, added to sf0.001: to the history the
+  // profiles are fitted on, and to the frame that is enriched.
+  private def eventRow(id: Long, user: java.lang.Long, channel: String,
+                       value: java.lang.Double): Row =
+    Row(id, java.sql.Timestamp.valueOf("2024-01-10 03:00:00"), user, channel,
+      value, """{"k": 40}""")
+
+  for ((path, confs) <- evalPaths) {
+    test(s"enrichEvents profile lookups == the broadcast USING-join reference: " +
+         s"schema and rows, sf0.001 plus edge keys$path") {
+      val ev = Tables.events(spark, "/root/testdata/sf0.001")
+      def withRows(df: DataFrame, rows: Row*): DataFrame =
+        df.union(spark.createDataFrame(java.util.Arrays.asList(rows: _*), ev.schema))
+      val known = ev.select("user_id").head().getLong(0)
+      val history = withRows(ev,
+        eventRow(900001L, null, "purchase", 10.0),  // a null-key customer group
+        eventRow(900002L, 777777L, "view", null),   // a user whose values are all null
+        eventRow(900003L, 777777L, null, null))     // a null-key merchant group
+      val target = ml.Features.bindEvents(withRows(history,
+        eventRow(900004L, 888888L, "purchase", 5.0),  // unknown user_id
+        eventRow(900005L, known, "teleport", 6.0),    // unknown channel
+        eventRow(900006L, null, "view", 7.0),         // null user_id
+        eventRow(900007L, known, null, 8.0)))         // null channel
+      val bound = ml.Features.bindEvents(history)
+      val cust = operators.Profiles.customerProfileFull(bound, "user_id", "amount")
+      val merch = operators.Profiles.merchantProfile(bound, "channel", "amount")
+      val fitted = ml.Features.EventProfiles(
+        operators.Profiles.collectProfile("cust_profile", cust),
+        operators.Profiles.collectProfile("merch_profile", merch))
+
+      val reference = ProfileJoins.enrichEvents(target, cust, merch)
+      val lookup = ml.Features.enrichEvents(target, fitted)
+      assert(lookup.schema == reference.schema,
+        s"\n${lookup.schema.treeString}\nvs\n${reference.schema.treeString}")
+      val want = reference.collect().sortBy(_.getAs[Long]("event_id"))
+      val got = onPath(confs)(lookup).sortBy(_.getAs[Long]("event_id"))
+      assert(got.length == 1007 && got.sameElements(want))
+      val byId = got.map(r => r.getAs[Long]("event_id") -> r).toMap
+      assert(byId(900002L).isNullAt(byId(900002L).fieldIndex("cust_avg_amount")) &&
+        byId(900002L).getAs[Double]("cust_txn_count") == 2.0)
+      for (id <- Seq(900004L, 900006L))
+        assert(byId(id).isNullAt(byId(id).fieldIndex("cust_avg_amount")))
+      for (id <- Seq(900005L, 900007L))
+        assert(byId(id).isNullAt(byId(id).fieldIndex("merch_avg_amount")))
+    }
+  }
+
+  test("profile collect: a profile over its row cap fails loudly, naming the " +
+       "profile and the cap; a duplicate key or an unsupported key type too") {
+    val over = intercept[IllegalArgumentException](
+      operators.Profiles.requireProfileCap("cust_profile", 3, 2))
+    assert(over.getMessage.contains("profile cust_profile: 3 rows exceed the cap of 2"),
+      over.getMessage)
+    operators.Profiles.requireProfileCap("cust_profile", 2, 2)
+    assert(operators.Profiles.ProfileRows == (1 << 20))
+    val dup = intercept[IllegalArgumentException](operators.Profiles.collectProfile(
+      "merch_profile", Seq(("a", 1.0), ("a", 2.0)).toDF("channel", "merch_avg_amount")))
+    assert(dup.getMessage.contains("profile merch_profile: duplicate key a"), dup.getMessage)
+    val badKey = intercept[IllegalArgumentException](operators.Profiles.collectProfile(
+      "p", Seq((1.5, 1.0)).toDF("k", "v")))
+    assert(badKey.getMessage.contains("lookups take long or string keys"), badKey.getMessage)
+  }
 }

@@ -616,5 +616,21 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(indexed.isEmpty, s"model arrays indexed in generated code: ${indexed.distinct}")
     assert(src.contains("/* lofPoints */") && src.contains("/* ifFeature */") &&
       src.contains("/* pcaComponents */"))
+    // the profiles are fitted lookup state: over a plain parquet scan the
+    // scoring plan holds no join and no exchange of any kind
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => nodes(s.plan)
+      case _ => p +: (p.children ++ p.subqueries).flatMap(nodes)
+    }
+    val executed = nodes(q.queryExecution.executedPlan)
+    val tree = q.queryExecution.executedPlan.toString
+    assert(!executed.exists(_.isInstanceOf[org.apache.spark.sql.execution.joins.BaseJoinExec]) &&
+      !tree.contains("Join"), s"scoring plans a join:\n$tree")
+    assert(!executed.exists(_.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange]) &&
+      !tree.contains("Exchange"), s"scoring plans an exchange:\n$tree")
+    assert(src.contains("graft.functions.ProfileKernels.slot("), "no profile lookup call")
   }
 }
