@@ -234,11 +234,18 @@ object ProbeSoak {
     }(enc).toDF()
   }
 
+  /** `df` laid out for a byte-reproducible write: 32 partitions hashed
+    * on the id `key`, each sorted by it, so every run of the same code
+    * writes the same rows into the same part files in the same order
+    * (a round-robin `repartition(32)` placed rows by task order). */
+  private def reproducible(df: DataFrame, key: String): DataFrame =
+    df.repartition(32, col(key)).sortWithinPartitions(key)
+
   /** The path of soak/x`s`/embeddings.parquet, generated first if missing. */
   private def soakEmbeddings(spark: SparkSession, s: Int): String = {
     val path = s"$OutRoot/x$s/embeddings.parquet"
     if (!new java.io.File(path).exists)
-      genEmbeddings(spark, s).repartition(32).write.mode("overwrite").parquet(path)
+      reproducible(genEmbeddings(spark, s), "vec_id").write.mode("overwrite").parquet(path)
     path
   }
 
@@ -294,9 +301,9 @@ object ProbeSoak {
   private def gen(spark: SparkSession, scales: Seq[Int]): Unit =
     scales.foreach { s =>
       val dir = s"$OutRoot/x$s"
-      genDocs(spark, s).repartition(32).write.mode("overwrite")
+      reproducible(genDocs(spark, s), "doc_id").write.mode("overwrite")
         .parquet(s"$dir/documents.parquet")
-      genEmbeddings(spark, s).repartition(32).write.mode("overwrite")
+      reproducible(genEmbeddings(spark, s), "vec_id").write.mode("overwrite")
         .parquet(s"$dir/embeddings.parquet")
       val nd = spark.read.parquet(s"$dir/documents.parquet").count()
       val ne = spark.read.parquet(s"$dir/embeddings.parquet").count()

@@ -69,7 +69,8 @@ object Artifacts {
     * up per row); parquet keeps their key and value types, and
     * `loadEnsemble` collects them again behind the same
     * `Profiles.ProfileRows` cap as the fit. */
-  def saveEnsemble(f: Ensemble.Fitted, dir: String): Unit = {
+  def saveEnsemble(spark: org.apache.spark.sql.SparkSession, f: Ensemble.Fitted,
+                   dir: String): Unit = {
     savePreproc(f.preproc, s"$dir/preproc.json")
     savePca(f.pca, s"$dir/pca.json")
     saveForest(f.ifModel, s"$dir/forest.json")
@@ -84,7 +85,7 @@ object Artifacts {
         s""""suspiciousChannel":${jStr(c.suspiciousChannel)},""" +
         s""""propsKeyThreshold":${c.propsKeyThreshold}}""")
     for ((name, p) <- Seq("cust_profile" -> f.profiles.cust, "merch_profile" -> f.profiles.merch))
-      p.toDF.write.mode("overwrite").parquet(s"$dir/$name.parquet")
+      p.toDF(spark).write.mode("overwrite").parquet(s"$dir/$name.parquet")
   }
 
   def loadEnsemble(spark: org.apache.spark.sql.SparkSession, dir: String): Ensemble.Fitted = {

@@ -101,9 +101,9 @@ object Profiles {
     }
 
     /** The collected rows as a DataFrame again (the artifact form), in
-      * the active session. */
-    def toDF: DataFrame =
-      SparkSession.active.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      * the caller's session. */
+    def toDF(spark: SparkSession): DataFrame =
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 
   /** Collect a profile aggregate into a `ProfileTable`. The cap is

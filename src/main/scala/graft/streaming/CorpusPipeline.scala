@@ -37,9 +37,13 @@ import graft.operators.Dedup
   * verification sets and the state snapshots — are scan-side and
   * write-side respectively; a snapshot cadence `compactEvery` above 1
   * (the same for the embedded graph) turns the writes between
-  * snapshots into per-batch delta segments (production persists
-  * banded keys and shingle sets bucketed; the pair/graph algebra is
-  * unchanged).
+  * snapshots into per-batch delta segments, whose write I/O is
+  * O(|changed|) (production persists banded keys and shingle sets
+  * bucketed; the pair/graph algebra is unchanged). Every state write
+  * emits files by the state's size (`VersionedState.write`), not by
+  * the blocks its hot union has gathered, so at small state an
+  * advance pays one write task per state directory, not one per
+  * batch absorbed.
   * No bucket cap and no stop-shingle df filter in this twin: both are
   * corpus-frequency-dependent and therefore arrival-order-dependent —
   * the capped/filtered forms stay the batch production path with
@@ -185,12 +189,14 @@ object CorpusPipeline {
       // probe (its length), and feeds the bloom re-send guard below;
       // the old spelling paid an eager-checkpoint job plus a
       // limit(1).count job per batch for the same information.
-      val b = batch.select(col("doc_id").cast("long").as("doc_id"),
-          col("text"), col("embedding").cast("array<double>").as("embedding"))
-        .repartition(nPart)
-        .localCheckpoint(false)
-      val bIds: Array[Long] = graft.Phases.phase(spark, "corpus:batch-in") {
-        b.select("doc_id").collect().map(_.getLong(0))
+      // (under AQE even the lazy checkpoint runs the repartition's
+      // shuffle when it is created, so it carries the phase label too)
+      val (b, bIds) = graft.Phases.phase(spark, "corpus:batch-in") {
+        val b = batch.select(col("doc_id").cast("long").as("doc_id"),
+            col("text"), col("embedding").cast("array<double>").as("embedding"))
+          .repartition(nPart)
+          .localCheckpoint(false)
+        (b, b.select("doc_id").collect().map(_.getLong(0)))
       }
       if (bIds.isEmpty) {
         state.writePointer(v, batchId); cur = (v, batchId); return v
@@ -347,23 +353,27 @@ object CorpusPipeline {
       // batch's DELTA — its docs, its new pairs and the kept-set diff,
       // ALL already computed by the advance algebra above, so the
       // segment costs zero extra compute and O(|batch|) write I/O
-      // instead of O(corpus).
+      // instead of O(corpus). Files are sized by rows already on the
+      // driver: a snapshot by the document count (the bloom guard's
+      // `bloomCount`, which bounds the kept set; pair rows are three
+      // numbers), a segment by its batch's size.
       val newV = v + 1
       val snapNow = state.beginVersion(newV)
       // independent state writes run concurrently (guide §2.6) — the
       // driver was the only thing serializing them
       if (snapNow)
         graft.Phases.inParallel(spark, "corpus:snapshot-write")(
-          () => allDocs.write.mode("overwrite").parquet(state.snapshotDir("docs", newV)),
-          () => pairs1.write.mode("overwrite").parquet(state.snapshotDir("pairs", newV)),
-          () => kept1.write.mode("overwrite").parquet(state.snapshotDir("kept", newV)))
+          () => VersionedState.write(allDocs, state.snapshotDir("docs", newV), bloomCount),
+          () => VersionedState.write(pairs1, state.snapshotDir("pairs", newV), bloomCount),
+          () => VersionedState.write(kept1, state.snapshotDir("kept", newV), bloomCount))
       else {
         val seg = state.segmentDir(newV)
+        val n = bIds.length.toLong
         graft.Phases.inParallel(spark, "corpus:log-write")(
-          () => b.write.mode("overwrite").parquet(s"$seg/dins"),
-          () => newPairs.write.mode("overwrite").parquet(s"$seg/pins"),
-          () => fresh.write.mode("overwrite").parquet(s"$seg/kin"),
-          () => evicted.write.mode("overwrite").parquet(s"$seg/kout"))
+          () => VersionedState.write(b, s"$seg/dins", n),
+          () => VersionedState.write(newPairs, s"$seg/pins", n),
+          () => VersionedState.write(fresh, s"$seg/kin", n),
+          () => VersionedState.write(evicted, s"$seg/kout", n))
       }
       state.writePointer(newV, batchId)
       hot = Some((newV, allDocs, pairs1, kept1))

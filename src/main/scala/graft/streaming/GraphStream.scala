@@ -40,7 +40,10 @@ import graft.operators.AnnServe
   * version writes a DELTA segment — corpus inserts/deletes, the full
   * new neighbor lists of CHANGED queries, eviction tombstones — so its
   * write I/O is O(|changed|), and the snapshot every `compactEvery`
-  * versions bounds recovery replay. The default cadence 1 snapshots
+  * versions bounds recovery replay. Either write emits files by its
+  * state's size (`VersionedState.write`: one file per `RowsPerFile`
+  * rows), never one per block of the hot frame, whose unions gain
+  * blocks with every batch. The default cadence 1 snapshots
   * every version (versions fully isolated, nothing to replay). Every
   * cadence drains to the bit-identical state (StreamingSpec gates it)
   * and the graph compute dominates at steady state. */
@@ -227,19 +230,22 @@ object GraphStream {
       // lazy checkpoint: the insert frame is a JOIN in the corpus
       // pipeline and is consumed several times below (shard collect,
       // two serve passes, the corpus union) — cache it at first
-      // compute instead of re-running the join per consumer
-      val ins = inserts
-        .select(col(idCol).cast("long").as(idCol),
-                col(vecCol).cast("array<double>").as(vecCol))
-        .localCheckpoint(false)
+      // compute instead of re-running the join per consumer. Under AQE
+      // the lazy checkpoint still runs the join's shuffle and broadcast
+      // stages when it is created, so it sits inside the fit's label.
       // ONE collect fits the new-side shard AND yields the batch
       // count (r15: the separate count + fitShardPrecounted collect
       // executed the insert frame twice per micro-batch)
-      val (shardNew, nIns) = graft.Phases.phase(spark, "graph:fit")(
+      val (ins, (shardNew, nIns)) = graft.Phases.phase(spark, "graph:fit") {
+        val ins = inserts
+          .select(col(idCol).cast("long").as(idCol),
+                  col(vecCol).cast("array<double>").as(vecCol))
+          .localCheckpoint(false)
         // `ins` is one trigger-bounded micro-batch (maxFilesPerTrigger-
         // sized), never a corpus-sized frame — the bound that lets the
         // fit skip the pre-collect probe
-        AnnServe.fitShardBounded(ins, idCol, vecCol))
+        (ins, AnnServe.fitShardBounded(ins, idCol, vecCol))
+      }
       // removed ids come to the driver ANYWAY (every downstream use is
       // a broadcast build), so ONE collect replaces the count and also
       // feeds the driver-side shard filter
@@ -266,12 +272,14 @@ object GraphStream {
         cur = (v, batchId)
         return v
       }
+      // what a delta segment's files are sized by
+      val batchRows = nIns + removedSet.size
       if (v == 0) {
         require(removedSet.isEmpty,
           "MaintainedGraph: delete in the bootstrap batch — nothing is indexed yet")
         val shard = shardNew.get
         commit(batchId, 1, ins,
-          AnnServe.topkRows(ins, shard, k, idCol, vecCol), shard)
+          AnnServe.topkRows(ins, shard, k, idCol, vecCol), shard, batchRows)
       } else {
         val corpus0 = corpus
         val shard0 = shardBehind(corpus0)
@@ -290,7 +298,7 @@ object GraphStream {
           val shard = shardNew.get
           commit(batchId, v + 1, ins,
             AnnServe.topkRows(ins, shard, k, idCol, vecCol), shard,
-            removedSet)
+            batchRows, removedSet)
         } else {
           val (corpus1, shard1, edges1) =
             if (removedSet.isEmpty) (corpus0, shard0, edges0)
@@ -314,7 +322,7 @@ object GraphStream {
             }
           shardNew match {
             case None =>
-              commit(batchId, v + 1, corpus1, edges1, shard1, removedSet)
+              commit(batchId, v + 1, corpus1, edges1, shard1, batchRows, removedSet)
             case Some(sn) =>
               val merged = graft.Phases.phase(spark, "graph:merge-check") {
                 AnnServe.knnGraphIncremental(
@@ -326,7 +334,7 @@ object GraphStream {
                   preverifiedEdges = removedSet.nonEmpty || !edgesFromReplay)
               }
               commit(batchId, v + 1, corpus1.unionByName(ins),
-                merged, AnnServe.concatShards(shard1, sn), removedSet)
+                merged, AnnServe.concatShards(shard1, sn), batchRows, removedSet)
           }
         }
       }
@@ -335,7 +343,7 @@ object GraphStream {
 
     private def commit(batchId: Long, newV: Int, corpusDf: DataFrame,
                        edgesDf: DataFrame,
-                       shardAfter: AnnServe.AnnShard,
+                       shardAfter: AnnServe.AnnShard, batchRows: Long,
                        removedQueryIds: Set[Long] = Set.empty): Unit = {
       // materialize once into hot blocks, persist from those blocks.
       // A SNAPSHOT commit reads c and e from exactly ONE writer each
@@ -349,16 +357,23 @@ object GraphStream {
       // un-materialized blocks). Independent state writes run
       // CONCURRENTLY (guide §2.6): the driver was the only thing
       // serializing them, and on tiny per-batch state the job
-      // round-trip dominates the write itself.
+      // round-trip dominates the write itself. Files are sized by the
+      // shard size after the advance (a snapshot; edge rows are three
+      // numbers, k per corpus row) or by the batch's size (a segment).
       val snapNow = state.beginVersion(newV)
       var c: DataFrame = null
       var e: DataFrame = null
       if (snapNow) {
-        c = corpusDf.localCheckpoint(false)
-        e = edgesDf.select("query_id", "neighbor_id", "cos").localCheckpoint(false)
+        // the lazy checkpoints still run the merge's shuffle and
+        // broadcast stages under AQE when they are created
+        graft.Phases.phase(spark, "graph:merge") {
+          c = corpusDf.localCheckpoint(false)
+          e = edgesDf.select("query_id", "neighbor_id", "cos").localCheckpoint(false)
+        }
+        val n = shardAfter.ids.length.toLong
         graft.Phases.inParallel(spark, "graph:commit-write")(
-          () => c.write.mode("overwrite").parquet(state.snapshotDir("corpus", newV)),
-          () => e.write.mode("overwrite").parquet(state.snapshotDir("edges", newV)))
+          () => VersionedState.write(c, state.snapshotDir("corpus", newV), n),
+          () => VersionedState.write(e, state.snapshotDir("edges", newV), n))
       } else {
         graft.Phases.inParallel(spark, "graph:commit-ckpt")(
           () => c = corpusDf.localCheckpoint(),
@@ -374,19 +389,19 @@ object GraphStream {
         val seg = state.segmentDir(newV)
         import spark.implicits._
         graft.Phases.inParallel(spark, "graph:commit-write")(
-          () => c.join(cOld, Seq(idCol), "left_anti")
-            .write.mode("overwrite").parquet(s"$seg/cins"),
-          () => cOld.join(c, Seq(idCol), "left_anti").select(idCol)
-            .write.mode("overwrite").parquet(s"$seg/cdel"),
+          () => VersionedState.write(c.join(cOld, Seq(idCol), "left_anti"),
+            s"$seg/cins", batchRows),
+          () => VersionedState.write(cOld.join(c, Seq(idCol), "left_anti").select(idCol),
+            s"$seg/cdel", batchRows),
           () => {
             val changedQ = eOld.exceptAll(e).select("query_id")
               .unionByName(e.exceptAll(eOld).select("query_id"))
               .distinct().localCheckpoint(false)
-            e.join(changedQ, Seq("query_id"), "left_semi")
-              .write.mode("overwrite").parquet(s"$seg/eup")
+            VersionedState.write(e.join(changedQ, Seq("query_id"), "left_semi"),
+              s"$seg/eup", batchRows)
           },
-          () => removedQueryIds.toSeq.sorted.toDF("query_id")
-            .write.mode("overwrite").parquet(s"$seg/edel"))
+          () => VersionedState.write(removedQueryIds.toSeq.sorted.toDF("query_id"),
+            s"$seg/edel", batchRows))
       }
       state.writePointer(newV, batchId)
       hot = Some((newV, c, e))

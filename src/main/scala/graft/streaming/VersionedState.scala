@@ -3,6 +3,7 @@ package graft.streaming
 import java.io.File
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import org.apache.spark.sql.DataFrame
 
 /** The on-disk version layout of a maintained stream's state — one
   * upsert log with a snapshot cadence, the state-store design of
@@ -21,7 +22,10 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * Retention keeps what v=N-1 needs (the replay fallback of a crash
   * before the pointer write): its base snapshot and the segments
   * after it. The owner decides what goes into each directory and how
-  * recovery replays it. */
+  * recovery replays it; every state directory is written through
+  * `VersionedState.write`, which sizes its files by the rows the owner
+  * already counted (`RowsPerFile` a file), not by how many blocks the
+  * owner's hot frame has gathered. */
 private[graft] final class VersionedState(stateDir: String, owner: String,
                                           kinds: Seq[String],
                                           compactEvery: Int) {
@@ -89,6 +93,28 @@ private[graft] final class VersionedState(stateDir: String, owner: String,
 }
 
 private[graft] object VersionedState {
+
+  /** Rows one state file holds. The widest state row is a document:
+    * about 300 B of text plus a 64-dim double embedding (512 B), so
+    * about 0.8 KB; 2^17 rows of it are about 105 MB, near Spark's
+    * 128 MB `spark.sql.files.maxPartitionBytes`, so a recovery read
+    * still splits one file per task. */
+  private[graft] val RowsPerFile: Int = 1 << 17
+
+  /** Files a state write of `rows` rows emits: `ceil(rows /
+    * RowsPerFile)`, and at least one, so an empty state still has a
+    * schema to read. */
+  def filesFor(rows: Long): Int =
+    math.max(1L, (rows + RowsPerFile - 1) / RowsPerFile).toInt
+
+  /** Overwrites `dir` with `frame` as parquet in `filesFor(rows)`
+    * files. `rows` is a count the owner already holds on the driver,
+    * so sizing adds no job. The hot frames are unions that gain blocks
+    * with every batch; the coalesce merges those blocks with no
+    * shuffle (it never raises a partition count), so the file count
+    * follows the state's size, not the number of batches absorbed. */
+  def write(frame: DataFrame, dir: String, rows: Long): Unit =
+    frame.coalesce(filesFor(rows)).write.mode("overwrite").parquet(dir)
 
   /** Deletes `path` and everything under it; a missing path is a no-op. */
   def deleteRecursively(path: String): Unit = {

@@ -131,7 +131,7 @@ class SourcesSpec extends AnyFunSuite {
   test("ensemble bundle round-trip: loaded bundle scores identically") {
     val dir = tmp()
     val fitted = graft.ml.Ensemble.fit(spark, "/root/testdata/sf0.001")
-    Artifacts.saveEnsemble(fitted, s"$dir/bundle")
+    Artifacts.saveEnsemble(spark, fitted, s"$dir/bundle")
     val loaded = Artifacts.loadEnsemble(spark, s"$dir/bundle")
     assert(loaded.cfg == fitted.cfg && loaded.aeThreshold == fitted.aeThreshold)
     val ev = Tables.events(spark, "/root/testdata/sf0.001")

@@ -4,7 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.streaming.{ScoreStream, SessionStream, StatefulProfiles}
+import graft.streaming.{ScoreStream, SessionStream, StatefulProfiles, VersionedState}
 
 /** MemoryStream micro-batches through the streaming surface
   * (SURVEY §5.2.5): scoring parity with batch, cross-batch dedup,
@@ -928,6 +928,44 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(graphKey).toSeq.sorted
   }
 
+  /** Part files in every committed state directory of the maintained
+    * state under `state` (a corpus, or the graph under it): each
+    * snapshot `<kind>/v=N` and each sub-directory of a segment
+    * `log/v=N`, keyed by path. */
+  private def stateParts(state: String, kinds: Seq[String]): Map[String, Int] = {
+    def ls(d: java.io.File) = Option(d.listFiles()).getOrElse(Array.empty[java.io.File]).toSeq
+    def version(d: java.io.File) = d.getName.stripPrefix("v=").toInt
+    val committed = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"$state/POINTER"))).trim.split(" ")(0).toInt
+    val snapshots = kinds.flatMap(k => ls(new java.io.File(s"$state/$k")))
+      .filter(version(_) <= committed)
+    val segments = ls(new java.io.File(s"$state/log"))
+      .filter(version(_) <= committed).flatMap(ls).filter(_.isDirectory)
+    (snapshots ++ segments).map(d => d.getPath -> ls(d).count(f =>
+      f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))).toMap
+  }
+
+  /** Every committed state directory of a maintained corpus and its
+    * graph holds one part file (sf0.001 state is far below
+    * `VersionedState.RowsPerFile`); returns the directories checked. */
+  private def assertOneFileEach(state: String): Set[String] = {
+    val parts = stateParts(state, Seq("docs", "pairs", "kept")) ++
+      stateParts(s"$state/graph", Seq("corpus", "edges"))
+    assert(parts.nonEmpty && parts.values.forall(_ == 1),
+      s"state directories not written as one file each: ${parts.filter(_._2 != 1)}")
+    parts.keySet
+  }
+
+  test("VersionedState sizes a state write at one file per RowsPerFile rows") {
+    assert(VersionedState.filesFor(0L) == 1)
+    assert(VersionedState.filesFor(VersionedState.RowsPerFile.toLong) == 1)
+    assert(VersionedState.filesFor(VersionedState.RowsPerFile + 1L) == 2)
+    // a frame of many blocks still writes the one file its rows call for
+    val dir = java.nio.file.Files.createTempDirectory("graft_vswrite").toString
+    VersionedState.write(spark.range(100).repartition(8).toDF(), s"$dir/s", 100L)
+    assert(new java.io.File(s"$dir/s").list().count(_.startsWith("part-")) == 1)
+  }
+
   for ((provName, prov) <- stateProviders)
   test(s"maintained graph [$provName]: kill mid-stream, restart recovers " +
        "the standing state; drained graph equals the batch rebuild") {
@@ -1334,6 +1372,8 @@ class StreamingSpec extends AnyFunSuite {
     }
     assert(entries("log").isEmpty && entries("graph/log").isEmpty,
       "cadence 1 wrote a delta segment")
+    // each snapshot is written as one file, not one per batch absorbed
+    assert(assertOneFileEach(state).size == 5 * 2)
     val docs = Tables.documents(spark, sfd)
     val pairsB = Dedup.minhashPairs(docs, "doc_id", "text",
       numHashes = 16, bands = 8, threshold = 0.1, portableMd5 = true)
@@ -1391,6 +1431,12 @@ class StreamingSpec extends AnyFunSuite {
     assert(!new java.io.File(s"$state/docs/v=1").exists &&
            !new java.io.File(s"$state/log/v=2").exists,
       "compaction retention left the pre-window chain behind")
+    // every snapshot and every segment sub-directory is one file, for
+    // the corpus and its graph alike
+    val checked = assertOneFileEach(state)
+    assert(Seq(s"$state/docs/v=7", s"$state/log/v=8/kout",
+               s"$state/graph/edges/v=7", s"$state/graph/log/v=8/edel")
+      .forall(checked.contains), s"state layout changed: $checked")
     // drained state equals the batch pipeline on the full corpus
     val docs = Tables.documents(spark, sfd)
     val pairsB = Dedup.minhashPairs(docs, "doc_id", "text",
